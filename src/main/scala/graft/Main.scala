@@ -10,9 +10,20 @@ import graft.etl.{ConfigLoader, Enrich, Pipeline}
   *       [--pages fixtures/pages] [--out /tmp/out]
   *
   * Fail-fast guards mirror the reference: exit 1 on missing/invalid
-  * config or empty extract.
+  * config (a non-positive or non-integer `SPARK_GRAFT_CPUS` included)
+  * or empty extract.
   */
 object Main {
+
+  /** `SPARK_GRAFT_CPUS` (default 8), used for both `local[n]` and the
+    * shuffle partitions, so it must be a positive int: `*` is a valid
+    * master but not a partition count. */
+  def parseCpus(env: Option[String]): Either[String, Int] = env match {
+    case None => Right(8)
+    case Some(v) => v.trim.toIntOption.filter(_ > 0)
+      .toRight(s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'")
+  }
+
   def main(args: Array[String]): Unit = {
     val opts = args.sliding(2, 2).collect { case Array(k, v) => k -> v }.toMap
     val configPath = opts.getOrElse("--config", {
@@ -24,9 +35,13 @@ object Main {
       catch {
         case e: Exception => System.err.println(s"config error: ${e.getMessage}"); sys.exit(1)
       }
+    val cpus = parseCpus(sys.env.get("SPARK_GRAFT_CPUS")) match {
+      case Right(n) => n
+      case Left(msg) => System.err.println(s"config error: $msg"); sys.exit(1)
+    }
     val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .withExtensions(new GraftExtensions)

@@ -1,7 +1,7 @@
 package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.core.{JsonFactory, JsonParser, JsonToken}
 
 /** Injectable page-fetch seam for the paginated studies extract.
   *
@@ -64,22 +64,59 @@ final class FilePageFetcher(dir: String, first: String = "page_1.json") extends 
 
 object PageFetcher {
 
-  // Jackson ships on the Spark classpath; driver-side, one tiny doc at a
-  // time — not a per-row hot path.
-  private val mapper = new ObjectMapper()
+  // Jackson ships on the Spark classpath; driver-side, one page at a time
+  // — not a per-row hot path.
+  private[graft] val json = new JsonFactory()
+
+  /** What a page-chain walk needs from one page: the token of the next
+    * page and how many study objects the page holds. */
+  final case class PageInfo(token: Option[String], studies: Long)
+
+  /** The one token rule of every page-chain walk, read with a streaming
+    * parser so no page is built as a tree: each study is counted and
+    * skipped with `skipChildren()`. `nextPageToken` continues the chain
+    * only when it is a non-empty string; absent, empty (`""`), null or
+    * non-string ends it, like the reference's `if not next_page_token`
+    * break (`etl.py:147-150`). Field order does not matter; a repeated
+    * field keeps its last value. None = the document is not a JSON
+    * object; malformed JSON throws the parser's IOException. Closes `in`. */
+  private[graft] def readPage(in: JsonParser): Option[PageInfo] =
+    try {
+      if (in.nextToken() != JsonToken.START_OBJECT) None
+      else {
+        var token: Option[String] = None
+        var studies = 0L
+        while (in.nextToken() == JsonToken.FIELD_NAME) {
+          val field = in.currentName()
+          val value = in.nextToken()
+          field match {
+            case "nextPageToken" =>
+              token = if (value == JsonToken.VALUE_STRING) Some(in.getText).filter(_.nonEmpty) else None
+              in.skipChildren()
+            case "studies" =>
+              studies = 0L
+              if (value == JsonToken.START_ARRAY)
+                while (in.nextToken() != JsonToken.END_ARRAY) {
+                  if (in.currentToken() == JsonToken.START_OBJECT) studies += 1
+                  in.skipChildren()
+                }
+              else in.skipChildren()
+            case _ => in.skipChildren()
+          }
+        }
+        Some(PageInfo(token, studies))
+      }
+    } finally in.close()
 
   /** Token parse with failure distinguished from absence: Left = the
-    * body is not JSON at all (protocol failure — e.g. an HTML error page
-    * behind a 200), Right(None) = a well-formed final page, Right(token)
-    * = more pages. The distinction matters: a malformed body must abort
-    * the whole extract (partial results are discarded, etl.py:124-127),
-    * not silently terminate the chain with garbage kept. */
+    * body is not a JSON object (protocol failure — e.g. an HTML error
+    * page behind a 200), Right(None) = a well-formed final page,
+    * Right(token) = more pages. The distinction matters: a malformed
+    * body must abort the whole extract (partial results are discarded,
+    * etl.py:124-127), not silently terminate the chain with garbage kept. */
   private[etl] def parseToken(body: String): Either[Unit, Option[String]] =
-    try {
-      val node = mapper.readTree(body)
-      if (node == null || !node.isContainerNode) Left(())
-      else Right(Option(node.get("nextPageToken")).map(_.asText()).filter(_.nonEmpty))
-    } catch { case _: java.io.IOException => Left(()) }
+    try readPage(json.createParser(body)).map(_.token).toRight(())
+    catch { case _: java.io.IOException => Left(()) }
 
   /** `nextPageToken` of a page body, if present and non-empty. */
   def nextToken(body: String): Option[String] =

@@ -19,10 +19,14 @@ object Pipeline {
       outputPath: Option[String] = None)
 
   /** Run extract→transform→enrich; write CSV if configured; return the
-    * enriched frame (fail-fast on empty extract like etl.py:493-495). */
+    * enriched frame (fail-fast on empty extract like etl.py:493-495).
+    * The extract runs one Spark job: the page scan's schema inference. */
   def run(spark: SparkSession, cfg: Config): DataFrame = {
-    val raw = StudiesSource.readPaged(spark, cfg.pagesDir, cfg.firstPage, cfg.maxPages)
-    require(!raw.isEmpty, "extract produced no studies") // etl.py:493-495
+    val pages = StudiesSource.walk(cfg.pagesDir, cfg.firstPage, cfg.maxPages,
+      spark.sessionState.newHadoopConf())
+    // etl.py:493-495, checked on the walked count: no Spark job
+    require(pages.studies > 0, "extract produced no studies")
+    val raw = StudiesSource.scan(spark, pages)
     val filtered =
       if (cfg.essieTerms.nonEmpty) raw.filter(Essie.compileAll(cfg.essieTerms)) else raw
     val flat = Flatten(filtered)

@@ -12,6 +12,7 @@ import org.apache.spark.sql.sources.{EqualTo, Filter, IsNotNull, StringStartsWit
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import graft.etl.PageFetcher
 
 /** DataSource V2 batch source for paginated studies-page documents
   * (SURVEY.md O2/O3 as a first-class Spark source).
@@ -48,9 +49,10 @@ object StudiesDataSource {
     "start_year").map(StructField(_, StringType, nullable = false)))
 
   /** Resolve the page chain (nextPageToken = next file name), capped at
-    * the reference's 100-page guard (etl.py:155-158). */
+    * the reference's 100-page guard (etl.py:155-158). Tokens follow the
+    * extract's rule ([[graft.etl.PageFetcher.readPage]]); a token naming a
+    * file not yet present ends the chain (see the micro-batch stream). */
   def resolvePages(dir: String, first: String = "page_1.json", maxPages: Int = 100): Seq[String] = {
-    val mapper = new ObjectMapper()
     var next: Option[String] = Some(first)
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
     while (next.isDefined && out.size < maxPages) {
@@ -58,8 +60,8 @@ object StudiesDataSource {
       if (!Files.exists(p)) { next = None }
       else {
         out += p.toString
-        val doc = mapper.readTree(Files.readAllBytes(p))
-        next = Option(doc.get("nextPageToken")).map(_.asText())
+        next = PageFetcher.readPage(PageFetcher.json.createParser(p.toFile))
+          .getOrElse(throw new java.io.IOException(s"page $p is not a JSON object")).token
       }
     }
     out.toSeq

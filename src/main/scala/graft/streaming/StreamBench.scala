@@ -57,44 +57,46 @@ object StreamBench {
       .getOrElse(throw new IllegalArgumentException(s"unknown stream kernel $name"))
     val dir = java.nio.file.Files.createTempDirectory(s"stream_bench_$name").toString
     var cached: Option[DataFrame] = None // released after the waves drain
-    val waves: Seq[DataFrame] = name match {
-      case "runs" | "acf" =>
-        val orders = graft.Tables.orders(spark, sfDir)
-        (0 until Waves).map(w => orders.filter(pmod(col("o_orderkey"), lit(Waves)) === w))
-      case "watermark" =>
-        val ev = graft.Tables.events(spark, sfDir)
-        // Cache the derived arrival relation for the wave build: the
-        // md5 jitter pass over every event otherwise re-runs 5× (the
-        // bounds agg + one full re-derivation per wave filter) — wave
-        // CONTENT is unchanged, the line just stops re-billing fixture
-        // derivation 4 extra times per rep. Recomputed fresh inside
-        // every timed invocation (no cross-run reuse); Bench's
-        // clearCache() after the rep releases it.
-        val arr = graft.queries.ExtraQueries10.wmArrivals(ev)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        cached = Some(arr)
-        // 1-row driver protocol: longs only (java.sql.Date decoding
-        // would need --add-opens sun.util.calendar, absent in the
-        // raw-java Bench JVM)
-        val b = arr.agg(min(col("arrival_seq")).cast("long"),
-          max(col("arrival_seq")).cast("long")).collect()(0)
-        val (lo, hi) = (b.getLong(0), b.getLong(1))
-        val span = (hi - lo) / Waves + 1
-        (0 until Waves).map { w =>
-          arr.filter(col("arrival_seq") >= lo + w * span &&
-            col("arrival_seq") < lo + (w + 1) * span)
-            .drop("arrival_seq")
-        }
-      case _ =>
-        val ev = graft.Tables.events(spark, sfDir)
-        val d0 = ev.agg(min(to_date(col("ts"))).cast("string")).collect()(0).getString(0)
-        val week = floor(datediff(to_date(col("ts")), to_date(lit(d0))) / 8)
-        (0 until Waves).map(w => ev.filter(week === w))
-    }
-    waves.zipWithIndex.foreach { case (batch, w) => step(batch, dir, w.toLong) }
-    // r12 ADVICE: release the wave-prep cache here rather than relying on
-    // the caller's clearCache() — other entry points don't clear caches.
-    cached.foreach(_.unpersist(blocking = false))
+    try {
+      val waves: Seq[DataFrame] = name match {
+        case "runs" | "acf" =>
+          val orders = graft.Tables.orders(spark, sfDir)
+          (0 until Waves).map(w => orders.filter(pmod(col("o_orderkey"), lit(Waves)) === w))
+        case "watermark" =>
+          val ev = graft.Tables.events(spark, sfDir)
+          // Cache the derived arrival relation for the wave build: the
+          // md5 jitter pass over every event otherwise re-runs 5× (the
+          // bounds agg + one full re-derivation per wave filter) — wave
+          // CONTENT is unchanged, the line just stops re-billing fixture
+          // derivation 4 extra times per rep. Recomputed fresh inside
+          // every timed invocation (no cross-run reuse); the finally
+          // below releases it.
+          val arr = graft.queries.ExtraQueries10.wmArrivals(ev)
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          cached = Some(arr)
+          // 1-row driver protocol: longs only (java.sql.Date decoding
+          // would need --add-opens sun.util.calendar, absent in the
+          // raw-java Bench JVM)
+          val b = arr.agg(min(col("arrival_seq")).cast("long"),
+            max(col("arrival_seq")).cast("long")).collect()(0)
+          val (lo, hi) = (b.getLong(0), b.getLong(1))
+          val span = (hi - lo) / Waves + 1
+          (0 until Waves).map { w =>
+            arr.filter(col("arrival_seq") >= lo + w * span &&
+              col("arrival_seq") < lo + (w + 1) * span)
+              .drop("arrival_seq")
+          }
+        case _ =>
+          val ev = graft.Tables.events(spark, sfDir)
+          val d0 = ev.agg(min(to_date(col("ts"))).cast("string")).collect()(0).getString(0)
+          val week = floor(datediff(to_date(col("ts")), to_date(lit(d0))) / 8)
+          (0 until Waves).map(w => ev.filter(week === w))
+      }
+      waves.zipWithIndex.foreach { case (batch, w) => step(batch, dir, w.toLong) }
+      // Release the wave-prep cache here, also when a wave fails, rather
+      // than relying on the caller's clearCache() — other entry points
+      // don't clear caches.
+    } finally cached.foreach(_.unpersist(blocking = false))
     report(spark, dir).write.format("noop").mode("overwrite").save()
     stateBytes(dir)
   }

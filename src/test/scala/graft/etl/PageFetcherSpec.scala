@@ -30,6 +30,15 @@ class PageFetcherSpec extends AnyFunSuite {
     assert(PageFetcher.nextToken(pages.last).isEmpty)
   }
 
+  test("only a non-empty string token continues the chain; a non-object body aborts") {
+    assert(PageFetcher.parseToken("""{"nextPageToken": ""}""") == Right(None))
+    assert(PageFetcher.parseToken("""{"nextPageToken": null}""") == Right(None))
+    assert(PageFetcher.parseToken("""{"nextPageToken": 7}""") == Right(None))
+    assert(PageFetcher.parseToken("""{"nextPageToken": "t2", "studies": []}""") == Right(Some("t2")))
+    assert(PageFetcher.parseToken("""[{"nextPageToken": "t2"}]""").isLeft)
+    assert(PageFetcher.parseToken("<html>502</html>").isLeft)
+  }
+
   test("non-200 mid-chain aborts the WHOLE extract to None (no partial result)") {
     val f = new StubFetcher(5, failAt = 3)
     assert(PageFetcher.fetchPages(f).isEmpty)

@@ -1,0 +1,133 @@
+package graft.etl
+
+import java.nio.file.{Files, Path}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkTestSession
+
+/** The driver-side page walk (etl.py:115-158): no Spark job for the token
+  * chain, one for the page scan, the reference's token rule and its
+  * abort-the-extract contract. */
+class StudiesSourceSpec extends AnyFunSuite {
+  private lazy val spark = SparkTestSession.spark
+  private val pages = "fixtures/pages" // relative to the project root, the tests' working dir
+
+  /** `body`'s result and the Spark jobs it started on this thread (tagged
+    * by a local property, so jobs of other threads are not counted). */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val key = "graft.test.jobs"
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(key) == tag) jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(key, tag)
+    try {
+      val r = body
+      ListenerBusDrain(sc)
+      (r, jobs.get)
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** A temp page chain: file name -> body. */
+  private def chain(files: (String, String)*): String = {
+    val dir = Files.createTempDirectory("pagechain")
+    files.foreach { case (name, body) => Files.writeString(dir.resolve(name), body) }
+    dir.toString
+  }
+
+  private def study(id: String) =
+    s"""{"protocolSection": {"identificationModule": {"nctId": "$id"}}}"""
+
+  private def ids(dir: String): Seq[String] =
+    StudiesSource.readPaged(spark, dir)
+      .selectExpr("protocolSection.identificationModule.nctId").collect().map(_.getString(0)).toSeq.sorted
+
+  test("walk follows the fixture chain with no Spark job") {
+    val (w, jobs) = jobsOf(StudiesSource.walk(pages))
+    assert(jobs == 0)
+    assert(w.files.map(Path.of(_).getFileName.toString) == Seq("page_1.json", "page_2.json", "page_3.json"))
+    assert(w.studies == 14)
+  }
+
+  test("readPaged runs exactly one Spark job, the page scan's schema inference") {
+    val (df, jobs) = jobsOf(StudiesSource.readPaged(spark, pages))
+    assert(jobs == 1)
+    assert(df.inputFiles.length == 3)
+  }
+
+  test("Pipeline.run up to the CSV write adds no job for the extract or its fail-fast") {
+    val (_, scanJobs) = jobsOf(StudiesSource.readPaged(spark, pages))
+    val (_, runJobs) = jobsOf(Pipeline.run(spark, Pipeline.Config(
+      pagesDir = pages, essieTerms = Essie.referenceConfigTerms,
+      gate = Enrich.GateConfig(maxRows = Some(100L), tuningSet = None))))
+    assert(runJobs == scanJobs)
+    val (_, failJobs) = jobsOf(intercept[IllegalArgumentException] {
+      Pipeline.run(spark, Pipeline.Config(pagesDir = pages, firstPage = "page_empty.json"))
+    })
+    assert(failJobs == 0)
+  }
+
+  test("walked study count equals the scanned row count") {
+    for ((first, maxPages) <- Seq(("page_1.json", 100), ("page_1.json", 1), ("page_empty.json", 100))) {
+      val walked = StudiesSource.walk(pages, first, maxPages).studies
+      assert(walked == StudiesSource.readPaged(spark, pages, first, maxPages).count(), s"$first/$maxPages")
+    }
+  }
+
+  test("an empty, null or non-string token ends the chain") {
+    for (last <- Seq("\"\"", "null", "7", "{}")) {
+      val dir = chain(
+        "page_1.json" -> s"""{"studies": [${study("A")}], "nextPageToken": "page_2.json"}""",
+        "page_2.json" -> s"""{"studies": [${study("B")}], "nextPageToken": $last}""",
+        // read twice if the directory itself were taken for a page
+        "other.json" -> s"""{"studies": [${study("C")}]}""")
+      val w = StudiesSource.walk(dir)
+      assert(w.files.size == 2 && w.studies == 2, last)
+      assert(ids(dir) == Seq("A", "B"), last)
+      assert(graft.sources.StudiesDataSource.resolvePages(dir).size == 2, last)
+    }
+  }
+
+  test("nextPageToken before studies reads the same as after") {
+    def pageDoc(ids: Seq[String], token: Option[String], tokenFirst: Boolean): String = {
+      val s = s""""studies": [${ids.map(study).mkString(", ")}]"""
+      val t = token.map(x => s""""nextPageToken": "$x"""").toSeq
+      (if (tokenFirst) t :+ s else s +: t).mkString("{", ", ", "}")
+    }
+    def make(tokenFirst: Boolean) = chain(
+      "page_1.json" -> pageDoc(Seq("A", "B"), Some("page_2.json"), tokenFirst),
+      "page_2.json" -> pageDoc(Seq("C"), None, tokenFirst))
+    val (before, after) = (make(tokenFirst = true), make(tokenFirst = false))
+    assert(StudiesSource.walk(before).studies == 3)
+    assert(StudiesSource.walk(before).studies == StudiesSource.walk(after).studies)
+    assert(ids(before) == Seq("A", "B", "C"))
+    assert(ids(before) == ids(after))
+  }
+
+  test("a page that is not a JSON object aborts the extract, naming the page") {
+    for (bad <- Seq("<html>502 Bad Gateway</html>", """[{"studies": []}]""",
+                    """{"studies": [""")) {
+      val dir = chain(
+        "page_1.json" -> s"""{"studies": [${study("A")}], "nextPageToken": "page_2.json"}""",
+        "page_2.json" -> bad)
+      val e = intercept[java.io.IOException](StudiesSource.readPaged(spark, dir))
+      assert(e.getMessage.contains("page_2.json"), bad)
+      intercept[java.io.IOException](Pipeline.run(spark, Pipeline.Config(pagesDir = dir)))
+    }
+  }
+
+  test("a missing page aborts the extract, naming the page") {
+    val dir = chain("page_1.json" -> s"""{"studies": [${study("A")}], "nextPageToken": "gone.json"}""")
+    val e = intercept[java.io.IOException](StudiesSource.walk(dir))
+    assert(e.getMessage.contains("gone.json"))
+  }
+}

@@ -41,4 +41,13 @@ class StreamBenchSpec extends AnyFunSuite {
       assert(bytes > 0, s"$k: state bytes")
     }
   }
+
+  test("a drive that fails after its wave-prep persist still releases the cache") {
+    val dir = java.nio.file.Files.createTempDirectory("stream_bench_empty").toString
+    graft.Tables.events(spark, sf).limit(0).write.parquet(s"$dir/events.parquet")
+    val before = spark.sparkContext.getPersistentRDDs.size
+    // no events, no arrival bounds: the watermark wave prep fails after the persist
+    intercept[Exception](StreamBench.driveOne(spark, dir, "watermark"))
+    assert(spark.sparkContext.getPersistentRDDs.size == before)
+  }
 }
