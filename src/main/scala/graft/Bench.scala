@@ -1,16 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark: every registered query at SPARK_GRAFT_SF_DIR,
   * one JSON line on stdout (driver contract).
   *
   * Timing uses the `noop` sink so the full plan (including projections a
   * `count()` would prune) executes; a warm-up action runs first so JVM/
-  * session startup isn't billed to the first query. Session config
-  * mirrors the scale posture: AQE on (runtime re-planning, skew-join
-  * handling, partition coalescing), shuffle partitions = cores for local
-  * mode.
+  * session startup isn't billed to the first query. The session is
+  * [[GraftSession]]'s, the same one Explain dumps plans from.
   *
   * Protocol (r6 verdict items 1b/4):
   *  - reps >= 3 always; the FIRST rep of each query is excluded from the
@@ -36,17 +32,7 @@ object Bench {
     // JVM left on disk (r10 verdict item 5's d19 noise, inverted).
     System.setProperty("graft.pool.rebuild", "1")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start()
     spark.range(1000000).selectExpr("sum(id)").collect() // JVM/codegen warm-up
     // CollationAwareUTF8String's static init builds the ICU Unicode case
     // tables (~1.3 s, JFR-profiled) the first time any lower/upper/initcap

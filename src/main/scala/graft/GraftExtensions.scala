@@ -9,9 +9,9 @@ import graft.plans.{BandJoinRewriteRule, GraftStrategy, TopKRewriteRule}
 /** Session extensions: registers the engine's native functions for SQL
   * use, plus the whole-operator extension path — the top-k-per-group
   * optimizer rewrite ([[graft.plans.TopKRewriteRule]]) and its physical
-  * strategy ([[graft.plans.GraftStrategy]]). Install with
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.GraftExtensions`.
+  * strategy ([[graft.plans.GraftStrategy]]). [[GraftSession.builder]]
+  * installs it for every entry point and the tests; an external session
+  * can use `spark.sql.extensions=graft.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {

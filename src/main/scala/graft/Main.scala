@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.etl.{ConfigLoader, Enrich, Pipeline}
 
 /** CLI entry (SURVEY.md O21; `/root/reference/etl.py:472-518`): run the
@@ -14,16 +13,6 @@ import graft.etl.{ConfigLoader, Enrich, Pipeline}
   * or empty extract.
   */
 object Main {
-
-  /** `SPARK_GRAFT_CPUS` (default 8), used for both `local[n]` and the
-    * shuffle partitions, so it must be a positive int: `*` is a valid
-    * master but not a partition count. */
-  def parseCpus(env: Option[String]): Either[String, Int] = env match {
-    case None => Right(8)
-    case Some(v) => v.trim.toIntOption.filter(_ > 0)
-      .toRight(s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'")
-  }
-
   def main(args: Array[String]): Unit = {
     val opts = args.sliding(2, 2).collect { case Array(k, v) => k -> v }.toMap
     val configPath = opts.getOrElse("--config", {
@@ -35,18 +24,7 @@ object Main {
       catch {
         case e: Exception => System.err.println(s"config error: ${e.getMessage}"); sys.exit(1)
       }
-    val cpus = parseCpus(sys.env.get("SPARK_GRAFT_CPUS")) match {
-      case Right(n) => n
-      case Left(msg) => System.err.println(s"config error: $msg"); sys.exit(1)
-    }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start()
     try {
       val (df, obs) = Enrich.withMetrics(
         Pipeline.run(spark, Pipeline.Config(

@@ -173,16 +173,7 @@ object SkewProbe {
       else if (annMode) 20000L
       else if (pipelineMode) 20000L
       else 50000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start()
     if (naiveControl || annControl)
       // the control must reproduce the AT-SCALE plan shape: a corpus
       // whose shingle relation cannot broadcast, so the shared-shingle

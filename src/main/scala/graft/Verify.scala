@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DecimalType, DoubleType, StructField, TimestampNTZType, TimestampType}
 import java.nio.file.{Files, Paths}
@@ -40,20 +40,12 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // Optional 3rd+ args: restrict the dump to the named queries (dev loop).
     val only: Set[String] = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Without this, window-derived timestamps dump as legacy INT96
-      // (read back as nanos) while the oracle side is micros — the
-      // values agree but a physical/epoch-level hash diverges.
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    val spark = GraftSession.builder(GraftSession.cpus())
       // Hardening knob: SPARK_GRAFT_ANSI=true runs the whole dump in
       // ANSI mode, proving no query relies on silent overflow/coercion.
+      // Set on the builder, not the running session, so the loop
+      // kernels' private-conf clones (LoopSession) inherit it too.
       .config("spark.sql.ansi.enabled", sys.env.getOrElse("SPARK_GRAFT_ANSI", "false"))
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

@@ -263,6 +263,9 @@ object ExtraQueries31 {
   // per-k distinct-inside-the-doc grain and the per-k aggregates are
   // unchanged (grouping by (k, sk) then k computes exactly the old
   // per-k global aggregates, since the tag partitions the key space).
+  // The per-k aggregates right-join onto the literal k list so a k no
+  // doc is long enough for still emits its row (n_types 0, null sums),
+  // as each of the oracle's per-k global aggregates does.
   private val d32: Fn = (s, d) => {
     val tagged = ShingleKs.map { k =>
       expr(
@@ -272,7 +275,7 @@ object ExtraQueries31 {
           s"h -> struct($k as k, h as sk)) " +
           "ELSE cast(array() as array<struct<k:int,sk:bigint>>) END")
     }
-    docs(s, d).select(split(col("text"), " ").as("sp"))
+    val perK = docs(s, d).select(split(col("text"), " ").as("sp"))
       .select(explode(concat(tagged: _*)).as("ks"))
       .select(col("ks.k").as("k"), col("ks.sk").as("sk"))
       .groupBy("k", "sk").agg(count(lit(1)).as("dn"))
@@ -281,6 +284,10 @@ object ExtraQueries31 {
         sum(col("dn")).cast(LongType).as("n_doc_shingles"),
         (sum((col("dn") * (col("dn") - 1)).cast(DecimalType(38, 0))) / 2)
           .cast(LongType).as("pair_bound"))
+    val ks = s.range(1).select(explode(array(ShingleKs.map(lit): _*)).as("k"))
+    perK.join(ks, Seq("k"), "right")
+      .select(col("k"), coalesce(col("n_types"), lit(0L)).as("n_types"),
+        col("n_doc_shingles"), col("pair_bound"))
       .orderBy("k")
   }
   private val d32Sql = {

@@ -40,8 +40,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * two-JVM determinism gate must keep re-deriving pools from scratch
   * (a cross-JVM flap hidden by a shared artifact is the r52 bug class),
   * and Bench's floors must keep measuring builds, not cache reads. The
-  * tools that pay the build repeatedly — QTime sf10 sweeps, SweepProbe,
-  * any multi-JVM driver — take the durable path by default.
+  * tools that pay the build repeatedly — QTime sf10 sweeps, any
+  * multi-JVM runner — take the durable path by default.
   *
   * Hash-safety: only exact-typed columns (strings/longs/exact decimals)
   * may ride through a pool — parquet round-trips them bitwise.

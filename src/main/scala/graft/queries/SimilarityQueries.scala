@@ -1093,16 +1093,12 @@ object SimilarityQueries {
     * sides — the scores are a deterministic total order, which is all
     * a data-selection centrality needs. Kept-node contract: nodes =
     * endpoints of the edge list; in the mirrored kNN graph every node
-    * has an out-edge, so nothing dangles by construction. */
-  private[graft] def pageRank(edgesIn: DataFrame, rounds: Int): DataFrame =
-    pageRank(edgesIn, rounds, disableAqeInLoop = true)
-
-  /** `disableAqeInLoop = false` exists ONLY for graft.tools.PrProbe's
-    * reference curve — production always pins AQE off in the loop for
-    * the measured reasons below.
+    * has an out-edge, so nothing dangles by construction.
     *
-    * Reference curve for regression triage (PrProbe, sf0.1, local[32],
-    * interleaved 3 reps, 2026-08; the s12 bench band is 8.2–13.1 s):
+    * AQE stays pinned off in the loop. Reference curve for regression
+    * triage (the PrProbe tool, removed after commit 2024ec5 and
+    * recoverable from it; sf0.1, local[32], interleaved 3 reps, 2026-08;
+    * the s12 bench band is 8.2–13.1 s):
     *   rounds=8 aqeLoop=off: 16.0 / 8.7 / 7.7 s   (median 8.7 — the
     *     shipped configuration; rep1 carries plan/codegen cold cost)
     *   rounds=8 aqeLoop=on : 35.7 / 50.6 / 30.5 s (median 35.7 — ~4×:
@@ -1116,8 +1112,7 @@ object SimilarityQueries {
     * A future s12 bench reading outside ~1.5× of the 8.7 s median with
     * THIS curve unchanged is machine noise; a reading that moves the
     * whole curve is a real plan regression. */
-  private[graft] def pageRank(edgesIn: DataFrame, rounds: Int,
-      disableAqeInLoop: Boolean): DataFrame = {
+  private[graft] def pageRank(edgesIn: DataFrame, rounds: Int): DataFrame = {
     val s = edgesIn.sparkSession
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val edges0 = edgesIn.select(col("a_id"), col("b_id")).persist(lvl)
@@ -1153,8 +1148,7 @@ object SimilarityQueries {
     val sessParts = s.conf.get("spark.sql.shuffle.partitions", "32")
     val loopParts = math.max(4L, math.min(sessParts.toLong, n / 20000L)).toString
     val ls = LoopSession.isolated(s,
-      (("spark.sql.shuffle.partitions" -> loopParts) +:
-        (if (disableAqeInLoop) Seq("spark.sql.adaptive.enabled" -> "false") else Nil)): _*)
+      "spark.sql.shuffle.partitions" -> loopParts, "spark.sql.adaptive.enabled" -> "false")
     val edgesL = LoopSession.rebind(ls, edges)
     val nodesL = LoopSession.rebind(ls, nodes)
     var ranks = nodesL.withColumn("r_fp", lit(PrScale / n))
@@ -1198,9 +1192,8 @@ object SimilarityQueries {
     * the centrality graded is the graph that ships. Fully oracled: the
     * integer fixed-point iteration unrolls into one generated CTE pair
     * per round on top of s10's oracle SQL as the edge relation. */
-  /** The registered s10 kNN edge list — exposed for graft.tools.PrProbe
-    * so the reference curve runs on exactly the graph s12 ships. */
-  private[graft] def s10Edges(s: SparkSession, d: String): DataFrame =
+  /** The registered s10 kNN edge list, the graph s12 ranks. */
+  private def s10Edges(s: SparkSession, d: String): DataFrame =
     s10(s, d).select("a_id", "b_id")
 
   private val s12: Fn = (s, d) => pageRank(s10Edges(s, d), PrRounds)

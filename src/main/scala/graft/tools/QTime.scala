@@ -1,21 +1,13 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 object QTime {
   def main(args: Array[String]): Unit = {
     if (args.length < 2) {
       System.err.println("usage: QTime <sfDir> <queryName> [queryName...]")
       sys.exit(2)
     }
-    // Core count honors SPARK_GRAFT_CPUS (default 32) so the same tool
-    // can measure the low-core vs high-core scaling slice at sf1/sf10
-    // (round-13 VERDICT item 4); default behavior unchanged.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // SPARK_GRAFT_CPUS sets the core count, so the same tool measures
+    // the low-core vs high-core scaling slice at sf1/sf10.
+    val spark = graft.GraftSession.start("ERROR")
     spark.range(1000000).selectExpr("sum(id)").collect()
     args.tail.foreach { q =>
       val t0 = System.nanoTime()

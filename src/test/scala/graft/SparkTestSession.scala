@@ -2,19 +2,14 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all suites (scale-realistic shuffle count
-  * is irrelevant at test size; 4 partitions keeps tests fast). */
+/** One shared local session for all suites: the shipped
+  * [[GraftSession.builder]] conf at 4 cores (never the environment's
+  * `SPARK_GRAFT_CPUS`), plus a private temp warehouse dir. */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
+    val s = GraftSession.builder(4)
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

@@ -130,6 +130,18 @@ class Batch30Spec extends AnyFunSuite {
       "the candidate-pair bound must collapse as k grows")
   }
 
+  test("d32: a corpus too short for the largest k still emits one row per k") {
+    val dir = java.nio.file.Files.createTempDirectory("d32_short").toString
+    import spark.implicits._
+    Seq((1L, "a b c d"), (2L, "a b c"), (3L, "a b"), (4L, "x"))
+      .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    val got = graft.SparkEntry.queries("d32_shingle_sweep")(spark, dir).collect()
+      .map(r => (0 to 3).map(i => if (r.isNullAt(i)) null else r.get(i)))
+    // the d32Sql oracle's rows on this corpus: k=2 "a b" x3, "b c" x2,
+    // "c d" x1; k=3 "a b c" x2, "b c d" x1; no doc has 5 tokens
+    assert(got.toSeq == Seq(Seq(2, 3L, 6L, 4L), Seq(3, 2L, 3L, 1L), Seq(5, 0L, null, null)))
+  }
+
   test("p38: weights replay via sqrt chains; dominance rises and diversity falls with tau") {
     val langs = graft.Tables.documents(spark, sf).select(col("lang"))
       .collect().map(_.getString(0)).groupBy(identity).view.mapValues(_.length.toLong).toMap

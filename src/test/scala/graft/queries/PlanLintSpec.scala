@@ -46,7 +46,8 @@ class PlanLintSpec extends AnyFunSuite {
   //    fixture, no corpus leaf at all (etl_enrich_gated — the
   //    reference's head-N-in-global-order gate, etl.py:355-364; the
   //    module documents enrichAll as the scale path).
-  // Entries (re-grounded against the r7 plans via graft.tools.WinProbe;
+  // Entries (re-grounded against the r7 plans via the WinProbe tool,
+  // removed after commit 2024ec5 in favour of this lint;
   // p05's rank window is PARTITIONED by shard and r66 is window-free
   // since the zipWithIndex rewrite — both dropped):
   //  - p04/p06 (mixtureCuts): grand-total window over the per-SOURCE

@@ -4,7 +4,8 @@
 # strict row order, ANSI mode, smoke, bench line.
 #
 # Usage: tools/gates.sh [quick|close]
-#   quick = sf0.01 both-modes + tests only (the inner dev loop)
+#   quick = sf0.01 both-modes + tests + benchmark checker tests only
+#           (the inner dev loop)
 #   close = full matrix PLUS the sf0.1 per-query bench (the committed
 #           bench_queries.json) and an all-registry coverage check —
 #           the ATOMIC round close (r7 verdict item 4): one invocation
@@ -92,6 +93,9 @@ python3 tools/sync_coverage.py /tmp/gates_sf001
 
 echo "== sbt test"
 sbt -batch test 2>&1 | grep -E 'Tests:|\*\*\* FAILED'
+
+echo "== benchmark checker tests (no Spark)"
+python3 -m unittest discover -s perfbench -p 'test_*.py' 2>&1 | tail -1
 
 if [ "${1:-full}" != "quick" ]; then
   echo "== sf0.001"
