@@ -8,6 +8,9 @@ import graft.etl.{ConfigLoader, Enrich, Pipeline}
   *   runMain graft.Main --config fixtures/config.yaml \
   *       [--pages fixtures/pages] [--out /tmp/out]
   *
+  * `--pages` defaults to `fixtures/pages` under the working directory
+  * (the project root under `sbt runMain`).
+  *
   * Fail-fast guards mirror the reference: exit 1 on missing/invalid
   * config (a non-positive or non-integer `SPARK_GRAFT_CPUS` included)
   * or empty extract.
@@ -28,7 +31,7 @@ object Main {
     try {
       val (df, obs) = Enrich.withMetrics(
         Pipeline.run(spark, Pipeline.Config(
-          pagesDir = opts.getOrElse("--pages", "/root/repo/fixtures/pages"),
+          pagesDir = opts.getOrElse("--pages", "fixtures/pages"),
           essieTerms = cfg.filterAdvanced,
           gate = cfg.gate,
           outputPath = opts.get("--out"))))

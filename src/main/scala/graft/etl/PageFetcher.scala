@@ -79,7 +79,10 @@ object PageFetcher {
     * non-string ends it, like the reference's `if not next_page_token`
     * break (`etl.py:147-150`). Field order does not matter; a repeated
     * field keeps its last value. None = the document is not a JSON
-    * object; malformed JSON throws the parser's IOException. Closes `in`. */
+    * object; malformed JSON throws the parser's IOException, and so does
+    * a `studies` element that is not an object (naming its index): the
+    * declared-schema scan would drop such a page without an error.
+    * Closes `in`. */
   private[graft] def readPage(in: JsonParser): Option[PageInfo] =
     try {
       if (in.nextToken() != JsonToken.START_OBJECT) None
@@ -97,7 +100,10 @@ object PageFetcher {
               studies = 0L
               if (value == JsonToken.START_ARRAY)
                 while (in.nextToken() != JsonToken.END_ARRAY) {
-                  if (in.currentToken() == JsonToken.START_OBJECT) studies += 1
+                  if (in.currentToken() != JsonToken.START_OBJECT)
+                    throw new java.io.IOException(
+                      s"studies[$studies] is not a JSON object (${in.currentToken()})")
+                  studies += 1
                   in.skipChildren()
                 }
               else in.skipChildren()

@@ -20,7 +20,14 @@ object Pipeline {
 
   /** Run extract→transform→enrich; write CSV if configured; return the
     * enriched frame (fail-fast on empty extract like etl.py:493-495).
-    * The extract runs one Spark job: the page scan's schema inference. */
+    * The extract runs no Spark job: the driver walks the chain and the
+    * scan reads a declared schema. Without a sink nothing runs. With one,
+    * the plan executes once: the CSV is written from a lazy local
+    * checkpoint of the enriched frame, so that write materializes its
+    * rows (at most 100 pages of them, `etl.py:155-158`), and the same
+    * frame is returned, so the caller's actions read those rows instead
+    * of parsing the pages again. The checkpoint's blocks are freed once
+    * the frame is unreachable. */
   def run(spark: SparkSession, cfg: Config): DataFrame = {
     val pages = StudiesSource.walk(cfg.pagesDir, cfg.firstPage, cfg.maxPages,
       spark.sessionState.newHadoopConf())
@@ -31,8 +38,10 @@ object Pipeline {
       if (cfg.essieTerms.nonEmpty) raw.filter(Essie.compileAll(cfg.essieTerms)) else raw
     val flat = Flatten(filtered)
     val enriched = Enrich.gated(flat, cfg.gate)
-    cfg.outputPath.foreach(p =>
-      CsvSink.write(enriched.drop("processed"), p, aiColumn = Some(cfg.gate.aiColumn)))
-    enriched
+    cfg.outputPath.fold(enriched) { p =>
+      val done = enriched.localCheckpoint(eager = false)
+      CsvSink.write(done.drop("processed"), p, aiColumn = Some(cfg.gate.aiColumn))
+      done
+    }
   }
 }

@@ -4,6 +4,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Sources for raw ClinicalTrials.gov-shaped study documents.
   *
@@ -17,9 +18,10 @@ import org.apache.spark.sql.functions._
   * Spark job and no page built as a tree. Spark parallelism starts once
   * the page set is known: all walked pages are read by a single
   * distributed `spark.read.json` over the file list (the "page union" of
-  * `etl.py:130-131` becomes one multi-file scan instead of N unions), so
-  * the extract costs one Spark job (that scan's schema inference) at any
-  * page count.
+  * `etl.py:130-131` becomes one multi-file scan instead of N unions)
+  * against the declared [[ReadSchema]], so the extract runs no Spark job
+  * at any page count and the pages are parsed only when the pipeline's
+  * plan executes, decoding just the leaves it uses.
   *
   * Offline stand-in: a page document is a file (any Hadoop path) and
   * `nextPageToken` holds the *name of the next page file*. A real HTTP
@@ -96,11 +98,31 @@ object StudiesSource {
     Walk(files.toSeq, studies)
   }
 
+  /** The page document as the paged extract reads it: exactly the study
+    * leaves [[Flatten]] and [[Essie.compile]] use, all strings but
+    * `phases` and `locations`. Declaring it skips schema inference (an
+    * eager full parse of every page), lets the parser decode only these
+    * leaves, and makes every filter resolve whichever optional leaves a
+    * chain happens to hold. A leaf of another JSON type reads as null
+    * (`'N/A'`) and its row is kept; a non-object study is rejected by
+    * the walk ([[PageFetcher.readPage]]). */
+  val ReadSchema: StructType = StructType.fromDDL(
+    """studies ARRAY<STRUCT<protocolSection: STRUCT<
+      |  identificationModule: STRUCT<nctId: STRING, briefTitle: STRING, officialTitle: STRING>,
+      |  statusModule: STRUCT<overallStatus: STRING, startDateStruct: STRUCT<date: STRING>>,
+      |  designModule: STRUCT<studyType: STRING, phases: ARRAY<STRING>>,
+      |  eligibilityModule: STRUCT<sex: STRING, eligibilityCriteria: STRING,
+      |                            minimumAge: STRING, maximumAge: STRING>,
+      |  descriptionModule: STRUCT<briefSummary: STRING, detailedDescription: STRING>,
+      |  contactsLocationsModule: STRUCT<locations: ARRAY<STRUCT<country: STRING>>>>>>""".stripMargin)
+
   /** One raw-study row per study of the walked pages: a single
-    * distributed scan, or no scan at all when the pages hold no study. */
+    * distributed scan against [[ReadSchema]] (no Spark job until the
+    * frame is used), or no scan at all when the pages hold no study. */
   def scan(spark: SparkSession, pages: Walk): DataFrame =
     if (pages.studies == 0) spark.emptyDataFrame
-    else explodeStudies(spark.read.option("multiLine", true).json(pages.files: _*))
+    else explodeStudies(
+      spark.read.schema(ReadSchema).option("multiLine", true).json(pages.files: _*))
 
   /** [[walk]] the chain, then [[scan]] every page in one distributed read. */
   def readPaged(spark: SparkSession, dir: String, first: String = "page_1.json",

@@ -60,8 +60,12 @@ object StudiesDataSource {
       if (!Files.exists(p)) { next = None }
       else {
         out += p.toString
-        next = PageFetcher.readPage(PageFetcher.json.createParser(p.toFile))
-          .getOrElse(throw new java.io.IOException(s"page $p is not a JSON object")).token
+        val page =
+          try PageFetcher.readPage(PageFetcher.json.createParser(p.toFile))
+          catch {
+            case e: java.io.IOException => throw new java.io.IOException(s"page $p: ${e.getMessage}", e)
+          }
+        next = page.getOrElse(throw new java.io.IOException(s"page $p is not a JSON object")).token
       }
     }
     out.toSeq
@@ -79,15 +83,16 @@ object StudiesDataSource {
     "detailed_description" -> Seq("protocolSection", "descriptionModule", "detailedDescription"),
     "criteria" -> Seq("protocolSection", "eligibilityModule", "eligibilityCriteria"))
 
-  /** Extract one flattened column value ('N/A' default; start_year is
-    * derived — etl.py:201). */
+  /** Extract one flattened column value ('N/A' default, a JSON `null`
+    * included, as Flatten over the paged scan; start_year is derived —
+    * etl.py:201). */
   private[sources] def extract(study: JsonNode, colName: String): String = colName match {
     case "start_year" =>
       val sd = extract(study, "start_date")
       if (sd != "N/A" && sd.contains("-")) sd.split("-")(0) else "N/A"
     case other =>
       leafPaths(other).foldLeft(Option(study)) {
-        (n, k) => n.flatMap(x => Option(x.get(k)))
+        (n, k) => n.flatMap(x => Option(x.get(k))).filterNot(_.isNull)
       }.map(_.asText()).getOrElse("N/A")
   }
 }

@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 
 /** The driver-side page walk (etl.py:115-158): no Spark job for the token
-  * chain, one for the page scan, the reference's token rule and its
-  * abort-the-extract contract. */
+  * chain or the declared-schema page scan, the reference's token rule and
+  * its abort-the-extract contract, and one execution of the pipeline's
+  * plan when it writes the CSV. */
 class StudiesSourceSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val pages = "fixtures/pages" // relative to the project root, the tests' working dir
@@ -58,18 +59,17 @@ class StudiesSourceSpec extends AnyFunSuite {
     assert(w.studies == 14)
   }
 
-  test("readPaged runs exactly one Spark job, the page scan's schema inference") {
+  test("readPaged runs no Spark job: the page scan reads a declared schema") {
     val (df, jobs) = jobsOf(StudiesSource.readPaged(spark, pages))
-    assert(jobs == 1)
+    assert(jobs == 0)
     assert(df.inputFiles.length == 3)
   }
 
   test("Pipeline.run up to the CSV write adds no job for the extract or its fail-fast") {
-    val (_, scanJobs) = jobsOf(StudiesSource.readPaged(spark, pages))
     val (_, runJobs) = jobsOf(Pipeline.run(spark, Pipeline.Config(
       pagesDir = pages, essieTerms = Essie.referenceConfigTerms,
       gate = Enrich.GateConfig(maxRows = Some(100L), tuningSet = None))))
-    assert(runJobs == scanJobs)
+    assert(runJobs == 0)
     val (_, failJobs) = jobsOf(intercept[IllegalArgumentException] {
       Pipeline.run(spark, Pipeline.Config(pagesDir = pages, firstPage = "page_empty.json"))
     })
@@ -129,5 +129,82 @@ class StudiesSourceSpec extends AnyFunSuite {
     val dir = chain("page_1.json" -> s"""{"studies": [${study("A")}], "nextPageToken": "gone.json"}""")
     val e = intercept[java.io.IOException](StudiesSource.walk(dir))
     assert(e.getMessage.contains("gone.json"))
+  }
+
+  test("every filter and the flatten resolve on a chain without the optional leaves") {
+    val dir = chain(
+      "page_1.json" -> s"""{"studies": [${study("A")}], "nextPageToken": "page_2.json"}""",
+      "page_2.json" ->
+        """{"studies": [{}, {"protocolSection": {"identificationModule": {"briefTitle": "Pregnancy outcomes"}}}]}""")
+    val raw = StudiesSource.readPaged(spark, dir)
+    val flat = Flatten(raw).collect().map(_.toSeq.map(_.toString)).sortBy(_.mkString("|")).toSeq
+    val na = Seq.fill(9)("N/A")
+    assert(flat == Seq(Seq("A", "N/A") ++ na, Seq("N/A", "N/A") ++ na, Seq("N/A", "Pregnancy outcomes") ++ na))
+    // every row lacks an age, so only the age terms (through MISSING) and
+    // the full-text search over the one title keep rows
+    val all = Seq("A", "N/A", "N/A")
+    val expected = Seq(Nil, Nil, Nil, Nil, all, all, Nil, Seq("N/A"))
+    for ((term, want) <- Essie.referenceConfigTerms.zip(expected)) {
+      val got = Flatten(raw.filter(Essie.compileAll(Seq(term))))
+        .select("nct_id").collect().map(_.getString(0)).toSeq.sorted
+      assert(got == want, term)
+    }
+  }
+
+  test("a study that is not an object aborts every walk; a mistyped leaf reads as null") {
+    for (bad <- Seq("5", "null", "\"NCT9\"", "[]")) {
+      val dir = chain("page_1.json" -> s"""{"studies": [${study("A")}, $bad]}""")
+      val e = intercept[java.io.IOException](StudiesSource.readPaged(spark, dir))
+      assert(e.getMessage.contains("page_1.json") && e.getMessage.contains("studies[1]"), bad)
+      assert(PageFetcher.fetchPages(new FilePageFetcher(dir)).isEmpty, bad)
+      val v2 = intercept[java.io.IOException](graft.sources.StudiesDataSource.resolvePages(dir))
+      assert(v2.getMessage.contains("page_1.json") && v2.getMessage.contains("studies[1]"), bad)
+    }
+    val dir = chain("page_1.json" -> s"""{"studies": [${study("A")}, {"protocolSection": {
+      "identificationModule": {"nctId": "B"}, "statusModule": {"startDateStruct": "2020-01-01"},
+      "designModule": {"studyType": "INTERVENTIONAL", "phases": "PHASE1"}}}]}""")
+    val raw = StudiesSource.readPaged(spark, dir)
+    val b = raw.filter("protocolSection.identificationModule.nctId = 'B'")
+    assert(raw.count() == 2)
+    assert(b.selectExpr("protocolSection.designModule.phases is null",
+      "protocolSection.designModule.studyType").head().toSeq == Seq(true, "INTERVENTIONAL"))
+    assert(Flatten(b).select("start_date").head().getString(0) == "N/A")
+    assert(raw.filter(Essie.compileAll(Seq("AREA[Phase]PHASE1"))).isEmpty)
+  }
+
+  /** The fixture chain copied to a temp dir, so a test can remove it. */
+  private def fixtureCopy(): Path = {
+    val dir = Files.createTempDirectory("pagecopy")
+    Files.list(Path.of(pages)).forEach(p => Files.copy(p, dir.resolve(p.getFileName)))
+    dir
+  }
+
+  test("with a sink, Pipeline.run's frame holds its rows: no page is read again") {
+    val dir = fixtureCopy()
+    val out = Files.createTempDirectory("pipeline_once").resolve("csv").toString
+    val (df, obs) = Enrich.withMetrics(Pipeline.run(spark, Pipeline.Config(
+      pagesDir = dir.toString, essieTerms = Essie.referenceConfigTerms,
+      gate = Enrich.GateConfig(maxRows = Some(2L), tuningSet = None), outputPath = Some(out))))
+    Files.list(dir).forEach(p => Files.delete(p))
+    assert(df.inputFiles.isEmpty)
+    assert(df.count() == 3) // would fail on the deleted pages if the plan ran again
+    assert(obs.get == Map("processed" -> 2L, "bypassed" -> 1L))
+    assert(spark.read.option("header", true).option("multiLine", true).csv(out).count() == 3)
+  }
+
+  test("the frame Pipeline.run returns has the CSV's row order: processed first, then nct_id") {
+    val out = Files.createTempDirectory("pipeline_order").resolve("csv").toString
+    val df = Pipeline.run(spark, Pipeline.Config(pagesDir = pages,
+      gate = Enrich.GateConfig(maxRows = Some(5L),
+        tuningSet = Some(Seq("NCT00000003", "NCT00000004", "NCT00000009"))),
+      outputPath = Some(out)))
+    val rows = df.select("nct_id", "processed").collect().map(r => (r.getString(0), r.getInt(1))).toSeq
+    val csv = spark.read.option("header", true).option("multiLine", true).csv(out)
+      .select("nct_id").collect().map(_.getString(0)).toSeq
+    assert(rows.map(_._1) == csv)
+    assert(rows.take(2) == Seq(("NCT00000003", 1), ("NCT00000004", 1)))
+    assert(rows.drop(2).map(_._2).forall(_ == 0))
+    assert(rows.drop(2).map(_._1) == rows.drop(2).map(_._1).sorted)
+    assert(rows.size == 14)
   }
 }

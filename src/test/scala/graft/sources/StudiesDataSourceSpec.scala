@@ -20,6 +20,22 @@ class StudiesDataSourceSpec extends AnyFunSuite {
     assert(viaV2.toSeq == viaFlatten.toSeq)
   }
 
+  test("a JSON null leaf is 'N/A' through the source, as through flatten") {
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("nullleaves")
+    Files.writeString(dir.resolve("page_1.json"), """{"studies": [
+      {"protocolSection": {"identificationModule": {"nctId": "A", "briefTitle": null},
+        "statusModule": {"overallStatus": null, "startDateStruct": {"date": null}},
+        "eligibilityModule": null, "descriptionModule": {"briefSummary": "s"}}},
+      {"protocolSection": null}]}""")
+    val viaV2 = spark.read.format("graft.sources.StudiesDataSource")
+      .option("path", dir.toString).load().orderBy("nct_id").collect().map(_.toSeq).toSeq
+    val viaFlatten = Flatten(StudiesSource.readPaged(spark, dir.toString))
+      .orderBy("nct_id").collect().map(_.toSeq).toSeq
+    assert(viaV2 == viaFlatten)
+    assert(viaV2.flatten.count(_ != "N/A") == 2) // nct_id "A" and its summary
+  }
+
   test("equality filter is pushed into the scan (and evaluated there)") {
     val df = v2.filter(col("study_type") === "INTERVENTIONAL")
     // Spark trusts fully-pushed V2 filters (no re-evaluation above the
