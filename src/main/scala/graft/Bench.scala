@@ -14,24 +14,26 @@ package graft
   *    4.6 s warm — cold readings must not seed bench_history minima).
   *  - a rep whose query throws can never become the reported minimum
   *    (its time is recorded as failed; only successful reps count).
-  *  - after the adaptive retries, the run is checked against the SAME
-  *    gate rule tools/bench_gate.py applies (1.5x AND +1.0 s vs the
-  *    per-query historical minimum at this sf, allowlist honored). A
+  *  - after the adaptive retries, the run is checked against
+  *    [[BenchGate]]'s rule (1.5x AND +1.0 s vs the per-line green
+  *    historical minimum at this sf, allowlist honored). A
   *    red run is written to bench_queries_rejected.json and appended to
   *    history, but it does NOT overwrite a green bench_queries.json —
   *    the committed snapshot can only ever be a gate-green run, and the
   *    rejection is loud (stdout summary carries gate:"red" + names).
   */
 object Bench {
-  private val GateFactor = 1.5
-  private val GateSlack = 1.0
-
   def main(args: Array[String]): Unit = {
     // Per-JVM pool builds: bench floors must measure BUILDS and PLANS,
     // never a durable-cache read whose cost depends on what some prior
     // JVM left on disk (r10 verdict item 5's d19 noise, inverted).
     System.setProperty("graft.pool.rebuild", "1")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // Gate inputs load before anything is timed, so a corrupt history
+    // fails in milliseconds rather than after the whole run. This run is
+    // not in the history yet, so nothing is excluded.
+    val histBest = BenchGate.floors(BenchGate.HistoryPath, sfDir, Map.empty)
+    val allow = BenchGate.allowlist()
     val spark = GraftSession.start()
     spark.range(1000000).selectExpr("sum(id)").collect() // JVM/codegen warm-up
     // CollationAwareUTF8String's static init builds the ICU Unicode case
@@ -112,48 +114,6 @@ object Bench {
         (1 to reps).flatMap(r => selected.map { case (name, _) => name -> timeOne(name, s"rep$r") })
     val byQuery0: Seq[(String, Seq[(Double, Boolean)])] = samples.groupBy(_._1).toSeq.sortBy(_._1)
       .map { case (k, vs) => k -> vs.map(_._2) }
-    // Adaptive de-noise (r5 verdict item 3): round 5's closing run shipped
-    // with q22 at 6.9x its historical best purely from driver load — the
-    // gate (1.5x AND +1.0 s vs the per-query historical minimum at this
-    // sf) then flagged a non-regression. A real plan regression is slow on
-    // EVERY rep, so up to 2 extra reps for the still-over-band queries
-    // de-noise scheduler flap without ever masking a true regression.
-    val histBest: Map[String, Double] = {
-      val p = java.nio.file.Paths.get("bench_history.jsonl")
-      if (!java.nio.file.Files.exists(p)) Map.empty
-      else {
-        val om = new com.fasterxml.jackson.databind.ObjectMapper()
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.readAllLines(p).asScala.filter(_.nonEmpty).flatMap { line =>
-          try {
-            val node = om.readTree(line)
-            // Floors from green-gated runs ONLY (r7 verdict item 6, strict
-            // option): legacy pre-gate lines were recorded under much
-            // smaller registries and are not comparable run contexts —
-            // see tools/bench_gate.py for the r61 case study. Lines with a
-            // "retired" marker (the r10 356-registry era re-baseline) stay
-            // for archaeology but set no floors — this mirror must skip
-            // them exactly as tools/bench_gate.py does, or the two gates
-            // disagree on the same run.
-            // "retired" skip mirrors python truthiness (bench_gate.py's
-            // `d.get("retired")`): only a truthy marker retires a line —
-            // false / "" / 0 / null do NOT, or the two gates would set
-            // different floors for the same run (r10 ADVICE).
-            val retired = node.path("retired")
-            val retiredTruthy =
-              (retired.isBoolean && retired.asBoolean()) ||
-              (retired.isTextual && retired.asText().nonEmpty) ||
-              (retired.isNumber && retired.asDouble() != 0.0) ||
-              ((retired.isArray || retired.isObject) && retired.size() > 0)
-            if (node.path("sf").asText() == sfDir && node.path("gate").asText("") == "green"
-                && !retiredTruthy) {
-              val qn = node.path("queries")
-              qn.fields().asScala.map(e => e.getKey -> e.getValue.asDouble()).toSeq
-            } else Seq.empty
-          } catch { case _: Throwable => Seq.empty }
-        }.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).min }
-      }
-    }
     // Recorded minimum = min over WARM successful reps (rep 1 dropped;
     // failed reps never counted — ADVICE r6: a fast failure time could
     // otherwise clear the over-band condition). If every warm rep
@@ -165,11 +125,16 @@ object Bench {
       if (ok.nonEmpty) ok.min
       else { System.err.println("[bench] WARNING: all warm reps failed; recording max"); vs.map(_._1).max }
     }
+    // Adaptive de-noise (r5 verdict item 3): round 5's closing run shipped
+    // with q22 at 6.9x its historical best purely from driver load — the
+    // gate (1.5x AND +1.0 s vs the per-query historical minimum at this
+    // sf) then flagged a non-regression. A real plan regression is slow on
+    // EVERY rep, so up to 2 extra reps for the still-over-band queries
+    // de-noise scheduler flap without ever masking a true regression.
     val byQuery1: Seq[(String, Seq[(Double, Boolean)])] = byQuery0.map { case (name, vs) =>
       var times = vs
       var extra = 0
-      while (extra < 2 && histBest.get(name).exists(b =>
-        recordedMin(times) > GateFactor * b && recordedMin(times) - b > GateSlack)) {
+      while (extra < 2 && histBest.get(name).exists(BenchGate.regressed(recordedMin(times), _))) {
         times = times :+ timeOne(name, s"retry${extra + 1}")
         extra += 1
         System.err.println(f"[bench] retry $extra for $name: min now ${recordedMin(times)}%.2f s " +
@@ -178,21 +143,8 @@ object Bench {
       name -> times
     }
 
-    // ---- gate check (mirror of tools/bench_gate.py, allowlist honored)
-    val allow: Map[String, String] = {
-      val p = java.nio.file.Paths.get("tools/bench_allowlist.json")
-      if (!java.nio.file.Files.exists(p)) Map.empty
-      else {
-        val om = new com.fasterxml.jackson.databind.ObjectMapper()
-        import scala.jdk.CollectionConverters._
-        val node = om.readTree(java.nio.file.Files.readString(p))
-        node.fields().asScala.map(e => e.getKey -> e.getValue.asText()).toMap
-      }
-    }
     def overBand(name: String, times: Seq[(Double, Boolean)]): Boolean =
-      histBest.get(name).exists(b =>
-        recordedMin(times) > GateFactor * b && recordedMin(times) - b > GateSlack) &&
-        !allow.contains(name)
+      histBest.get(name).exists(BenchGate.regressed(recordedMin(times), _)) && !allow.contains(name)
 
     // Quiesce pass (r8 verdict item 1): rounds 6-8 all closed with a red
     // official bench that idle re-timing then adjudicated as end-of-round
@@ -225,18 +177,15 @@ object Bench {
       }
     }
     val results = byQuery.map { case (k, vs) => k -> recordedMin(vs) }
-    val gateFailures = results.collect {
-      case (q, t) if histBest.get(q).exists(b => t > GateFactor * b && t - b > GateSlack)
-        && !allow.contains(q) => (q, t, histBest(q))
-    }
-    gateFailures.foreach { case (q, t, b) =>
+    val gateFailures = BenchGate.failures(results.toMap, histBest, allow)
+    gateFailures.foreach { case BenchGate.Regression(q, t, b) =>
       System.err.println(f"[bench] GATE RED $q: $t%.2f s vs historical best $b%.2f s — " +
         "add a tools/bench_allowlist.json entry with the plan-change rationale, or fix the plan")
     }
     // A restricted (SPARK_GRAFT_ONLY) dev run executes in a far lighter
     // JVM/registry context than the full contract — its times would set
-    // unreachable floors (the r61 case study). Label it "dev": both
-    // floor loaders accept gate=="green" only, so dev lines record
+    // unreachable floors (the r61 case study). Label it "dev":
+    // BenchGate.floors accepts gate=="green" only, so dev lines record
     // history without ever gating anything, and the green-snapshot
     // write below won't overwrite a real run's bench_queries.json.
     val gate =
@@ -272,10 +221,10 @@ object Bench {
     // also APPEND to the git-tracked bench_history.jsonl so any later
     // round can diff per-query times against this run. Red runs are
     // appended too (their slower times cannot lower any minimum).
-    java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_history.jsonl"),
+    java.nio.file.Files.writeString(BenchGate.HistoryPath,
       s"""{"ts":"${java.time.Instant.now()}",$body}""" + "\n",
       java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
-    val gateNames = gateFailures.map { case (q, _, _) => "\"" + q + "\"" }.mkString("[", ",", "]")
+    val gateNames = gateFailures.map("\"" + _.line + "\"").mkString("[", ",", "]")
     // n_queries counts registry queries only; pool:<key> and
     // stream:<kernel> lines are reported separately so registry-size
     // consumers stay stable.

@@ -51,11 +51,14 @@ object ConfigLoader {
     val output = section("output")
     def str(m: Map[String, Object], k: String, dflt: String): String =
       m.get(k).map(_.toString).getOrElse(dflt)
+    val terms = ctgov.get("filter_advanced")
+      .map(_.asInstanceOf[java.util.List[Object]].asScala.toSeq.map(_.toString))
+      .getOrElse(Nil)
+    // An unknown field or term shape fails here, naming it, not at analysis.
+    if (terms.nonEmpty) Essie.compileAll(terms)
     EngineConfig(
       pageSize = str(ctgov, "page_size", "1000").toInt,
-      filterAdvanced = ctgov.get("filter_advanced")
-        .map(_.asInstanceOf[java.util.List[Object]].asScala.toSeq.map(_.toString))
-        .getOrElse(Nil),
+      filterAdvanced = terms,
       aiColumnName = str(ai, "column_name", "ai_determined_value"),
       maxRows = ai.get("max_rows").flatMap(v => Option(v)).map(_.toString.toLong),
       debugOnlyTuningTrials = str(ai, "debug_only_tuning_trials", "false").toBoolean,

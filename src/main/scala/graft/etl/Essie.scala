@@ -17,14 +17,17 @@ import org.apache.spark.sql.types.IntegerType
   * reference's server-side pushdown (O3). No custom `Rule` needed.
   *
   * Term grammar covered (everything the reference config uses):
-  *   AREA[Field]VALUE            equality
+  *   AREA[Field]VALUE            equality (list fields: membership)
   *   AREA[Field]RANGE[a,b]       closed range (dates or unit-bearing ages;
   *                               MIN/MAX open a side)
-  *   AREA[Field]MISSING          null check
+  *   AREA[Field]MISSING          null check (list fields: no member)
   *   SEARCH[Location](AREA[LocationCountry]X)   EXISTS over nested locations
   *   SEARCH[Study]term           full-text containment over study text
   *   (t1 OR t2 OR ...)           disjunction
-  * Top-level terms are AND-folded exactly like `etl.py:99-100`.
+  * Top-level terms are AND-folded exactly like `etl.py:99-100`. `Field` is
+  * one of [[fields]]; any other field, or a shape its kind does not take,
+  * throws IllegalArgumentException at compile time, so a config load
+  * rejects it ([[ConfigLoader.load]]).
   */
 object Essie {
 
@@ -79,18 +82,32 @@ object Essie {
 
   // ----------------------------------------------------------- compiling
 
-  private val studyType = col("protocolSection.designModule.studyType")
-  private val startDate = col("protocolSection.statusModule.startDateStruct.date")
-  private val sex       = col("protocolSection.eligibilityModule.sex")
-  private val minAge    = col("protocolSection.eligibilityModule.minimumAge")
-  private val maxAge    = col("protocolSection.eligibilityModule.maximumAge")
-  private val phases    = col("protocolSection.designModule.phases")
-  private val locations = col("protocolSection.contactsLocationsModule.locations")
+  /** How a term reads its field: equality on a string leaf, a closed
+    * range over padded dates or unit-bearing ages, membership in a list. */
+  private[etl] sealed trait Kind
+  private case object Text extends Kind
+  private case object Date extends Kind
+  private case object Age extends Kind
+  private case object Members extends Kind
 
-  private def ageCol(field: String): Column = field match {
-    case "MinimumAge" => minAge
-    case "MaximumAge" => maxAge
-  }
+  private def ps(path: String): Column = col(s"protocolSection.$path")
+
+  /** Every `AREA[...]` field, each over a [[StudiesSource.ReadSchema]] leaf. */
+  private[etl] val fields: Map[String, (Column, Kind)] = Map(
+    "NCTId" -> (ps("identificationModule.nctId"), Text),
+    "BriefTitle" -> (ps("identificationModule.briefTitle"), Text),
+    "OfficialTitle" -> (ps("identificationModule.officialTitle"), Text),
+    "OverallStatus" -> (ps("statusModule.overallStatus"), Text),
+    "StartDate" -> (ps("statusModule.startDateStruct.date"), Date),
+    "StudyType" -> (ps("designModule.studyType"), Text),
+    "Phase" -> (ps("designModule.phases"), Members),
+    "Sex" -> (ps("eligibilityModule.sex"), Text),
+    "EligibilityCriteria" -> (ps("eligibilityModule.eligibilityCriteria"), Text),
+    "MinimumAge" -> (ps("eligibilityModule.minimumAge"), Age),
+    "MaximumAge" -> (ps("eligibilityModule.maximumAge"), Age),
+    "BriefSummary" -> (ps("descriptionModule.briefSummary"), Text),
+    "DetailedDescription" -> (ps("descriptionModule.detailedDescription"), Text),
+    "LocationCountry" -> (ps("contactsLocationsModule.locations.country"), Members))
 
   /** "18 Years" / "6 Months" → months; null-safe (null in, null out). */
   def ageMonths(c: Column): Column =
@@ -115,30 +132,34 @@ object Essie {
   /** Full-text haystack: the study's human-readable text fields
     * (title/summary/description/criteria), lowercased. */
   private val fulltext: Column = lower(concat_ws(" ",
-    coalesce(col("protocolSection.identificationModule.briefTitle"), lit("")),
-    coalesce(col("protocolSection.identificationModule.officialTitle"), lit("")),
-    coalesce(col("protocolSection.descriptionModule.briefSummary"), lit("")),
-    coalesce(col("protocolSection.descriptionModule.detailedDescription"), lit("")),
-    coalesce(col("protocolSection.eligibilityModule.eligibilityCriteria"), lit(""))))
+    Seq("BriefTitle", "OfficialTitle", "BriefSummary", "DetailedDescription", "EligibilityCriteria")
+      .map(f => coalesce(fields(f)._1, lit(""))): _*))
 
+  private def unsupported(f: String, t: Term): Nothing =
+    throw new IllegalArgumentException(s"unsupported Essie field or term shape for $f: $t")
+
+  /** Compile one term. Throws IllegalArgumentException naming the field
+    * for a field outside [[fields]] or a shape its kind does not take. */
   def compile(t: Term): Column = t match {
-    case Area("StudyType", v) => studyType === v
-    case Area("Sex", v)       => sex === v
-    case Area("Phase", v)     => coalesce(array_contains(phases, v), lit(false))
-    case Area("LocationCountry", v) =>
-      coalesce(array_contains(transform(locations, l => l.getField("country")), v), lit(false))
-    case Area(f, v) => col(s"protocolSection.$f") === v
-
-    case AreaRange("StartDate", lo, hi) => padDate(startDate).between(lo, hi)
-    case AreaRange(f @ ("MinimumAge" | "MaximumAge"), lo, hi) =>
-      val m = ageMonths(ageCol(f))
-      val loP = boundMonths(lo).map(b => m >= b)
-      val hiP = boundMonths(hi).map(b => m <= b)
-      (loP.toSeq ++ hiP.toSeq).reduceOption(_ && _).getOrElse(lit(true))
-    case AreaRange(f, lo, hi) => col(s"protocolSection.$f").between(lo, hi)
-
-    case AreaMissing(f @ ("MinimumAge" | "MaximumAge")) => ageCol(f).isNull
-    case AreaMissing(f) => col(s"protocolSection.$f").isNull
+    case Area(f, v) => fields.get(f) match {
+      case Some((c, Text))    => c === v
+      case Some((c, Members)) => coalesce(array_contains(c, v), lit(false))
+      case _                  => unsupported(f, t)
+    }
+    case AreaRange(f, lo, hi) => fields.get(f) match {
+      case Some((c, Date)) => padDate(c).between(lo, hi)
+      case Some((c, Age)) =>
+        val m = ageMonths(c)
+        val Seq(loB, hiB) =
+          try Seq(lo, hi).map(boundMonths) catch { case _: NumberFormatException => unsupported(f, t) }
+        (loB.map(m >= _).toSeq ++ hiB.map(m <= _)).reduceOption(_ && _).getOrElse(lit(true))
+      case _ => unsupported(f, t)
+    }
+    case AreaMissing(f) => fields.get(f) match {
+      case Some((c, Members)) => coalesce(!exists(c, _.isNotNull), lit(true)) // no member present
+      case Some((c, _))       => c.isNull
+      case None               => unsupported(f, t)
+    }
 
     case SearchLocation(inner) => compile(inner)
     case SearchStudy(needle)   => fulltext.contains(needle.toLowerCase)

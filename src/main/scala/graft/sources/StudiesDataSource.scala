@@ -2,8 +2,9 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 import java.util.{Map => JMap}
-import scala.jdk.CollectionConverters._
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import java.nio.charset.StandardCharsets.UTF_8
+import scala.collection.mutable
+import com.fasterxml.jackson.core.JsonToken
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -71,29 +72,62 @@ object StudiesDataSource {
     out.toSeq
   }
 
-  private[sources] val leafPaths: Map[String, Seq[String]] = Map(
-    "nct_id" -> Seq("protocolSection", "identificationModule", "nctId"),
-    "brief_title" -> Seq("protocolSection", "identificationModule", "briefTitle"),
-    "official_title" -> Seq("protocolSection", "identificationModule", "officialTitle"),
-    "overall_status" -> Seq("protocolSection", "statusModule", "overallStatus"),
-    "study_type" -> Seq("protocolSection", "designModule", "studyType"),
-    "start_date" -> Seq("protocolSection", "statusModule", "startDateStruct", "date"),
-    "gender" -> Seq("protocolSection", "eligibilityModule", "sex"),
-    "brief_summary" -> Seq("protocolSection", "descriptionModule", "briefSummary"),
-    "detailed_description" -> Seq("protocolSection", "descriptionModule", "detailedDescription"),
-    "criteria" -> Seq("protocolSection", "eligibilityModule", "eligibilityCriteria"))
+  /** Study leaf path -> the flattened column it fills. */
+  private val leafColumn: Map[Seq[String], String] = Map(
+    Seq("protocolSection", "identificationModule", "nctId") -> "nct_id",
+    Seq("protocolSection", "identificationModule", "briefTitle") -> "brief_title",
+    Seq("protocolSection", "identificationModule", "officialTitle") -> "official_title",
+    Seq("protocolSection", "statusModule", "overallStatus") -> "overall_status",
+    Seq("protocolSection", "designModule", "studyType") -> "study_type",
+    Seq("protocolSection", "statusModule", "startDateStruct", "date") -> "start_date",
+    Seq("protocolSection", "eligibilityModule", "sex") -> "gender",
+    Seq("protocolSection", "descriptionModule", "briefSummary") -> "brief_summary",
+    Seq("protocolSection", "descriptionModule", "detailedDescription") -> "detailed_description",
+    Seq("protocolSection", "eligibilityModule", "eligibilityCriteria") -> "criteria")
 
-  /** Extract one flattened column value ('N/A' default, a JSON `null`
-    * included, as Flatten over the paged scan; start_year is derived —
-    * etl.py:201). */
-  private[sources] def extract(study: JsonNode, colName: String): String = colName match {
+  /** The leaves of each study on one page, column -> value, as Flatten
+    * reads them over the paged scan: a string's text, any other value's
+    * JSON source text (Spark's exact string parsing of a string-typed
+    * leaf), a JSON `null` or absent leaf left out. */
+  private[sources] def studyLeaves(page: Array[Byte]): Seq[Map[String, String]] = {
+    val p = PageFetcher.json.createParser(page)
+    def value(): Option[String] = p.currentToken match {
+      case JsonToken.VALUE_NULL => None
+      case JsonToken.VALUE_STRING => Some(p.getText)
+      case _ =>
+        val start = p.currentTokenLocation().getByteOffset.toInt
+        p.skipChildren()
+        Some(new String(page, start, p.currentLocation().getByteOffset.toInt - start, UTF_8))
+    }
+    def eachField(f: String => Unit): Unit =
+      while (p.nextToken() == JsonToken.FIELD_NAME) { val k = p.currentName(); p.nextToken(); f(k) }
+    def study(path: Seq[String], out: mutable.Map[String, String]): Unit = eachField { k =>
+      val here = path :+ k
+      leafColumn.get(here) match {
+        case Some(c) => value().foreach(out(c) = _)
+        case None if p.currentToken == JsonToken.START_OBJECT => study(here, out)
+        case None => p.skipChildren()
+      }
+    }
+    val studies = mutable.ArrayBuffer.empty[mutable.Map[String, String]]
+    try if (p.nextToken() == JsonToken.START_OBJECT) eachField {
+      case "studies" if p.currentToken == JsonToken.START_ARRAY =>
+        while (p.nextToken() != JsonToken.END_ARRAY) {
+          studies += mutable.Map.empty
+          if (p.currentToken == JsonToken.START_OBJECT) study(Nil, studies.last) else p.skipChildren()
+        }
+      case _ => p.skipChildren()
+    } finally p.close()
+    studies.map(_.toMap).toSeq
+  }
+
+  /** One flattened column value of a [[studyLeaves]] study ('N/A' for a
+    * missing leaf; start_year is derived — etl.py:201). */
+  private[sources] def extract(study: Map[String, String], colName: String): String = colName match {
     case "start_year" =>
       val sd = extract(study, "start_date")
       if (sd != "N/A" && sd.contains("-")) sd.split("-")(0) else "N/A"
-    case other =>
-      leafPaths(other).foldLeft(Option(study)) {
-        (n, k) => n.flatMap(x => Option(x.get(k))).filterNot(_.isNull)
-      }.map(_.asText()).getOrElse("N/A")
+    case other => study.getOrElse(other, "N/A")
   }
 }
 
@@ -195,13 +229,11 @@ private class StudiesReaderFactory(columns: Array[String], filters: Array[Filter
 private class StudiesPartitionReader(file: String, columns: Array[String], filters: Array[Filter])
     extends PartitionReader[InternalRow] {
 
-  private val studies: Iterator[JsonNode] = {
-    val doc = new ObjectMapper().readTree(Files.readAllBytes(Paths.get(file)))
-    Option(doc.get("studies")).map(_.elements().asScala).getOrElse(Iterator.empty)
-  }
+  private val studies: Iterator[Map[String, String]] =
+    StudiesDataSource.studyLeaves(Files.readAllBytes(Paths.get(file))).iterator
   private var current: InternalRow = _
 
-  private def accepts(study: JsonNode): Boolean = filters.forall {
+  private def accepts(study: Map[String, String]): Boolean = filters.forall {
     case EqualTo(a, v: String) => StudiesDataSource.extract(study, a) == v
     case StringStartsWith(a, v) => StudiesDataSource.extract(study, a).startsWith(v)
     case IsNotNull(_) => true // columns are 'N/A'-defaulted, never null

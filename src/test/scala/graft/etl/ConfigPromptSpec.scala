@@ -31,6 +31,18 @@ class ConfigPromptSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] { ConfigLoader.load("/root/repo/build.sbt") }
   }
 
+  test("a filter term on an unknown field or in an unsupported shape fails the load, naming it") {
+    val dir = java.nio.file.Files.createTempDirectory("essieconfig")
+    for ((term, field) <- Seq("AREA[Foo]RANGE[a,b]" -> "Foo", "AREA[StudyType]RANGE[a,b]" -> "StudyType",
+                              "(AREA[Sex]ALL OR AREA[Bar]X)" -> "Bar")) {
+      val p = dir.resolve(s"$field.yaml")
+      java.nio.file.Files.writeString(p,
+        s"ctgov:\n  filter_advanced:\n    - AREA[StudyType]INTERVENTIONAL\n    - \"$term\"\n")
+      val e = intercept[IllegalArgumentException] { ConfigLoader.load(p.toString) }
+      assert(e.getMessage.contains(field), e.getMessage)
+    }
+  }
+
   test("prompt template interpolates row fields; missing field → None") {
     val t = "NCT ID: {nct_id}\nCriteria: {criteria}"
     assert(PromptTemplate.format(t, Map("nct_id" -> "NCT1", "criteria" -> "none"))

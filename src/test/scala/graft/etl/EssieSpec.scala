@@ -62,4 +62,52 @@ class EssieSpec extends AnyFunSuite {
   test("unparseable term throws") {
     intercept[IllegalArgumentException] { Essie.parse("GIBBERISH") }
   }
+
+  /** Ids a term selects on a one-line page read with the extract's schema. */
+  private def pageIds(term: String): Set[String] = {
+    import spark.implicits._
+    val page = """{"studies": [
+      {"protocolSection": {"identificationModule": {"nctId": "A"},
+        "statusModule": {"overallStatus": "RECRUITING"}, "designModule": {"phases": ["PHASE1"]},
+        "contactsLocationsModule": {"locations": [{"country": "Canada"}]}}},
+      {"protocolSection": {"identificationModule": {"nctId": "B"},
+        "statusModule": {"overallStatus": null}, "designModule": {"phases": []},
+        "contactsLocationsModule": {"locations": [{"city": "Lyon"}]}}},
+      {"protocolSection": {"identificationModule": {"nctId": "C"}}}]}""".replace("\n", " ")
+    StudiesSource.explodeStudies(spark.read.schema(StudiesSource.ReadSchema).json(Seq(page).toDS))
+      .filter(Essie.compileAll(Seq(term)))
+      .select("protocolSection.identificationModule.nctId").as[String].collect().toSet
+  }
+
+  test("any table field: equality and MISSING on OverallStatus") {
+    assert(ids("AREA[OverallStatus]RECRUITING") == Set("NCT00000001", "NCT00000004", "NCT00000006",
+      "NCT00000008", "NCT00000010", "NCT00000012", "NCT00000013", "NCT00000014"))
+    assert(pageIds("AREA[OverallStatus]RECRUITING") == Set("A"))
+    assert(ids("AREA[OverallStatus]MISSING").isEmpty) // every fixture study has one
+    assert(pageIds("AREA[OverallStatus]MISSING") == Set("B", "C"))
+  }
+
+  test("list MISSING: no member present") {
+    assert(ids("AREA[Phase]MISSING") == Set("NCT00000002"))
+    assert(pageIds("AREA[Phase]MISSING") == Set("B", "C"))
+    assert(pageIds("AREA[LocationCountry]MISSING") == Set("B", "C"))
+    assert(pageIds("SEARCH[Location](AREA[LocationCountry]Canada)") == Set("A"))
+  }
+
+  test("an unknown field or an unsupported shape throws naming the field, before any plan") {
+    for ((term, field) <- Seq("AREA[Foo]RANGE[a,b]" -> "Foo", "AREA[Foo]X" -> "Foo",
+        "AREA[Foo]MISSING" -> "Foo", "AREA[OverallStatus]RANGE[a,b]" -> "OverallStatus",
+        "AREA[StartDate]2013" -> "StartDate", "AREA[MinimumAge]RANGE[ten,MAX]" -> "MinimumAge",
+        "SEARCH[Location](AREA[Country]Canada)" -> "Country")) {
+      val e = intercept[IllegalArgumentException] { Essie.compile(Essie.parse(term)) }
+      assert(e.getMessage.contains(field), e.getMessage)
+    }
+  }
+
+  test("every table field resolves against the paged extract's read schema") {
+    import org.apache.spark.sql.Row
+    val page = spark.createDataFrame(java.util.List.of[Row](), StudiesSource.ReadSchema)
+    val studies = StudiesSource.explodeStudies(page)
+    for (f <- Essie.fields.keys) studies.filter(Essie.compileAll(Seq(s"AREA[$f]MISSING"))).queryExecution.analyzed
+  }
 }

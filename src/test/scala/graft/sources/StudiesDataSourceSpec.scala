@@ -27,13 +27,17 @@ class StudiesDataSourceSpec extends AnyFunSuite {
       {"protocolSection": {"identificationModule": {"nctId": "A", "briefTitle": null},
         "statusModule": {"overallStatus": null, "startDateStruct": {"date": null}},
         "eligibilityModule": null, "descriptionModule": {"briefSummary": "s"}}},
+      {"protocolSection": {"identificationModule": {"nctId": "B",
+        "briefTitle": {"x": 1}, "officialTitle": ["a", "b"]}, "statusModule": {"overallStatus": 1.50}}},
       {"protocolSection": null}]}""")
     val viaV2 = spark.read.format("graft.sources.StudiesDataSource")
       .option("path", dir.toString).load().orderBy("nct_id").collect().map(_.toSeq).toSeq
     val viaFlatten = Flatten(StudiesSource.readPaged(spark, dir.toString))
       .orderBy("nct_id").collect().map(_.toSeq).toSeq
     assert(viaV2 == viaFlatten)
-    assert(viaV2.flatten.count(_ != "N/A") == 2) // nct_id "A" and its summary
+    // nct_id "A" and its summary; "B" and its mistyped leaves as JSON source text
+    assert(viaV2.flatten.count(_ != "N/A") == 6)
+    assert(viaV2.exists(r => r.take(4) == Seq("B", """{"x": 1}""", """["a", "b"]""", "1.50")))
   }
 
   test("equality filter is pushed into the scan (and evaluated there)") {

@@ -146,9 +146,10 @@ print(f"[close] committed green sf0.1 bench covers all {n} registry queries (+{n
 EOF
   fi
   echo "== per-query bench regression gate (vs bench_history.jsonl minima)"
-  # --selftest also plants a 3x-slowed query and requires the gate to
-  # trip on it, so a vacuous gate (bad sf match, empty history) fails loud
-  python3 tools/bench_gate.py bench_queries.json --selftest | tail -3
+  # --selftest also plants a 3x-slowed line in each family (query, pool,
+  # stream) and requires the gate to catch that victim, so a vacuous gate
+  # (bad sf match, empty history) fails loud
+  java -cp "$CP" graft.BenchGate bench_queries.json --selftest | tail -3
   # Round-close snapshot (r4 verdict item 7): GRAFT_ROUND=5 tools/gates.sh
   # freezes the current per-query bench file as BENCH_QUERIES_r{N}.json so
   # later rounds diff against a committed artifact instead of mining
@@ -160,7 +161,7 @@ EOF
     # The snapshot must be the sf0.1 close, never whatever green run
     # last touched bench_queries.json (r9 verdict item 1).
     python3 -c "import json,sys; sf=json.load(open('bench_queries.json'))['sf']; sys.exit(0 if sf=='/root/testdata/sf0.1' else sys.stderr.write(f'refusing to snapshot a {sf} run as BENCH_QUERIES_rNN\n') or 1)"
-    python3 tools/bench_gate.py bench_queries.json | tail -1
+    java -cp "$CP" graft.BenchGate bench_queries.json | tail -1
     cp bench_queries.json "BENCH_QUERIES_r$(printf '%02d' "$GRAFT_ROUND").json"
     # Assert the file we claim to have written (r10 verdict item 2: the
     # freeze must prove itself, not just echo).
