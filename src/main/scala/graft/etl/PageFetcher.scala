@@ -154,13 +154,16 @@ object PageFetcher {
   /** Full extract through the seam: fetch every page on the driver, then
     * parse + explode distributed (`spark.read.json` over an in-memory
     * Dataset — one record per page body, so multiline page docs are
-    * fine). None if the walk aborted. For file-backed page sets prefer
+    * fine) against [[StudiesSource.ReadSchema]], like the file scan: the
+    * same columns whatever the pages hold, none at all included. None if
+    * the walk aborted. For file-backed page sets prefer
     * [[StudiesSource.readPaged]], which scans page FILES distributed
     * instead of materializing bodies on the driver. */
   def readFetched(spark: SparkSession, fetcher: PageFetcher,
                   maxPages: Int = 100): Option[DataFrame] =
     fetchPages(fetcher, maxPages).map { pages =>
       import spark.implicits._
-      StudiesSource.explodeStudies(spark.read.json(spark.createDataset(pages)))
+      StudiesSource.explodeStudies(
+        spark.read.schema(StudiesSource.ReadSchema).json(spark.createDataset(pages)))
     }
 }

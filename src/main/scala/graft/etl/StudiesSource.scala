@@ -21,7 +21,9 @@ import org.apache.spark.sql.types.StructType
   * `etl.py:130-131` becomes one multi-file scan instead of N unions)
   * against the declared [[ReadSchema]], so the extract runs no Spark job
   * at any page count and the pages are parsed only when the pipeline's
-  * plan executes, decoding just the leaves it uses.
+  * plan executes, decoding just the leaves it uses. This is the only
+  * reader of study pages: the single-file fixture ([[readStudies]]) is a
+  * chain of one page.
   *
   * Offline stand-in: a page document is a file (any Hadoop path) and
   * `nextPageToken` holds the *name of the next page file*. A real HTTP
@@ -30,40 +32,10 @@ import org.apache.spark.sql.types.StructType
   */
 object StudiesSource {
 
-  /** Memoized per (session, path) for [[readPageDoc]] / [[readStudies]]
-    * (the paged extract does not use it): a multiLine JSON read pays
-    * schema inference (a full file pass) EAGERLY at plan time, on every
-    * `spark.read.json` call — with four registered etl queries over the
-    * same fixture that fixed cost dominates their benchmark time. Same
-    * immutable-once-loaded contract as [[graft.Tables]]: there is NO
-    * content invalidation, so a path whose file is rewritten within one
-    * session would serve the stale schema/plan. Callers (EtlQueries,
-    * Bench warm-up, the etl specs) all read fixed fixture paths; a test
-    * that mutates a page file must use a fresh path or session. */
-  private val pageCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  /** Read one studies-document file (`{"studies": [...], "nextPageToken"?}`)
-    * as a single-row DataFrame. */
-  def readPageDoc(spark: SparkSession, path: String): DataFrame = {
-    pageCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    pageCache.computeIfAbsent((spark, path),
-      _ => spark.read.option("multiLine", true).json(path))
-  }
-
-  /** Explode a studies-document frame into one row per raw study. An
-    * all-empty `studies` array infers as array<string>, not
-    * array<struct> — treat that as zero rows rather than erroring. */
-  def explodeStudies(doc: DataFrame): DataFrame = {
-    val isStruct = doc.schema.fields.find(_.name == "studies").exists {
-      _.dataType match {
-        case org.apache.spark.sql.types.ArrayType(_: org.apache.spark.sql.types.StructType, _) => true
-        case _ => false
-      }
-    }
-    if (isStruct) doc.select(explode(col("studies")).as("study")).select("study.*")
-    else doc.sparkSession.emptyDataFrame
-  }
+  /** Explode a page-document frame read against [[ReadSchema]] into one
+    * row per raw study. */
+  def explodeStudies(doc: DataFrame): DataFrame =
+    doc.select(explode(col("studies")).as("study")).select("study.*")
 
   /** The pages of one chain and the studies they hold. */
   final case class Walk(files: Seq[String], studies: Long)
@@ -98,14 +70,17 @@ object StudiesSource {
     Walk(files.toSeq, studies)
   }
 
-  /** The page document as the paged extract reads it: exactly the study
-    * leaves [[Flatten]] and [[Essie.compile]] use, all strings but
-    * `phases` and `locations`. Declaring it skips schema inference (an
+  /** The page document as every study read declares it ([[scan]] and
+    * [[PageFetcher.readFetched]]; no study read infers a schema): exactly
+    * the study leaves [[Flatten]] and [[Essie.compile]] use, all strings
+    * but `phases` and `locations`. Declaring it skips schema inference (an
     * eager full parse of every page), lets the parser decode only these
     * leaves, and makes every filter resolve whichever optional leaves a
-    * chain happens to hold. A leaf of another JSON type reads as null
-    * (`'N/A'`) and its row is kept; a non-object study is rejected by
-    * the walk ([[PageFetcher.readPage]]). */
+    * chain happens to hold, an empty one included. A string leaf holding
+    * another JSON value reads as that value's source text; a struct or
+    * array holding a value of another type reads as null (`'N/A'`), and
+    * its row is kept. A non-object study is rejected by the walk
+    * ([[PageFetcher.readPage]]). */
   val ReadSchema: StructType = StructType.fromDDL(
     """studies ARRAY<STRUCT<protocolSection: STRUCT<
       |  identificationModule: STRUCT<nctId: STRING, briefTitle: STRING, officialTitle: STRING>,
@@ -118,10 +93,10 @@ object StudiesSource {
 
   /** One raw-study row per study of the walked pages: a single
     * distributed scan against [[ReadSchema]] (no Spark job until the
-    * frame is used), or no scan at all when the pages hold no study. */
+    * frame is used). A chain with no study, or no page, still has every
+    * column, so [[Flatten]] and every filter resolve on it. */
   def scan(spark: SparkSession, pages: Walk): DataFrame =
-    if (pages.studies == 0) spark.emptyDataFrame
-    else explodeStudies(
+    explodeStudies(
       spark.read.schema(ReadSchema).option("multiLine", true).json(pages.files: _*))
 
   /** [[walk]] the chain, then [[scan]] every page in one distributed read. */
@@ -129,7 +104,10 @@ object StudiesSource {
                 maxPages: Int = 100): DataFrame =
     scan(spark, walk(dir, first, maxPages, spark.sessionState.newHadoopConf()))
 
-  /** Read the single-file studies fixture (`fixtures/studies.json`). */
-  def readStudies(spark: SparkSession, path: String): DataFrame =
-    explodeStudies(readPageDoc(spark, path))
+  /** Read one studies-document file (`fixtures/studies.json`): a chain of
+    * one page, read like any other. */
+  def readStudies(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    readPaged(spark, p.getParent.toString, p.getName, maxPages = 1)
+  }
 }

@@ -15,8 +15,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSource V2 WRITE path with an atomic manifest-commit protocol —
-  * the write-side twin of [[StudiesDataSource]]'s read surface, and the
-  * task-level form of the exactly-once guarantees the streaming
+  * the task-level form of the exactly-once guarantees the streaming
   * foreachBatch merge sink provides at batch level.
   *
   * Protocol (the same shape every transactional lake-table format uses):

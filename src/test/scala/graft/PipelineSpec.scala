@@ -1,9 +1,9 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
-import graft.etl.{Enrich, Essie, Pipeline}
+import graft.etl.{ConfigLoader, Enrich, Essie, Pipeline}
 
 /** End-to-end pipeline composition + SQL extension registration. */
 class PipelineSpec extends AnyFunSuite {
@@ -23,6 +23,22 @@ class PipelineSpec extends AnyFunSuite {
     val files = Files.list(java.nio.file.Paths.get(out + "/result"))
       .filter(_.toString.endsWith(".csv")).toArray
     assert(files.nonEmpty)
+  }
+
+  test("graft.Main's pipeline on the fixture config writes the golden CSV") {
+    // the run `graft.Main --config fixtures/config.yaml --pages fixtures/pages`
+    // makes; fixtures/expected/pipeline_out.csv is its part file
+    val cfg = ConfigLoader.load("fixtures/config.yaml")
+    val out = Files.createTempDirectory("golden").resolve("csv")
+    val (df, obs) = Enrich.withMetrics(Pipeline.run(spark, Pipeline.Config(
+      pagesDir = "fixtures/pages", essieTerms = cfg.filterAdvanced, gate = cfg.gate,
+      outputPath = Some(out.toString))))
+    assert(df.count() == 8)
+    assert(obs.get == Map("processed" -> 2L, "bypassed" -> 6L))
+    val parts = Files.list(out).filter(_.toString.endsWith(".csv")).toArray.toSeq
+    assert(parts.size == 1)
+    val got = Files.readAllBytes(parts.head.asInstanceOf[Path])
+    assert(got.sameElements(Files.readAllBytes(Paths.get("fixtures/expected/pipeline_out.csv"))))
   }
 
   test("empty extract fails fast like the reference") {

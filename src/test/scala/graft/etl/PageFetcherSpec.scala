@@ -16,10 +16,11 @@ class PageFetcherSpec extends AnyFunSuite {
     def fetch(token: Option[String]): Option[String] = {
       val i = token.map(_.stripPrefix("tok").toInt).getOrElse(1)
       fetched += 1
+      val study = s"""{"protocolSection": {"identificationModule": {"nctId": "S$i"}}}"""
       if (i == failAt) None // reference: HTTP != 200 → whole extract aborts
       else if (endless || i < n)
-        Some(s"""{"studies": [{"id": "S$i"}], "nextPageToken": "tok${i + 1}"}""")
-      else Some(s"""{"studies": [{"id": "S$i"}]}""")
+        Some(s"""{"studies": [$study], "nextPageToken": "tok${i + 1}"}""")
+      else Some(s"""{"studies": [$study]}""")
     }
   }
 
@@ -68,8 +69,12 @@ class PageFetcherSpec extends AnyFunSuite {
   test("readFetched parses driver-held page bodies into exploded study rows") {
     val df = PageFetcher.readFetched(spark, new StubFetcher(3)).get
     assert(df.count() == 3)
-    assert(df.select("id").collect().map(_.getString(0)).sorted.sameElements(
-      Array("S1", "S2", "S3")))
+    assert(df.select("protocolSection.identificationModule.nctId").collect().map(_.getString(0))
+      .sorted.sameElements(Array("S1", "S2", "S3")))
+    // a chain with no study still has every column of the read schema
+    val empty = PageFetcher.readFetched(spark, _ => Some("""{"studies": []}""")).get
+    assert(Flatten(empty).columns.length == 11)
+    assert(empty.count() == 0)
   }
 
   test("file fetcher agrees with the distributed file walk on the fixtures") {

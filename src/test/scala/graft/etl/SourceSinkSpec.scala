@@ -22,6 +22,9 @@ class SourceSinkSpec extends AnyFunSuite {
   test("empty page yields zero rows without erroring") {
     val df = StudiesSource.readPaged(spark, "/root/repo/fixtures/pages", first = "page_empty.json")
     assert(df.count() == 0)
+    val flat = Flatten(df)
+    assert(flat.columns.length == 11)
+    assert(flat.count() == 0)
   }
 
   test("csv sink: fixed header order incl. phantom empty min/max age, optional AI column") {

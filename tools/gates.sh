@@ -75,6 +75,17 @@ print("[close] green sf0.1 bench stashed for the end-of-script snapshot")
 EOF
 fi
 
+# The CLI end to end, argument parsing and exit code included (the
+# tier-1 golden test drives Pipeline.run; graft.Main calls sys.exit, so
+# only a real JVM run covers it). After the closing bench, which must
+# stay first on a cold machine.
+echo "== graft.Main on the fixture config vs the golden CSV"
+main_out=$(java -cp "$CP" "${JAVA_FLAGS[@]}" graft.Main --config fixtures/config.yaml \
+  --out /tmp/gates_main 2>/tmp/gates_main.log) || { tail -5 /tmp/gates_main.log; echo "graft.Main EXITED NONZERO"; exit 1; }
+echo "$main_out"
+[ "$main_out" = "rows=8 processed=2 bypassed=6" ] || { echo "graft.Main counts differ"; exit 1; }
+cmp /tmp/gates_main/part-*.csv fixtures/expected/pipeline_out.csv
+
 echo "== sf0.01 dump + both-mode compare + ordered"
 run_verify /root/testdata/sf0.01 /tmp/gates_sf001
 python3 tools/check_oracle.py /root/testdata/sf0.01 /tmp/gates_sf001 | tail -1
