@@ -77,6 +77,11 @@ object Bench {
       // §1.5: label the jobs so a UI/event-log read of a bench run can
       // attribute stages to bench lines (thread-local, cleared after).
       spark.sparkContext.setJobDescription(s"bench:$name $tag")
+      // a stream line's state dir is made and deleted outside the timed
+      // interval; the drive itself leaves it for its caller
+      val streamDir = if (name.startsWith("stream:"))
+        Some(java.nio.file.Files.createTempDirectory(s"stream_bench_${name.stripPrefix("stream:")}").toString)
+      else None
       val t0 = System.nanoTime()
       val ok =
         try {
@@ -86,7 +91,7 @@ object Bench {
             poolFns(key)(spark, sfDir).write.format("noop").mode("overwrite").save()
           } else if (name.startsWith("stream:")) {
             val key = name.stripPrefix("stream:")
-            streamStateBytes(key) = graft.streaming.StreamBench.driveOne(spark, sfDir, key)
+            streamStateBytes(key) = graft.streaming.StreamBench.drive(spark, sfDir, key, streamDir.get)
           } else {
             SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
           }
@@ -97,7 +102,8 @@ object Bench {
         // narrowed catch (or a throw from the handler) can never leak it
         // onto subsequent bench lines.
         finally spark.sparkContext.setJobDescription(null)
-      val dt = (System.nanoTime() - t0) / 1e9
+      val dt = try (System.nanoTime() - t0) / 1e9
+        finally streamDir.foreach(d => org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
       // drop caches persisted inside queries (d03/d07/d08/r46) so later
       // queries are measured cold and memory doesn't accumulate
       spark.catalog.clearCache()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Plan auditor: prints the formatted physical plan for the named queries
@@ -10,16 +9,19 @@ import org.apache.spark.sql.execution.FormattedMode
   * A `pool:<key>` argument prints that SharedPools build's raw
   * (unmaterialized) plan instead: a pool consumer's plan only shows the
   * parquet scan of the materialized pool, while the build is the part a
-  * `pool:<key>` bench line times.
+  * `pool:<key>` bench line times ([[queries.PoolWarmup.rawBuilds]]); an
+  * unknown key exits 1, naming the known keys.
   *
   * Usage: runMain graft.Explain [queryName | pool:<key> ...] */
 object Explain {
-  private def poolBuilds(spark: SparkSession, sf: String): Map[String, () => DataFrame] = Map(
-    "contamination_pairs" -> (() => queries.PipelineQueries.contaminationPairsBuild(spark, sf)),
-    "containment_ranked" -> (() => queries.DedupQueries.containmentRankedOf(
-      Tables.documents(spark, sf))))
-
   def main(args: Array[String]): Unit = {
+    val builds = queries.PoolWarmup.rawBuilds.toMap
+    val unknown = args.filter(_.startsWith("pool:")).map(_.stripPrefix("pool:")).filterNot(builds.contains)
+    if (unknown.nonEmpty) {
+      System.err.println(s"unknown pool key(s) ${unknown.mkString(", ")}; known: " +
+        queries.PoolWarmup.rawBuilds.map(_._1).mkString(", "))
+      sys.exit(1)
+    }
     val spark = GraftSession.start("ERROR")
     val names = if (args.nonEmpty) args.toSeq
       else Seq("q02_filter_project", "q05_region_revenue", "q01_pricing_summary", "s01_ann_bruteforce")
@@ -27,7 +29,7 @@ object Explain {
     names.foreach { n =>
       println(s"\n========== $n ==========")
       val df =
-        if (n.startsWith("pool:")) poolBuilds(spark, sf)(n.stripPrefix("pool:"))()
+        if (n.startsWith("pool:")) builds(n.stripPrefix("pool:"))(spark, sf)
         else SparkEntry.queries(n)(spark, sf)
       println(df.queryExecution.explainString(FormattedMode))
     }

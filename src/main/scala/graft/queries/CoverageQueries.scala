@@ -1159,7 +1159,7 @@ object CoverageQueries {
 
   private val m17: Fn = (s, d) => manifestPool(s, d).orderBy("doc_id")
 
-  private def m17Built(s: SparkSession, d: String): DataFrame = {
+  private[queries] def m17Built(s: SparkSession, d: String): DataFrame = {
     val dd = Tables.documents(s, d).select(col("doc_id"), col("source"))
     // m14's pair stage plants probe payloads (ids offset by 1e9) to keep
     // its recall graded — the manifest must reflect REAL duplicate

@@ -751,7 +751,7 @@ object DedupQueries {
   private[queries] def clusterPool(s: SparkSession, d: String): DataFrame =
     SharedPools.materialized(s, d, "dedup_clusters")(clustersBuilt(s, d))
 
-  private def clustersBuilt(s: SparkSession, d: String): DataFrame = {
+  private[queries] def clustersBuilt(s: SparkSession, d: String): DataFrame = {
     val pairs = jaccardPool(s, d).select(col("d1"), col("d2"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     minLabelComponents(s, pairs)
@@ -1161,7 +1161,7 @@ object DedupQueries {
 
   private val d19: Fn = (s, d) => lshSweepPool(s, d).orderBy(desc("bands"))
 
-  private def d19Built(s: SparkSession, d: String): DataFrame = {
+  private[queries] def d19Built(s: SparkSession, d: String): DataFrame = {
     // both shared subtrees ride parquet-backed pools, NOT lazy persists:
     // the closing union evaluates all three configs' candidate/tp/count
     // branches in ONE job, and racing branches blow straight past an

@@ -350,7 +350,7 @@ object ExtraQueries3 {
     * event_type with (n, Σ2^(30−age), Σcents·2^(30−age)) as exact
     * decimals. Because every weight is absolute against the SAME fixed
     * anchor, two partial frames merge by plain integer addition — the
-    * property `StreamingOps.decayedAggStream` exploits to maintain the
+    * property `StreamingOps.Decayed` exploits to maintain the
     * aggregate incrementally with batch-count-independent exactness. */
   private[graft] def decayedPartials(events: DataFrame): DataFrame = {
     val anchor = lit("2024-01-31").cast("date")

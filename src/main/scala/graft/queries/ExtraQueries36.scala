@@ -50,7 +50,7 @@ object ExtraQueries36 {
     * which is the classic "drift after a quiet period" alarm). Batch
     * two-pass form: deviations are against the series' global mean,
     * the production streaming twin would maintain the walk
-    * incrementally exactly like [[graft.streaming.StreamingOps.cusumStream]].
+    * incrementally exactly like [[graft.streaming.StreamingOps.Cusum]].
     *
     * Exactness: daily sums in cents; deviations in the cents·n_days
     * integer scale (s·N − T − δ·N with δ = 50 cents, all DECIMAL(38,0)

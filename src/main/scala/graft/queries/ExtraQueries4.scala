@@ -839,7 +839,7 @@ object ExtraQueries4 {
   /** (event_type, user_id, first_day) — the mergeable kernel of the
     * adoption curve: min is idempotent/commutative, so standing state
     * and delta frames combine by union + re-min, which is what
-    * `StreamingOps.adoptionStream` maintains incrementally. */
+    * `StreamingOps.Adoption` maintains incrementally. */
   private[graft] def firstDays(ev: DataFrame): DataFrame =
     ev.groupBy(col("event_type"), col("user_id"))
       .agg(min(datediff(col("ts").cast("date"), lit("2024-01-01").cast("date"))).as("first_day"))

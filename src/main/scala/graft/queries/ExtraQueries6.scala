@@ -551,7 +551,7 @@ object ExtraQueries6 {
   /** The (user_id, day) distinct-activity grain r95 derives everything
     * from — ALSO the mergeable state of the streaming twin (set union is
     * idempotent/commutative, so waves merge by union+distinct at any
-    * batch boundary: `StreamingOps.growthStream`). */
+    * batch boundary: `StreamingOps.Growth`). */
   def activeDays(ev: DataFrame): DataFrame =
     ev.select(col("user_id"), to_date(col("ts")).as("day")).distinct()
 

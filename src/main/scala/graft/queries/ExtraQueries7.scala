@@ -49,7 +49,7 @@ object ExtraQueries7 {
     * join is an equi-join on t+k with the 7 lags exploded map-side. */
   /** The (day, cents) daily-revenue grain r96 derives the ACF from —
     * ALSO the mergeable state of the streaming twin (cent sums are
-    * additive across arrival waves: `StreamingOps.acfStream`). */
+    * additive across arrival waves: `StreamingOps.Acf`). */
   def dailyCents(ord: DataFrame): DataFrame =
     ord.groupBy(to_date(col("o_orderdate")).as("day"))
       .agg(sum(round(col("o_totalprice") * 100, 0).cast(LongType)).as("x"))

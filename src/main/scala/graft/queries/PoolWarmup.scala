@@ -29,4 +29,18 @@ object PoolWarmup {
     "media_manifest" -> (CoverageQueries.manifestPool _),
     "knn_graph" -> (SimilarityQueries.knnPool _),
     "ivf_sweep" -> (SimilarityQueries.ivfSweepPool _))
+
+  /** Each pool key's raw (unmaterialized) build, in [[pools]] order — the
+    * plan a `pool:<key>` bench line times, which graft.Explain prints. A
+    * build may read a dependency's materialized pool, as the pool does. */
+  val rawBuilds: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+    "jaccard_pairs" -> (DedupQueries.jaccardPairsPrefix _),
+    "minhash_sigs" -> (DedupQueries.minhashSignatures _),
+    "containment_ranked" -> ((s, d) => DedupQueries.containmentRankedOf(graft.Tables.documents(s, d))),
+    "dedup_clusters" -> (DedupQueries.clustersBuilt _),
+    "lsh_sweep" -> (DedupQueries.d19Built _),
+    "contamination_pairs" -> (PipelineQueries.contaminationPairsBuild _),
+    "media_manifest" -> (CoverageQueries.m17Built _),
+    "knn_graph" -> (SimilarityQueries.knnBuilt _),
+    "ivf_sweep" -> (SimilarityQueries.s28Built _))
 }

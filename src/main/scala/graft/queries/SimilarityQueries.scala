@@ -906,7 +906,7 @@ object SimilarityQueries {
 
   private val s10: Fn = (s, d) => knnPool(s, d).orderBy("a_id", "rk")
 
-  private def knnBuilt(s: SparkSession, d: String): DataFrame = {
+  private[queries] def knnBuilt(s: SparkSession, d: String): DataFrame = {
     val e = emb(s, d)
     val cSz = DedupQueries.ivfCodebookSize(e.count())
     val seeded = e.orderBy("vec_id").limit(cSz.toInt)
@@ -1993,7 +1993,7 @@ object SimilarityQueries {
 
   private val s28: Fn = (s, d) => ivfSweepPool(s, d).orderBy("nprobe", "q_id")
 
-  private def s28Built(s: SparkSession, d: String): DataFrame = {
+  private[queries] def s28Built(s: SparkSession, d: String): DataFrame = {
     val exact = s01(s, d).select(col("q_id"), col("vec_id"))
     IvfSweepProbes.map { np =>
       val approx = ivfTopK(s, d, np).select(col("q_id").as("aq"), col("vec_id").as("av"))

@@ -25,20 +25,20 @@ object StreamBench {
   /** (name, step, report) for every versioned-state kernel. */
   val kernels: Seq[(String,
       (DataFrame, String, Long) => Unit,
-      (SparkSession, String) => DataFrame)] = Seq(
-    ("decayed", StreamingOps.decayedAggStep, StreamingOps.decayedReport),
-    ("cusum", StreamingOps.cusumStep, StreamingOps.cusumReport),
-    ("runs", StreamingOps.runsStep, StreamingOps.runsReport),
-    ("adoption", StreamingOps.adoptionStep, StreamingOps.adoptionReport),
-    ("acf", StreamingOps.acfStep, StreamingOps.acfReport),
-    ("growth", StreamingOps.growthStep, StreamingOps.growthReport),
-    ("wau", StreamingOps.wauStep, StreamingOps.wauReport),
-    ("watermark", StreamingOps.watermarkStep, StreamingOps.watermarkReport))
+      (SparkSession, String) => DataFrame)] =
+    StreamingOps.StateKernels.map(k => (k.name, k.step _, k.report _)) :+
+      (("watermark", StreamingOps.watermarkStep _, StreamingOps.watermarkReport _))
 
   val Waves = 4
 
-  /** Drive the full wave workload + report for one kernel into a fresh
-    * temp state dir; returns the final on-disk state size in bytes.
+  /** [[drive]] into a fresh temp state dir `stream_bench_<name>*`, which
+    * is left behind for the caller to read the report from and delete. */
+  def driveOne(spark: SparkSession, sfDir: String, name: String): Long =
+    drive(spark, sfDir, name,
+      java.nio.file.Files.createTempDirectory(s"stream_bench_$name").toString)
+
+  /** Drive the full wave workload + report for one kernel into the empty
+    * state dir `dir`; returns the final on-disk state size in bytes.
     * The caller times this call (graft.Bench's timeOne protocol).
     *
     * Wave assignment is per kernel-contract:
@@ -52,10 +52,9 @@ object StreamBench {
     *  - watermark: order-sensitive BY DEFINITION — waves must partition
     *    the derived arrival_seq into contiguous ranges (the log-offset
     *    contract watermarkStep enforces loudly). */
-  def driveOne(spark: SparkSession, sfDir: String, name: String): Long = {
+  def drive(spark: SparkSession, sfDir: String, name: String, dir: String): Long = {
     val (_, step, report) = kernels.find(_._1 == name)
       .getOrElse(throw new IllegalArgumentException(s"unknown stream kernel $name"))
-    val dir = java.nio.file.Files.createTempDirectory(s"stream_bench_$name").toString
     var cached: Option[DataFrame] = None // released after the waves drain
     try {
       val waves: Seq[DataFrame] = name match {

@@ -1,9 +1,10 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.{DecimalType, LongType, StructType}
 
 /** Streaming operators over the `events` shape (SURVEY.md §2.3: the
   * reference is strictly batch, so this is extension surface).
@@ -309,288 +310,152 @@ object StreamingOps {
     spark.read.parquet(
       s"$tableDir/${java.nio.file.Files.readString(new java.io.File(s"$tableDir/_current").toPath).trim}")
 
-  // ---- incremental decayed aggregate (r64 twin) ----
+  // ---- versioned-state kernels (r64/r78/r81/r89/r95/r96/r105/st6 twins) ----
 
-  /** Always-on twin of r64's recency-decayed aggregates: each micro-batch
-    * folds its events into a standing per-event_type state table of EXACT
-    * fixed-point partials (n, Σ2^(30−age), Σcents·2^(30−age)). Because
-    * every weight is absolute against r64's fixed anchor, the merge is
-    * plain integer addition — the standing state after any number of
-    * batches equals the batch r64 partials over the union of all events,
-    * exactly, independent of batch boundaries or arrival order (the
-    * mergeable-summaries property, here with zero approximation).
+  /** One always-on twin of a registry query that folds micro-batches into
+    * a standing state table: `fold` is the oracled batch kernel applied to
+    * one micro-batch, `merge` re-aggregates the union of the standing state
+    * and a folded batch, and `publish` is the oracled report over the
+    * state. Every twin follows the mergeable-kernel discipline: the state
+    * is a grain that merges at any batch boundary or arrival order
+    * (integer addition, min, set union), and whatever is NOT mergeable
+    * (CUSUM, runs, ACF, growth flows) is re-derived from that bounded
+    * grain by the same batch code, so the published report is always
+    * exactly what the batch audit would print on the rows seen so far.
     *
-    * Replay idempotency differs from [[mergeSink]]'s keyed overwrite:
-    * additive state double-counts a re-delivered batch unless the step
-    * rebuilds from the state BEFORE that batch, so versions are named by
-    * batch id and each step reads the newest version with id < its own —
-    * a re-delivered batch id recomputes the same output version from the
+    * State lives in `<tableDir><leaf>` as versions named by batch id
+    * (`v%012d`), behind a `_state_format` header carrying `format` (see
+    * [[checkStateFormat]]). Replay idempotency differs from
+    * [[mergeSink]]'s keyed overwrite: additive state double-counts a
+    * re-delivered batch unless the step rebuilds from the state BEFORE
+    * that batch, so each step reads the newest version with id < its own
+    * — a re-delivered batch id recomputes the same output version from the
     * same base. Readers follow max-version, so a replayed rewrite is
-    * invisible (same content, same name). */
-  def decayedAggStream(events: DataFrame, tableDir: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) => decayedAggStep(batch, tableDir, batchId)
+    * invisible (same content, same name). `empty` is the declared state
+    * schema: the report reads the state with it and publishes over an
+    * empty relation of it before the first version exists. */
+  final case class StateKernel(
+      name: String,
+      format: String,
+      leaf: String,
+      empty: StructType,
+      fold: DataFrame => DataFrame,
+      merge: DataFrame => DataFrame,
+      publish: DataFrame => DataFrame) {
+
+    /** One incremental fold (exposed for specs + replay proof). A refused
+      * state dir fails before any work on the batch; the base version is
+      * read with the folded rows' own schema, so the step runs no
+      * schema-inference job. */
+    def step(batch: DataFrame, tableDir: String, batchId: Long): Unit = {
+      val dir = tableDir + leaf
+      val base = version(dir, format, Some(batchId))
+      val rows = fold(batch)
+      writeState(merged(base.map(batch.sparkSession.read.schema(rows.schema).parquet(_)), rows, merge),
+        dir, batchId, format)
     }
 
-  /** Per-kernel state-format ids (the `_state_format` header contract —
-    * see [[checkStateFormat]]). Bump a kernel's version whenever its
-    * state SCHEMA or merge semantics change; wm_hi is v2 because v1
-    * (round 8) lacked the arrival-order `state_seq` column. */
-  private val DecayedFmt = "decayed_partials:v1"
-  private val CusumFmt = "cusum_daily:v1"
-  private val RunsFmt = "runs_daily_rev:v1"
-  private val AdoptionFmt = "adoption_first_days:v1"
-  private val AcfFmt = "acf_daily_cents:v1"
-  private val ActivityFmt = "activity_days:v1" // shared: growthStream + wauStream
-  private val WmCountsFmt = "wm_counts:v1"
-  private val WmHiFmt = "wm_hi:v2"
-
-  /** One incremental fold (exposed for specs + replay proof). */
-  def decayedAggStep(batch: DataFrame, tableDir: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val basePartials = readState(spark, tableDir, DecayedFmt, beforeBatch = Some(batchId))
-    val batchPartials = graft.queries.ExtraQueries3.decayedPartials(batch)
-    val merged = basePartials match {
-      case None => batchPartials
-      case Some(b) => b.unionByName(batchPartials)
-        .groupBy("event_type")
-        .agg(sum(col("n")).cast("long").as("n"),
-          sum(col("wsum_fp")).cast(org.apache.spark.sql.types.DecimalType(38, 0)).as("wsum_fp"),
-          sum(col("vsum_fp")).cast(org.apache.spark.sql.types.DecimalType(38, 0)).as("vsum_fp"))
-    }
-    writeState(merged, tableDir, batchId, DecayedFmt)
+    /** Published report from the standing state. Reads through [[state]]
+      * so the `_state_format` refusal contract covers the report path
+      * too: a pre-header or alien-kernel state dir is refused loudly,
+      * never silently reinterpreted (r10 ADVICE). */
+    def report(spark: SparkSession, tableDir: String): DataFrame =
+      publish(state(spark, tableDir + leaf, format, empty).getOrElse(emptyOf(spark, empty)))
   }
 
-  /** Standing decayed partials: newest version, or newest strictly
-    * before `beforeBatch` (the replay-safe base for that batch's step). */
-  def decayedState(spark: org.apache.spark.sql.SparkSession, tableDir: String,
-      beforeBatch: Option[Long] = None): Option[DataFrame] = {
-    val dir = new java.io.File(tableDir)
-    val versions = Option(dir.list()).getOrElse(Array.empty[String])
-      .filter(_.matches("v\\d{12}")).map(v => v.drop(1).toLong)
-      .filter(v => beforeBatch.forall(v < _))
-    if (versions.isEmpty) None
-    else Some(spark.read.parquet(f"$tableDir/v${versions.max}%012d"))
-  }
-
-  /** Published report from the standing state — r64's exact shape.
-    * Reads through [[readState]] so the `_state_format` refusal contract
-    * covers the report path too: a pre-header or alien-kernel state dir
-    * is refused loudly, never silently reinterpreted (r10 ADVICE). */
-  def decayedReport(spark: org.apache.spark.sql.SparkSession, tableDir: String): DataFrame =
-    graft.queries.ExtraQueries3.decayedFinal(
-      readState(spark, tableDir, DecayedFmt).getOrElse(
-        spark.emptyDataFrame.select(lit("").as("event_type"), lit(0L).as("n"),
-          lit(java.math.BigDecimal.ZERO).as("wsum_fp"), lit(java.math.BigDecimal.ZERO).as("vsum_fp"))
-          .limit(0)))
-
-  // ---- incremental CUSUM changepoint monitor (r81 twin) ----
-
-  /** r81's always-on twin: CUSUM changepoint detection maintained
-    * incrementally. CUSUM itself is NOT additive (the running deviation
-    * depends on the whole series' mean), so the split follows the
-    * mergeable-kernel discipline: the STATE is the (event_type, day,
-    * cnt) daily-count frame — counts sum across arrival waves at any
-    * batch boundary or order — and the CUSUM layer re-derives from that
-    * tiny types×days relation after each merge via the SAME oracled
-    * batch code (`ExtraQueries5.cusumFromDaily`), so the published
-    * changepoint is always exactly what the batch audit would print on
-    * the events seen so far. Corpus-sized work stays incremental; only
-    * the bounded series recomputes. Versioned-state replay discipline
-    * identical to [[decayedAggStream]]. */
-  def cusumStream(events: DataFrame, tableDir: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) => cusumStep(batch, tableDir, batchId)
+  /** Drive a foreachBatch step — any [[StateKernel]]'s `step`, or
+    * [[watermarkStep]] — as an always-on stream into `tableDir`. */
+  def stream(input: DataFrame, tableDir: String,
+      step: (DataFrame, String, Long) => Unit): DataStreamWriter[Row] =
+    input.writeStream.outputMode("append").foreachBatch {
+      (batch: DataFrame, batchId: Long) => step(batch, tableDir, batchId)
     }
 
-  /** One incremental fold (exposed for specs + replay proof). */
-  def cusumStep(batch: DataFrame, tableDir: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val base = readState(spark, s"$tableDir/daily", CusumFmt, beforeBatch = Some(batchId))
-    val batchDaily = graft.queries.ExtraQueries5.dailyCounts(batch)
-    val merged = base match {
-      case None => batchDaily
-      case Some(b) => b.unionByName(batchDaily)
-        .groupBy("event_type", "day")
-        .agg(sum(col("cnt")).cast("long").as("cnt"))
-    }
-    writeState(merged, s"$tableDir/daily", batchId, CusumFmt)
-  }
+  /** r64's twin: a standing per-event_type table of EXACT fixed-point
+    * partials (n, Σ2^(30−age), Σcents·2^(30−age)). Every weight is
+    * absolute against r64's fixed anchor, so the merge is plain integer
+    * addition and the state after any number of batches equals the batch
+    * r64 partials over the union of all events, exactly (the
+    * mergeable-summaries property, here with zero approximation). */
+  val Decayed: StateKernel = StateKernel("decayed", "decayed_partials:v1", "",
+    StructType.fromDDL("event_type STRING, n BIGINT, wsum_fp DECIMAL(38,0), vsum_fp DECIMAL(38,0)"),
+    graft.queries.ExtraQueries3.decayedPartials,
+    _.groupBy("event_type").agg(sum(col("n")).cast("long").as("n"),
+      sum(col("wsum_fp")).cast(DecimalType(38, 0)).as("wsum_fp"),
+      sum(col("vsum_fp")).cast(DecimalType(38, 0)).as("vsum_fp")),
+    graft.queries.ExtraQueries3.decayedFinal)
 
-  /** Published changepoint report from the standing state — r81's
-    * exact shape. */
-  def cusumReport(spark: org.apache.spark.sql.SparkSession, tableDir: String): DataFrame =
-    graft.queries.ExtraQueries5.cusumFromDaily(
-      readState(spark, s"$tableDir/daily", CusumFmt).getOrElse(
-        spark.emptyDataFrame
-          .select(lit("").as("event_type"),
-            lit(java.sql.Date.valueOf("1970-01-01")).as("day"), lit(0L).as("cnt"))
-          .limit(0)))
+  /** r81's twin: CUSUM changepoints. The state is the (event_type, day,
+    * cnt) daily-count frame — counts sum across waves — and the CUSUM
+    * layer (not additive: the running deviation depends on the whole
+    * series' mean) re-derives from that types×days relation. */
+  val Cusum: StateKernel = StateKernel("cusum", "cusum_daily:v1", "/daily",
+    StructType.fromDDL("event_type STRING, day DATE, cnt BIGINT"),
+    graft.queries.ExtraQueries5.dailyCounts,
+    _.groupBy("event_type", "day").agg(sum(col("cnt")).cast("long").as("cnt")),
+    graft.queries.ExtraQueries5.cusumFromDaily)
 
-  // ---- incremental runs-test monitor (r89 twin) ----
+  /** r89's twin over an orders stream: the Wald–Wolfowitz runs test. The
+    * state is the (grp, day, rev) daily-revenue frame — exact DECIMAL sums
+    * are additive — and the runs layer (not additive: a run can span a
+    * batch boundary) re-derives from that series. */
+  val Runs: StateKernel = StateKernel("runs", "runs_daily_rev:v1", "/daily_rev",
+    StructType.fromDDL("grp STRING, day TIMESTAMP_NTZ, rev DECIMAL(38,2)"),
+    graft.queries.ExtraQueries6.dailyRevenue,
+    _.groupBy("grp", "day").agg(sum(col("rev")).cast(DecimalType(38, 2)).as("rev")),
+    graft.queries.ExtraQueries6.runsFromDaily)
 
-  /** r89's always-on twin: the Wald–Wolfowitz runs test maintained
-    * incrementally over an orders stream. Runs statistics are NOT
-    * additive (a run can span a batch boundary, and the up/down signs
-    * depend on neighboring days), so the split follows the
-    * mergeable-kernel discipline: the STATE is the (grp, day, rev)
-    * daily-revenue frame — exact DECIMAL sums are additive across
-    * arrival waves at any batch boundary or order — and the runs layer
-    * re-derives from that tiny series after each merge via the SAME
-    * oracled batch code (`ExtraQueries6.runsFromDaily`), so the
-    * published z is always exactly what the batch audit would print on
-    * the orders seen so far. Versioned-state replay discipline
-    * identical to [[cusumStream]]. */
-  def runsStream(orders: DataFrame, tableDir: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    orders.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) => runsStep(batch, tableDir, batchId)
-    }
+  /** r78's twin: the cumulative-distinct adoption curve. The state is the
+    * (event_type, user_id, first_day) frame; MIN is idempotent and
+    * commutative, so a user seen in three waves keeps their earliest
+    * day. */
+  val Adoption: StateKernel = StateKernel("adoption", "adoption_first_days:v1", "/first_days",
+    StructType.fromDDL("event_type STRING, user_id BIGINT, first_day INT"),
+    graft.queries.ExtraQueries4.firstDays,
+    _.groupBy("event_type", "user_id").agg(min(col("first_day")).as("first_day")),
+    graft.queries.ExtraQueries4.adoptionCurve)
 
-  /** One incremental fold (exposed for specs + replay proof). */
-  def runsStep(batch: DataFrame, tableDir: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val base = readState(spark, s"$tableDir/daily_rev", RunsFmt, beforeBatch = Some(batchId))
-    val batchDaily = graft.queries.ExtraQueries6.dailyRevenue(batch)
-    val merged = base match {
-      case None => batchDaily
-      case Some(b) => b.unionByName(batchDaily)
-        .groupBy("grp", "day")
-        .agg(sum(col("rev")).cast(org.apache.spark.sql.types.DecimalType(38, 2)).as("rev"))
-    }
-    writeState(merged, s"$tableDir/daily_rev", batchId, RunsFmt)
-  }
+  /** r96's twin over an orders stream: the daily-revenue ACF. The state
+    * is the (day, cents) frame — cent sums are additive — and the ACF
+    * (every lag term couples the whole series through the global mean)
+    * re-derives from that #days-row series. */
+  val Acf: StateKernel = StateKernel("acf", "acf_daily_cents:v1", "/daily_cents",
+    StructType.fromDDL("day DATE, x BIGINT"),
+    graft.queries.ExtraQueries7.dailyCents,
+    _.groupBy("day").agg(sum(col("x")).cast(LongType).as("x")),
+    graft.queries.ExtraQueries7.acfFromDaily)
 
-  /** Published runs-test report from the standing state — r89's exact
-    * shape. */
-  def runsReport(spark: org.apache.spark.sql.SparkSession, tableDir: String): DataFrame =
-    graft.queries.ExtraQueries6.runsFromDaily(
-      readState(spark, s"$tableDir/daily_rev", RunsFmt).getOrElse(
-        spark.emptyDataFrame
-          .select(lit("").as("grp"),
-            lit(java.time.LocalDateTime.of(1970, 1, 1, 0, 0)).as("day"),
-            lit(BigDecimal(0).bigDecimal).cast(org.apache.spark.sql.types.DecimalType(38, 2)).as("rev"))
-          .limit(0)))
+  /** r95's twin: the new/retained/resurrected/churned DAU decomposition.
+    * The state is the (user_id, day) distinct-activity set; set union is
+    * idempotent and commutative, and the flow columns are re-DERIVED from
+    * that grain rather than accumulated, because a user's FIRST day can
+    * arrive in the last wave and reclassify every later day. */
+  val Growth: StateKernel = StateKernel("growth", "activity_days:v1", "/active_days",
+    StructType.fromDDL("user_id BIGINT, day DATE"),
+    graft.queries.ExtraQueries6.activeDays,
+    _.distinct(),
+    graft.queries.ExtraQueries6.growthFlows)
 
-  // ---- incremental adoption curve (r78 twin) ----
+  /** r105's twin: the trailing-window distinct-user curve over the SAME
+    * standing state as [[Growth]] — the grain is maintained once and
+    * every dashboard derives from it. */
+  val Wau: StateKernel = Growth.copy(name = "wau",
+    publish = graft.queries.ExtraQueries11.wauFromActivity)
 
-  /** r78's always-on twin: the cumulative-distinct adoption curve
-    * maintained incrementally. The state is the (event_type, user_id,
-    * first_day) frame — r78's mergeable kernel: MIN is idempotent and
-    * commutative, so standing state and a micro-batch's firstDays
-    * combine by union + re-min regardless of batch boundaries or
-    * arrival order (a user seen in three waves keeps their earliest
-    * day). Versioned-state replay discipline identical to
-    * [[decayedAggStream]]: each step rebuilds from the newest version
-    * strictly before its batch id, so a re-delivered batch rewrites
-    * the same version with the same content. */
-  def adoptionStream(events: DataFrame, tableDir: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) => adoptionStep(batch, tableDir, batchId)
-    }
+  /** Every single-relation state kernel, in bench-line order. */
+  val StateKernels: Seq[StateKernel] = Seq(Decayed, Cusum, Runs, Adoption, Acf, Growth, Wau)
 
-  /** One incremental min-merge (exposed for specs + replay proof). */
-  def adoptionStep(batch: DataFrame, tableDir: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val base = readState(spark, s"$tableDir/first_days", AdoptionFmt, beforeBatch = Some(batchId))
-    val batchFirst = graft.queries.ExtraQueries4.firstDays(batch)
-    val merged = base match {
-      case None => batchFirst
-      case Some(b) => b.unionByName(batchFirst)
-        .groupBy("event_type", "user_id")
-        .agg(org.apache.spark.sql.functions.min(col("first_day")).as("first_day"))
-    }
-    writeState(merged, s"$tableDir/first_days", batchId, AdoptionFmt)
-  }
+  /** `rows` merged onto the standing `base`, or `rows` alone when there
+    * is no base yet. */
+  private def merged(base: Option[DataFrame], rows: DataFrame,
+      merge: DataFrame => DataFrame): DataFrame =
+    base.fold(rows)(b => merge(b.unionByName(rows)))
 
-  /** Published curve from the standing state — r78's exact shape. */
-  def adoptionReport(spark: org.apache.spark.sql.SparkSession, tableDir: String): DataFrame =
-    graft.queries.ExtraQueries4.adoptionCurve(
-      readState(spark, s"$tableDir/first_days", AdoptionFmt).getOrElse(
-        spark.emptyDataFrame
-          .select(lit("").as("event_type"), lit(0L).as("user_id"), lit(0).as("first_day"))
-          .limit(0)))
+  private def emptyOf(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.List.of[Row](), schema)
 
-  // ---- incremental autocorrelation monitor (r96 twin) ----
-
-  /** r96's always-on twin: the daily-revenue ACF maintained
-    * incrementally. The ACF itself is nothing like additive (every lag
-    * term couples the whole series through the global mean), so the
-    * split follows the mergeable-kernel discipline: the STATE is the
-    * (day, cents) daily-revenue frame — cent sums are additive across
-    * arrival waves at any batch boundary or order — and the ACF layer
-    * re-derives from that bounded #days-row series after each merge via
-    * the SAME oracled batch code (`ExtraQueries7.acfFromDaily`).
-    * Versioned-state replay discipline identical to
-    * [[decayedAggStream]]. */
-  def acfStream(orders: DataFrame, tableDir: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    orders.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) => acfStep(batch, tableDir, batchId)
-    }
-
-  /** One incremental additive fold (exposed for specs + replay proof). */
-  def acfStep(batch: DataFrame, tableDir: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val base = readState(spark, s"$tableDir/daily_cents", AcfFmt, beforeBatch = Some(batchId))
-    val batchDaily = graft.queries.ExtraQueries7.dailyCents(batch)
-    val merged = base match {
-      case None => batchDaily
-      case Some(b) => b.unionByName(batchDaily)
-        .groupBy("day")
-        .agg(sum(col("x")).cast(org.apache.spark.sql.types.LongType).as("x"))
-    }
-    writeState(merged, s"$tableDir/daily_cents", batchId, AcfFmt)
-  }
-
-  /** Published ACF from the standing state — r96's exact shape. */
-  def acfReport(spark: org.apache.spark.sql.SparkSession, tableDir: String): DataFrame =
-    graft.queries.ExtraQueries7.acfFromDaily(
-      readState(spark, s"$tableDir/daily_cents", AcfFmt).getOrElse(
-        spark.emptyDataFrame
-          .select(lit(java.sql.Date.valueOf("1970-01-01")).as("day"), lit(0L).as("x"))
-          .limit(0)))
-
-  // ---- incremental growth accounting (r95 twin) ----
-
-  /** r95's always-on twin: the new/retained/resurrected/churned DAU
-    * decomposition maintained incrementally. The state is the
-    * (user_id, day) distinct-activity set — r95's mergeable kernel:
-    * set union is idempotent and commutative, so standing state and a
-    * micro-batch's activity merge by union+distinct regardless of
-    * batch boundaries or arrival order (a user's FIRST day can arrive
-    * in the last wave and the lag/min re-derivation still reclassifies
-    * every later day from retained/new correctly — which is exactly
-    * why the flow columns are re-DERIVED from the grain rather than
-    * accumulated). Versioned-state replay discipline identical to
-    * [[decayedAggStream]]. */
-  def growthStream(events: DataFrame, tableDir: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) => growthStep(batch, tableDir, batchId)
-    }
-
-  /** One incremental set-union merge (exposed for specs + replay proof). */
-  def growthStep(batch: DataFrame, tableDir: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val base = readState(spark, s"$tableDir/active_days", ActivityFmt, beforeBatch = Some(batchId))
-    val batchActive = graft.queries.ExtraQueries6.activeDays(batch)
-    val merged = base match {
-      case None => batchActive
-      case Some(b) => b.unionByName(batchActive).distinct()
-    }
-    writeState(merged, s"$tableDir/active_days", batchId, ActivityFmt)
-  }
-
-  /** Published decomposition from the standing state — r95's exact
-    * shape, via the same oracled batch derivation. */
-  def growthReport(spark: org.apache.spark.sql.SparkSession, tableDir: String): DataFrame =
-    graft.queries.ExtraQueries6.growthFlows(
-      readState(spark, s"$tableDir/active_days", ActivityFmt).getOrElse(
-        spark.emptyDataFrame
-          .select(lit(0L).as("user_id"),
-            lit(java.sql.Date.valueOf("1970-01-01")).as("day"))
-          .limit(0)))
-
-  /** Atomic versioned-state write shared by the additive/mergeable
-    * foreachBatch folds (decayed aggregate, adoption curve). */
+  /** Atomic versioned-state write: parquet to a temp dir, then rename to
+    * the batch's version dir (replacing a replayed one). */
   private def writeVersion(df: DataFrame, dir: String, batchId: Long): Unit = {
     val tmpDir = s"$dir/_tmp_v$batchId"
     df.coalesce(1).write.mode("overwrite").parquet(tmpDir)
@@ -614,7 +479,8 @@ object StreamingOps {
     * or schema generation. Neither can prove its merge history satisfies
     * the current kernel's contract, so both are refused loudly with the
     * same remedy — replay the log from batch 0, or start a fresh state
-    * dir — never silently reinterpreted. */
+    * dir — never silently reinterpreted. Bump a kernel's format version
+    * whenever its state SCHEMA or merge semantics change. */
   private def checkStateFormat(dir: String, format: String): Unit = {
     val p = java.nio.file.Paths.get(s"$dir/_state_format")
     if (java.nio.file.Files.exists(p)) {
@@ -653,85 +519,57 @@ object StreamingOps {
     writeVersion(df, dir, batchId)
   }
 
-  /** Header-checked versioned-state read: same refusal contract as
-    * [[writeState]], then [[decayedState]]'s newest-version (or
-    * newest-before-batch) semantics. */
-  private def readState(spark: org.apache.spark.sql.SparkSession, dir: String,
-      format: String, beforeBatch: Option[Long] = None): Option[DataFrame] = {
+  /** The refusal contract of [[writeState]], then the path of the newest
+    * version — or the newest strictly before `beforeBatch`, the
+    * replay-safe base for that batch's step. */
+  private def version(dir: String, format: String, beforeBatch: Option[Long]): Option[String] = {
     checkStateFormat(dir, format)
-    decayedState(spark, dir, beforeBatch)
+    val versions = Option(new java.io.File(dir).list()).getOrElse(Array.empty[String])
+      .filter(_.matches("v\\d{12}")).map(v => v.drop(1).toLong)
+      .filter(v => beforeBatch.forall(v < _))
+    if (versions.isEmpty) None else Some(f"$dir/v${versions.max}%012d")
   }
 
-  // ---- incremental rolling-distinct (WAU) monitor (r105 twin) ----
-
-  /** r105's always-on twin: the trailing-window distinct-user curve
-    * maintained incrementally. State is the (user_id, day)
-    * distinct-activity set — the SAME mergeable kernel as
-    * [[growthStream]] (set union: idempotent, commutative, any wave
-    * order), published through r105's oracled contribution-expansion
-    * derivation. One standing state, many reports — growthReport reads
-    * the flow decomposition, wauReport the engagement curve — which is
-    * exactly the lakehouse pattern of maintaining the grain once and
-    * deriving every dashboard from it. Versioned-state replay
-    * discipline identical to [[decayedAggStream]]. */
-  def wauStream(events: DataFrame, tableDir: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) => wauStep(batch, tableDir, batchId)
-    }
-
-  /** One incremental set-union merge (exposed for specs + replay proof). */
-  def wauStep(batch: DataFrame, tableDir: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val base = readState(spark, s"$tableDir/active_days", ActivityFmt, beforeBatch = Some(batchId))
-    val batchActive = graft.queries.ExtraQueries6.activeDays(batch)
-    val merged = base match {
-      case None => batchActive
-      case Some(b) => b.unionByName(batchActive).distinct()
-    }
-    writeState(merged, s"$tableDir/active_days", batchId, ActivityFmt)
-  }
-
-  /** Published engagement curve from the standing state — r105's exact
-    * shape, via the same oracled batch derivation. */
-  def wauReport(spark: org.apache.spark.sql.SparkSession, tableDir: String): DataFrame =
-    graft.queries.ExtraQueries11.wauFromActivity(
-      readState(spark, s"$tableDir/active_days", ActivityFmt).getOrElse(
-        spark.emptyDataFrame
-          .select(lit(0L).as("user_id"),
-            lit(java.sql.Date.valueOf("1970-01-01")).as("day"))
-          .limit(0)))
+  /** Header-checked versioned-state read of [[version]], with the declared
+    * `schema`, so no schema-inference job runs. */
+  def state(spark: SparkSession, dir: String, format: String, schema: StructType,
+      beforeBatch: Option[Long] = None): Option[DataFrame] =
+    version(dir, format, beforeBatch).map(spark.read.schema(schema).parquet(_))
 
   // ---- incremental watermark/late-data monitor (st6 twin) ----
 
-  /** st6's always-on twin: watermark lateness accounting maintained
-    * incrementally. State is TWO relations: the per-type high-water
-    * mark (merged by max — idempotent, commutative) and the (type, day)
-    * classification counts (merged by plain addition). UNLIKE the
-    * additive twins above, the watermark kernel is order-sensitive BY
-    * DEFINITION — an event's on-time/late/dropped verdict depends on
-    * what arrived before it — so the merge contract is that waves
-    * PARTITION the arrival order (each micro-batch is a contiguous
-    * arrival-sequence range, exactly how a log-offset source delivers).
-    * Under that contract the per-batch classification seeded with the
-    * carried high-water mark reproduces the batch st6 verdicts row for
-    * row — and the contract is ENFORCED, not just documented: the state
-    * carries the max processed arrival_seq per type, and a batch that
-    * does not start strictly past it is rejected loudly (see
-    * [[watermarkStep]]). Versioned-state replay discipline identical to
-    * [[decayedAggStream]]: a re-delivered batch rebuilds from the
-    * pre-batch base and rewrites the same version. */
-  def watermarkStream(events: DataFrame, tableDir: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) => watermarkStep(batch, tableDir, batchId)
-    }
+  private val WmCountsFmt = "wm_counts:v1"
+  /** v2 because v1 (round 8) lacked the arrival-order `state_seq` column. */
+  private val WmHiFmt = "wm_hi:v2"
+  private val WmCounts = StructType.fromDDL(
+    "event_type STRING, day DATE, n_events BIGINT, on_time BIGINT, late_accepted BIGINT, dropped BIGINT")
 
-  /** One incremental classify-and-merge (exposed for specs + replay). */
+  /** st6's always-on twin (drive it with [[stream]]): watermark lateness
+    * accounting maintained incrementally. State is TWO relations: the
+    * per-type high-water mark (merged by max — idempotent, commutative)
+    * and the (type, day) classification counts (merged by plain
+    * addition). UNLIKE the [[StateKernel]]s, the watermark kernel is
+    * order-sensitive BY DEFINITION — an event's on-time/late/dropped
+    * verdict depends on what arrived before it — so the merge contract is
+    * that waves PARTITION the arrival order (each micro-batch is a
+    * contiguous arrival-sequence range, exactly how a log-offset source
+    * delivers). Under that contract the per-batch classification seeded
+    * with the carried high-water mark reproduces the batch st6 verdicts
+    * row for row — and the contract is ENFORCED, not just documented: the
+    * state carries the max processed arrival_seq per type, and a batch
+    * that does not start strictly past it is rejected loudly.
+    * Versioned-state replay discipline identical to the [[StateKernel]]s:
+    * a re-delivered batch rebuilds from the pre-batch base and rewrites
+    * the same version. */
   def watermarkStep(batch: DataFrame, tableDir: String, batchId: Long): Unit = {
     val E10 = graft.queries.ExtraQueries10
     val spark = batch.sparkSession
-    val baseHi = readState(spark, s"$tableDir/wm_hi", WmHiFmt, beforeBatch = Some(batchId))
-    val baseCounts = readState(spark, s"$tableDir/wm_counts", WmCountsFmt, beforeBatch = Some(batchId))
+    val hiVersion = version(s"$tableDir/wm_hi", WmHiFmt, Some(batchId))
+    val countsVersion = version(s"$tableDir/wm_counts", WmCountsFmt, Some(batchId))
     val arr = E10.wmArrivals(batch)
+    val batchHi = arr.groupBy("event_type")
+      .agg(max(col("mts")).as("state_hi"), max(col("arrival_seq")).as("state_seq"))
+    val baseHi = hiVersion.map(spark.read.schema(batchHi.schema).parquet(_))
     // ENFORCE the partition-the-arrival-order contract instead of
     // documenting it: the state carries the max processed arrival_seq
     // per type (state_seq); a batch whose min arrival_seq is not
@@ -740,17 +578,6 @@ object StreamingOps {
     // on_time/late/dropped split would silently diverge from batch st6
     // — fail loudly. Bounded driver data: ≤ |event types| rows.
     baseHi.foreach { b =>
-      // state written before the round-8 format carries no state_seq
-      // column; selecting it below would surface as a raw
-      // AnalysisException instead of a contract-style error (r8 advice).
-      // The old format cannot prove the arrival-order contract held for
-      // the rows it already merged, so refuse it explicitly rather than
-      // backfill a fake seq and vouch for unverifiable history.
-      require(b.columns.contains("state_seq"),
-        s"watermarkStep: incompatible wm_hi state format at $tableDir/wm_hi " +
-          s"(columns ${b.columns.mkString(", ")} lack state_seq — state written " +
-          "by a pre-arrival-seq build; rebuild the state by replaying the log " +
-          "from batch 0, or start a fresh state dir)")
       val viol = arr.groupBy("event_type").agg(min(col("arrival_seq")).as("batch_lo"))
         .join(b.select(col("event_type"), col("state_seq")), Seq("event_type"))
         .filter(col("batch_lo") <= col("state_seq"))
@@ -763,36 +590,21 @@ object StreamingOps {
     }
     val counts = E10.wmCounts(
       E10.wmClassify(arr, baseHi.map(_.select("event_type", "state_hi"))))
-    val mergedCounts = baseCounts match {
-      case None => counts
-      case Some(b) => b.unionByName(counts)
-        .groupBy("event_type", "day")
-        .agg(sum(col("n_events")).cast(org.apache.spark.sql.types.LongType).as("n_events"),
-          sum(col("on_time")).cast(org.apache.spark.sql.types.LongType).as("on_time"),
-          sum(col("late_accepted")).cast(org.apache.spark.sql.types.LongType).as("late_accepted"),
-          sum(col("dropped")).cast(org.apache.spark.sql.types.LongType).as("dropped"))
-    }
-    val batchHi = arr.groupBy("event_type")
-      .agg(max(col("mts")).as("state_hi"), max(col("arrival_seq")).as("state_seq"))
-    val mergedHi = baseHi match {
-      case None => batchHi
-      case Some(b) => b.unionByName(batchHi)
-        .groupBy("event_type")
-        .agg(max(col("state_hi")).as("state_hi"), max(col("state_seq")).as("state_seq"))
-    }
-    writeState(mergedCounts, s"$tableDir/wm_counts", batchId, WmCountsFmt)
-    writeState(mergedHi, s"$tableDir/wm_hi", batchId, WmHiFmt)
+    val baseCounts = countsVersion.map(spark.read.schema(counts.schema).parquet(_))
+    writeState(merged(baseCounts, counts, _.groupBy("event_type", "day")
+      .agg(sum(col("n_events")).cast(LongType).as("n_events"),
+        sum(col("on_time")).cast(LongType).as("on_time"),
+        sum(col("late_accepted")).cast(LongType).as("late_accepted"),
+        sum(col("dropped")).cast(LongType).as("dropped"))),
+      s"$tableDir/wm_counts", batchId, WmCountsFmt)
+    writeState(merged(baseHi, batchHi, _.groupBy("event_type")
+      .agg(max(col("state_hi")).as("state_hi"), max(col("state_seq")).as("state_seq"))),
+      s"$tableDir/wm_hi", batchId, WmHiFmt)
   }
 
   /** Published accounting from the standing state — st6's exact shape. */
-  def watermarkReport(spark: org.apache.spark.sql.SparkSession, tableDir: String): DataFrame =
-    readState(spark, s"$tableDir/wm_counts", WmCountsFmt).getOrElse(
-      spark.emptyDataFrame
-        .select(lit("").as("event_type"),
-          lit(java.sql.Date.valueOf("1970-01-01")).as("day"),
-          lit(0L).as("n_events"), lit(0L).as("on_time"),
-          lit(0L).as("late_accepted"), lit(0L).as("dropped"))
-        .limit(0))
+  def watermarkReport(spark: SparkSession, tableDir: String): DataFrame =
+    state(spark, s"$tableDir/wm_counts", WmCountsFmt, WmCounts).getOrElse(emptyOf(spark, WmCounts))
       .orderBy("event_type", "day")
 
   // ---- custom state: cross-batch inference batch packer (p18 twin) ----

@@ -1,11 +1,9 @@
 package graft.etl
 
 import java.nio.file.{Files, Path}
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
+import graft.SparkTestSession.jobsOf
 
 /** The driver-side page walk (etl.py:115-158): no Spark job for the token
   * chain or the declared-schema page scan, the reference's token rule and
@@ -14,29 +12,6 @@ import graft.SparkTestSession
 class StudiesSourceSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val pages = "fixtures/pages" // relative to the project root, the tests' working dir
-
-  /** `body`'s result and the Spark jobs it started on this thread (tagged
-    * by a local property, so jobs of other threads are not counted). */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val key = "graft.test.jobs"
-    val tag = java.util.UUID.randomUUID().toString
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty(key) == tag) jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty(key, tag)
-    try {
-      val r = body
-      ListenerBusDrain(sc)
-      (r, jobs.get)
-    } finally {
-      sc.setLocalProperty(key, null)
-      sc.removeSparkListener(listener)
-    }
-  }
 
   /** A temp page chain: file name -> body. */
   private def chain(files: (String, String)*): String = {

@@ -69,4 +69,13 @@ class LoopIsolationSpec extends AnyFunSuite {
       assert(Await.result(fB, Duration.Inf) == serialB, "concurrent components diverged")
     } finally pool.shutdown()
   }
+
+  test("a repeat loop-kernel invocation compiles no generated classes") {
+    // each invocation runs on a fresh clone; with artifact isolation on,
+    // a clone gets its own executor classloader and recompiles its plan
+    run("s12_pagerank").collect()
+    val before = org.apache.spark.CodegenCompilations()
+    run("s12_pagerank").collect()
+    assert(org.apache.spark.CodegenCompilations() - before == 0)
+  }
 }

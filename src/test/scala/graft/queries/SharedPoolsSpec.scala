@@ -150,4 +150,12 @@ class SharedPoolsSpec extends AnyFunSuite {
       s"PoolWarmup registry out of sync: source has ${inSource -- registered} unregistered, " +
         s"registry has ${registered -- inSource} orphaned")
   }
+
+  test("every PoolWarmup key has a raw build, and each resolves at sf0.001") {
+    // graft.Explain pool:<key> prints these plans
+    assert(PoolWarmup.rawBuilds.map(_._1) == PoolWarmup.pools.map(_._1))
+    PoolWarmup.rawBuilds.foreach { case (key, build) =>
+      assert(build(spark, "/root/testdata/sf0.001").queryExecution.analyzed.resolved, key)
+    }
+  }
 }

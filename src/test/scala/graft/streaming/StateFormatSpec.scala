@@ -25,15 +25,9 @@ class StateFormatSpec extends AnyFunSuite {
     batch.limit(1).coalesce(1).write.mode("overwrite").parquet(f"$dir/v${0L}%012d")
   }
 
-  private val steps: Seq[(String, (org.apache.spark.sql.DataFrame, String, Long) => Unit, String)] = Seq(
-    ("decayedAggStep", StreamingOps.decayedAggStep, ""),
-    ("cusumStep", StreamingOps.cusumStep, "/daily"),
-    ("runsStep", StreamingOps.runsStep, "/daily_rev"),
-    ("adoptionStep", StreamingOps.adoptionStep, "/first_days"),
-    ("acfStep", StreamingOps.acfStep, "/daily_cents"),
-    ("growthStep", StreamingOps.growthStep, "/active_days"),
-    ("wauStep", StreamingOps.wauStep, "/active_days"),
-    ("watermarkStep", StreamingOps.watermarkStep, "/wm_hi"))
+  private val steps: Seq[(String, (org.apache.spark.sql.DataFrame, String, Long) => Unit, String)] =
+    StreamingOps.StateKernels.map(k => (k.name, k.step _, k.leaf)) :+
+      (("watermark", StreamingOps.watermarkStep _, "/wm_hi"))
 
   test("every state kernel refuses a versioned dir with no format header") {
     steps.foreach { case (name, step, stateLeaf) =>
@@ -69,14 +63,14 @@ class StateFormatSpec extends AnyFunSuite {
     val noHeader = Files.createTempDirectory("fmt_report_nohdr").toString
     plantUnversioned(noHeader)
     val e1 = intercept[IllegalArgumentException] {
-      StreamingOps.decayedReport(spark, noHeader)
+      StreamingOps.Decayed.report(spark, noHeader)
     }
     assert(e1.getMessage.contains("unversioned state"))
 
     val alien = Files.createTempDirectory("fmt_report_alien").toString
     Files.writeString(Paths.get(s"$alien/_state_format"), "alien_kernel:v9")
     val e2 = intercept[IllegalArgumentException] {
-      StreamingOps.decayedReport(spark, alien)
+      StreamingOps.Decayed.report(spark, alien)
     }
     assert(e2.getMessage.contains("format mismatch"))
   }
@@ -88,25 +82,59 @@ class StateFormatSpec extends AnyFunSuite {
     // the durable postcondition: header exists, alone in the dir, reads
     // as fresh state; then a later step accepts and versions normally.
     val dir = Files.createTempDirectory("fmt_hdr_first").toString
-    StreamingOps.decayedAggStep(batch, dir, 0L)
+    StreamingOps.Decayed.step(batch, dir, 0L)
     assert(Files.exists(Paths.get(s"$dir/_state_format")))
     // simulate the crash window's surviving prefix: header only
     val dir2 = Files.createTempDirectory("fmt_hdr_only").toString
     Files.writeString(Paths.get(s"$dir2/_state_format"), "decayed_partials:v1")
     // header-only dir reads as fresh (no versions) and accepts a write
-    assert(StreamingOps.decayedState(spark, dir2).isEmpty)
-    StreamingOps.decayedAggStep(batch, dir2, 0L)
-    assert(StreamingOps.decayedReport(spark, dir2).collect().nonEmpty)
+    assert(StreamingOps.state(spark, dir2, StreamingOps.Decayed.format, StreamingOps.Decayed.empty).isEmpty)
+    StreamingOps.Decayed.step(batch, dir2, 0L)
+    assert(StreamingOps.Decayed.report(spark, dir2).collect().nonEmpty)
   }
 
   test("a fresh dir gets stamped on first write and replays accept the header") {
     val dir = Files.createTempDirectory("fmt_ok").toString
-    StreamingOps.decayedAggStep(batch, dir, 0L)
+    StreamingOps.Decayed.step(batch, dir, 0L)
     val header = Files.readString(Paths.get(s"$dir/_state_format")).trim
     assert(header == "decayed_partials:v1")
     // second batch and a replay of it both pass the header check
-    StreamingOps.decayedAggStep(batch, dir, 1L)
-    StreamingOps.decayedAggStep(batch, dir, 1L)
-    assert(StreamingOps.decayedReport(spark, dir).collect().nonEmpty)
+    StreamingOps.Decayed.step(batch, dir, 1L)
+    StreamingOps.Decayed.step(batch, dir, 1L)
+    assert(StreamingOps.Decayed.report(spark, dir).collect().nonEmpty)
+  }
+
+  /** A fixture batch of the stream each kernel folds: runs and acf fold
+    * orders, the others events. */
+  private def inputOf(k: StreamingOps.StateKernel) =
+    if (Set("runs", "acf")(k.name)) graft.Tables.orders(spark, sf).limit(50) else batch
+
+  private def fieldsOf(schema: org.apache.spark.sql.types.StructType) =
+    schema.fields.map(f => f.name -> f.dataType).toSeq
+
+  test("every state kernel's fold, merge and declared state schema agree") {
+    // steps read their base with the folded rows' schema and reports read
+    // with the declared one, so both must name the same columns and types
+    StreamingOps.StateKernels.foreach { k =>
+      val rows = k.fold(inputOf(k))
+      assert(fieldsOf(rows.schema) == fieldsOf(k.empty), s"${k.name}: fold vs declared state")
+      assert(fieldsOf(k.merge(rows.unionByName(rows)).schema) == fieldsOf(k.empty),
+        s"${k.name}: merge vs declared state")
+    }
+  }
+
+  test("a step's base read with its rows' schema runs no Spark job") {
+    StreamingOps.StateKernels.foreach { k =>
+      val dir = Files.createTempDirectory(s"fmt_jobs_${k.name}").toString
+      val input = inputOf(k)
+      k.step(input, dir, 0L)
+      val schema = k.fold(input).schema
+      val (base, jobs) = SparkTestSession.jobsOf(
+        StreamingOps.state(spark, s"$dir${k.leaf}", k.format, schema, Some(1L)))
+      assert(base.isDefined && jobs == 0, s"${k.name}: $jobs jobs for the declared base read")
+      // the listener sees an inferred read of the same version
+      val (_, inferJobs) = SparkTestSession.jobsOf(spark.read.parquet(f"$dir${k.leaf}/v${0L}%012d"))
+      assert(inferJobs > 0, s"${k.name}: schema inference ran no job")
+    }
   }
 }

@@ -15,14 +15,13 @@ class StreamBenchSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   test("the bench kernel registry covers every versioned-state kernel") {
-    // the state-format contract suite is the authority on what a
-    // "state kernel" is — the bench must not silently skip one
-    val stateKernels = Set("decayedAggStep", "cusumStep", "runsStep", "adoptionStep",
-      "acfStep", "growthStep", "wauStep", "watermarkStep")
+    // the state-format contract suite drives the same list — the bench
+    // must not silently skip one
+    val stateKernels = StreamingOps.StateKernels.map(_.name).toSet + "watermark"
     val benched = StreamBench.kernels.map(_._1).toSet
     assert(benched == Set("decayed", "cusum", "runs", "adoption", "acf",
       "growth", "wau", "watermark"))
-    assert(benched.size == stateKernels.size,
+    assert(benched == stateKernels,
       "every kernel with a _state_format contract needs a stream: bench line")
   }
 

@@ -430,7 +430,7 @@ class StreamingSpec extends AnyFunSuite {
     val (b1, rest) = rows.splitAt(rows.length / 5)
     val (b2, b3) = rest.splitAt(rest.length / 2)
     val stream = MemoryStream[E]
-    val q = StreamingOps.decayedAggStream(stream.toDF(), dir)
+    val q = StreamingOps.stream(stream.toDF(), dir, StreamingOps.Decayed.step)
       .option("checkpointLocation", s"$dir/_ckpt").start()
     try {
       stream.addData(b1.toSeq); q.processAllAvailable()
@@ -439,12 +439,12 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
     val want = graft.SparkEntry.queries("r64_decayed_agg")(spark, sf)
       .collect().map(_.toSeq).toSet
-    val got = StreamingOps.decayedReport(spark, dir).collect().map(_.toSeq).toSet
+    val got = StreamingOps.Decayed.report(spark, dir).collect().map(_.toSeq).toSet
     assert(got == want, "incremental state diverged from the oracled batch r64")
     // replay idempotency: re-running the LAST step (same batch id, same
     // rows) must rebuild from the pre-batch base and leave state unchanged
-    StreamingOps.decayedAggStep(spark.createDataFrame(b3.toIndexedSeq), dir, 2L)
-    val replayed = StreamingOps.decayedReport(spark, dir).collect().map(_.toSeq).toSet
+    StreamingOps.Decayed.step(spark.createDataFrame(b3.toIndexedSeq), dir, 2L)
+    val replayed = StreamingOps.Decayed.report(spark, dir).collect().map(_.toSeq).toSet
     assert(replayed == want, "replayed batch double-counted into additive state")
   }
 
@@ -461,7 +461,7 @@ class StreamingSpec extends AnyFunSuite {
     val (b1, rest) = rows.reverse.splitAt(rows.length / 3)
     val (b2, b3) = rest.splitAt(rest.length / 2)
     val stream = MemoryStream[E]
-    val q = StreamingOps.growthStream(stream.toDF(), dir)
+    val q = StreamingOps.stream(stream.toDF(), dir, StreamingOps.Growth.step)
       .option("checkpointLocation", s"$dir/_ckpt").start()
     try {
       stream.addData(b1.toSeq); q.processAllAvailable()
@@ -470,11 +470,11 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
     val want = graft.SparkEntry.queries("r95_growth_accounting")(spark, sf)
       .collect().map(_.toSeq).toSet
-    val got = StreamingOps.growthReport(spark, dir).collect().map(_.toSeq).toSet
+    val got = StreamingOps.Growth.report(spark, dir).collect().map(_.toSeq).toSet
     assert(got == want, "incremental growth state diverged from the oracled batch r95")
     // replay idempotency: re-running the LAST step must not perturb state
-    StreamingOps.growthStep(spark.createDataFrame(b3.toIndexedSeq), dir, 2L)
-    val replayed = StreamingOps.growthReport(spark, dir).collect().map(_.toSeq).toSet
+    StreamingOps.Growth.step(spark.createDataFrame(b3.toIndexedSeq), dir, 2L)
+    val replayed = StreamingOps.Growth.report(spark, dir).collect().map(_.toSeq).toSet
     assert(replayed == want, "replayed batch perturbed the activity-set state")
   }
 
@@ -490,7 +490,7 @@ class StreamingSpec extends AnyFunSuite {
     val (b1, rest) = rows.reverse.splitAt(rows.length / 3)
     val (b2, b3) = rest.splitAt(rest.length / 2)
     val stream = MemoryStream[E]
-    val q = StreamingOps.adoptionStream(stream.toDF(), dir)
+    val q = StreamingOps.stream(stream.toDF(), dir, StreamingOps.Adoption.step)
       .option("checkpointLocation", s"$dir/_ckpt").start()
     try {
       stream.addData(b1.toSeq); q.processAllAvailable()
@@ -499,13 +499,13 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
     val want = graft.SparkEntry.queries("r78_cumulative_users")(spark, sf)
       .collect().map(_.toSeq).toSet
-    val got = StreamingOps.adoptionReport(spark, dir).collect().map(_.toSeq).toSet
+    val got = StreamingOps.Adoption.report(spark, dir).collect().map(_.toSeq).toSet
     assert(got == want, "incremental adoption state diverged from the oracled batch r78")
     // replay idempotency: re-running the LAST step must not perturb state
     // (min is idempotent, but the versioned rebuild is what guarantees it
     // even for a re-delivered batch id)
-    StreamingOps.adoptionStep(spark.createDataFrame(b3.toIndexedSeq), dir, 2L)
-    val replayed = StreamingOps.adoptionReport(spark, dir).collect().map(_.toSeq).toSet
+    StreamingOps.Adoption.step(spark.createDataFrame(b3.toIndexedSeq), dir, 2L)
+    val replayed = StreamingOps.Adoption.report(spark, dir).collect().map(_.toSeq).toSet
     assert(replayed == want, "replayed batch perturbed the adoption state")
   }
 
@@ -521,7 +521,7 @@ class StreamingSpec extends AnyFunSuite {
     val (b1, rest) = rows.reverse.splitAt(rows.length / 3)
     val (b2, b3) = rest.splitAt(rest.length / 2)
     val stream = MemoryStream[E]
-    val q = StreamingOps.cusumStream(stream.toDF(), dir)
+    val q = StreamingOps.stream(stream.toDF(), dir, StreamingOps.Cusum.step)
       .option("checkpointLocation", s"$dir/_ckpt").start()
     try {
       stream.addData(b1.toSeq); q.processAllAvailable()
@@ -530,12 +530,12 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
     val want = graft.SparkEntry.queries("r81_cusum_changepoint")(spark, sf)
       .collect().map(_.toSeq).toSet
-    val got = StreamingOps.cusumReport(spark, dir).collect().map(_.toSeq).toSet
+    val got = StreamingOps.Cusum.report(spark, dir).collect().map(_.toSeq).toSet
     assert(got == want, "incremental CUSUM state diverged from the oracled batch r81")
     // replay idempotency: re-running the LAST step (same batch id, same
     // rows) must rebuild from the pre-batch base and leave state unchanged
-    StreamingOps.cusumStep(spark.createDataFrame(b3.toIndexedSeq), dir, 2L)
-    val replayed = StreamingOps.cusumReport(spark, dir).collect().map(_.toSeq).toSet
+    StreamingOps.Cusum.step(spark.createDataFrame(b3.toIndexedSeq), dir, 2L)
+    val replayed = StreamingOps.Cusum.report(spark, dir).collect().map(_.toSeq).toSet
     assert(replayed == want, "replayed batch double-counted into additive daily state")
   }
 
@@ -549,7 +549,7 @@ class StreamingSpec extends AnyFunSuite {
     val (b1, rest) = rows.reverse.splitAt(rows.length / 3)
     val (b2, b3) = rest.splitAt(rest.length / 2)
     val stream = MemoryStream[O]
-    val q = StreamingOps.acfStream(stream.toDF(), dir)
+    val q = StreamingOps.stream(stream.toDF(), dir, StreamingOps.Acf.step)
       .option("checkpointLocation", s"$dir/_ckpt").start()
     try {
       stream.addData(b1.toSeq); q.processAllAvailable()
@@ -558,11 +558,11 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
     val want = graft.SparkEntry.queries("r96_autocorrelation")(spark, sf)
       .collect().map(_.toSeq).toSet
-    val got = StreamingOps.acfReport(spark, dir).collect().map(_.toSeq).toSet
+    val got = StreamingOps.Acf.report(spark, dir).collect().map(_.toSeq).toSet
     assert(got == want, "incremental ACF state diverged from the oracled batch r96")
     // replay idempotency: re-running the LAST step must not double-count
-    StreamingOps.acfStep(spark.createDataFrame(b3.toIndexedSeq), dir, 2L)
-    val replayed = StreamingOps.acfReport(spark, dir).collect().map(_.toSeq).toSet
+    StreamingOps.Acf.step(spark.createDataFrame(b3.toIndexedSeq), dir, 2L)
+    val replayed = StreamingOps.Acf.report(spark, dir).collect().map(_.toSeq).toSet
     assert(replayed == want, "replayed batch double-counted into additive state")
   }
 
@@ -576,7 +576,7 @@ class StreamingSpec extends AnyFunSuite {
     val (b1, rest) = rows.reverse.splitAt(rows.length / 3)
     val (b2, b3) = rest.splitAt(rest.length / 2)
     val stream = MemoryStream[O]
-    val q = StreamingOps.runsStream(stream.toDF(), dir)
+    val q = StreamingOps.stream(stream.toDF(), dir, StreamingOps.Runs.step)
       .option("checkpointLocation", s"$dir/_ckpt").start()
     try {
       stream.addData(b1.toSeq); q.processAllAvailable()
@@ -585,12 +585,12 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
     val want = graft.SparkEntry.queries("r89_runs_test")(spark, sf)
       .collect().map(_.toSeq).toSet
-    val got = StreamingOps.runsReport(spark, dir).collect().map(_.toSeq).toSet
+    val got = StreamingOps.Runs.report(spark, dir).collect().map(_.toSeq).toSet
     assert(got == want, "incremental runs state diverged from the oracled batch r89")
     // replay idempotency: re-running the LAST step (same batch id, same
     // rows) must rebuild from the pre-batch base and leave state unchanged
-    StreamingOps.runsStep(spark.createDataFrame(b3.toIndexedSeq), dir, 2L)
-    val replayed = StreamingOps.runsReport(spark, dir).collect().map(_.toSeq).toSet
+    StreamingOps.Runs.step(spark.createDataFrame(b3.toIndexedSeq), dir, 2L)
+    val replayed = StreamingOps.Runs.report(spark, dir).collect().map(_.toSeq).toSet
     assert(replayed == want, "replayed batch double-counted into additive daily state")
   }
 
@@ -606,7 +606,7 @@ class StreamingSpec extends AnyFunSuite {
     val (b1, rest) = rows.reverse.splitAt(rows.length / 3)
     val (b2, b3) = rest.splitAt(rest.length / 2)
     val stream = MemoryStream[E]
-    val q = StreamingOps.wauStream(stream.toDF(), dir)
+    val q = StreamingOps.stream(stream.toDF(), dir, StreamingOps.Wau.step)
       .option("checkpointLocation", s"$dir/_ckpt").start()
     try {
       stream.addData(b1.toSeq); q.processAllAvailable()
@@ -615,10 +615,10 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
     val want = graft.SparkEntry.queries("r105_rolling_distinct")(spark, sf)
       .collect().map(_.toSeq).toSet
-    val got = StreamingOps.wauReport(spark, dir).collect().map(_.toSeq).toSet
+    val got = StreamingOps.Wau.report(spark, dir).collect().map(_.toSeq).toSet
     assert(got == want, "incremental WAU state diverged from the oracled batch r105")
-    StreamingOps.wauStep(spark.createDataFrame(b3.toIndexedSeq), dir, 2L)
-    val replayed = StreamingOps.wauReport(spark, dir).collect().map(_.toSeq).toSet
+    StreamingOps.Wau.step(spark.createDataFrame(b3.toIndexedSeq), dir, 2L)
+    val replayed = StreamingOps.Wau.report(spark, dir).collect().map(_.toSeq).toSet
     assert(replayed == want, "replayed batch corrupted the distinct-activity state")
   }
 
@@ -628,7 +628,7 @@ class StreamingSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("wm").toString
     // the watermark kernel is order-sensitive by definition, so waves
     // must PARTITION the arrival order (the log-offset-source contract
-    // documented on watermarkStream) — split on the jittered sequence
+    // documented on watermarkStep) — split on the jittered sequence
     val ordered = graft.queries.ExtraQueries10.wmArrivals(eventsBatch)
       .orderBy("arrival_seq", "event_id").select("event_id").collect().map(_.getLong(0))
     val rows = eventsBatch
@@ -636,7 +636,7 @@ class StreamingSpec extends AnyFunSuite {
       .as[E].collect().map(e => e.event_id -> e).toMap
     val waves = ordered.map(rows).grouped(math.max(1, ordered.length / 3 + 1)).toSeq
     val stream = MemoryStream[E]
-    val q = StreamingOps.watermarkStream(stream.toDF(), dir)
+    val q = StreamingOps.stream(stream.toDF(), dir, StreamingOps.watermarkStep)
       .option("checkpointLocation", s"$dir/_ckpt").start()
     try {
       waves.foreach { wv => stream.addData(wv.toSeq); q.processAllAvailable() }
