@@ -10,7 +10,10 @@ import org.apache.spark.sql.execution.FormattedMode
   * (unmaterialized) plan instead: a pool consumer's plan only shows the
   * parquet scan of the materialized pool, while the build is the part a
   * `pool:<key>` bench line times ([[queries.PoolWarmup.rawBuilds]]); an
-  * unknown key exits 1, naming the known keys.
+  * unknown key exits 1, naming the known keys. Pools are built in
+  * rebuild mode, as Verify and Bench build them, so the builds a plan
+  * needs (the pools `dedup_clusters` and `lsh_sweep` read) land in the
+  * JVM-private root and leave nothing behind.
   *
   * Usage: runMain graft.Explain [queryName | pool:<key> ...] */
 object Explain {
@@ -22,6 +25,7 @@ object Explain {
         queries.PoolWarmup.rawBuilds.map(_._1).mkString(", "))
       sys.exit(1)
     }
+    System.setProperty("graft.pool.rebuild", "1")
     val spark = GraftSession.start("ERROR")
     val names = if (args.nonEmpty) args.toSeq
       else Seq("q02_filter_project", "q05_region_revenue", "q01_pricing_summary", "s01_ann_bruteforce")

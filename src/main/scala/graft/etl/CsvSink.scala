@@ -20,6 +20,11 @@ import org.apache.spark.sql.{DataFrame, functions => F}
   * `numFiles=1` mirrors the reference's single local file; at scale leave
   * it 0 (one file per partition) — the header repeats per part-file,
   * which is the standard distributed-CSV contract.
+  *
+  * Both writers fill a tmp dir next to the local output `path` and
+  * publish it over `path` whole ([[graft.Publish.dir]]): a failed write
+  * leaves the previous output as it was, where Spark's own overwrite
+  * deletes it before its job runs.
   */
 object CsvSink {
 
@@ -43,13 +48,16 @@ object CsvSink {
             numFiles: Int = 1): Unit = {
     val out = layout(df, aiColumn)
     val sized = if (numFiles > 0) out.coalesce(numFiles) else out
-    sized.write.mode("overwrite")
+    publish(path)(sized.write.mode("overwrite")
       .option("header", true)
       // Python csv (QUOTE_MINIMAL) writes empty fields unquoted; Spark's
       // default emptyValue is a quoted "" — align with the reference.
       .option("emptyValue", "")
-      .csv(path)
+      .csv(_))
   }
+
+  private def publish(path: String)(write: String => Unit): Unit =
+    graft.Publish.dir(java.nio.file.Paths.get(path), replace = true)(tmp => write(tmp.toString))
 
   /** BYTE-exact reference CSV: Python's csv module writes `\r\n` line
     * terminators (after every row, header and last row included) with
@@ -79,10 +87,10 @@ object CsvSink {
     val spark = df.sparkSession
     val single = out.select(line.as("value")).coalesce(1)
       .rdd.mapPartitions(it => Iterator(org.apache.spark.sql.Row(header)) ++ it)
-    spark.createDataFrame(single,
+    publish(path)(spark.createDataFrame(single,
         org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("value",
             org.apache.spark.sql.types.StringType, nullable = false))))
-      .write.mode("overwrite").text(path)
+      .write.mode("overwrite").text(_))
   }
 }

@@ -126,8 +126,8 @@ object Layout {
     * Deterministic first-fit-decreasing over (size desc, name) — a
     * versionable plan, not a side effect: the caller rewrites each
     * bin's files into one output (a per-bin `spark.read.parquet(bin: _*)
-    * .repartition(1).write` at this size class) and swaps directories
-    * atomically, mergeSink-style. Files already ≥ `targetBytes` stay
+    * .repartition(1).write` at this size class) and publishes the
+    * result with `graft.Publish.dir`. Files already ≥ `targetBytes` stay
     * solo bins (rewriting them would be pure write amplification — they
     * are listed so the caller can skip them). Planning is metadata-only:
     * no data is read. */

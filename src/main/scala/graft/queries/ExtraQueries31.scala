@@ -255,40 +255,27 @@ object ExtraQueries31 {
     * shrink the shuffle and key WIDTH is what the wire and the
     * reduce-side hash table actually pay (was the worst sf1 ratio in
     * the round-9 proof at 5.49×). |k|-row close. */
-  // Round-13 fusion (guide §2.3/§2.4): the three per-k passes used to be
-  // three FULL corpus scans + three shingle-mass exchanges, unioned — at
-  // the 100× probe the triple scan+shuffle stack was the worst surviving
-  // scale multiplier (32.8×). Now ONE scan emits every k's doc-distinct
-  // keys tagged (k, sk) and ONE exchange carries the combined mass; the
-  // per-k distinct-inside-the-doc grain and the per-k aggregates are
-  // unchanged (grouping by (k, sk) then k computes exactly the old
-  // per-k global aggregates, since the tag partitions the key space).
-  // The per-k aggregates right-join onto the literal k list so a k no
-  // doc is long enough for still emits its row (n_types 0, null sums),
-  // as each of the oracle's per-k global aggregates does.
+  // Per k one scan, one shingle-mass exchange and one global aggregate,
+  // unioned: a global aggregate emits its row on an empty input too
+  // (n_types 0, null sums), as each of the oracle's per-k blocks does.
+  // Kept per k: one fused (k, sk) exchange measured slower at sf0.1.
   private val d32: Fn = (s, d) => {
-    val tagged = ShingleKs.map { k =>
-      expr(
+    val perK = ShingleKs.map { k =>
+      val sk = expr(
         s"CASE WHEN size(sp) >= $k THEN " +
-          s"transform(array_distinct(transform(sequence(1, size(sp) - $k + 1), " +
-          s"i -> cast(conv(substring(md5(concat_ws(' ', slice(sp, i, $k))), 1, 15), 16, 10) as bigint))), " +
-          s"h -> struct($k as k, h as sk)) " +
-          "ELSE cast(array() as array<struct<k:int,sk:bigint>>) END")
+          s"array_distinct(transform(sequence(1, size(sp) - $k + 1), " +
+          s"i -> cast(conv(substring(md5(concat_ws(' ', slice(sp, i, $k))), 1, 15), 16, 10) as bigint))) " +
+          "ELSE array() END")
+      docs(s, d).select(split(col("text"), " ").as("sp"))
+        .select(explode(sk).as("sk"))
+        .groupBy("sk").agg(count(lit(1)).as("dn"))
+        .agg(count(lit(1)).cast(LongType).as("n_types"),
+          sum(col("dn")).cast(LongType).as("n_doc_shingles"),
+          (sum((col("dn") * (col("dn") - 1)).cast(DecimalType(38, 0))) / 2)
+            .cast(LongType).as("pair_bound"))
+        .select(lit(k).as("k"), col("n_types"), col("n_doc_shingles"), col("pair_bound"))
     }
-    val perK = docs(s, d).select(split(col("text"), " ").as("sp"))
-      .select(explode(concat(tagged: _*)).as("ks"))
-      .select(col("ks.k").as("k"), col("ks.sk").as("sk"))
-      .groupBy("k", "sk").agg(count(lit(1)).as("dn"))
-      .groupBy("k")
-      .agg(count(lit(1)).cast(LongType).as("n_types"),
-        sum(col("dn")).cast(LongType).as("n_doc_shingles"),
-        (sum((col("dn") * (col("dn") - 1)).cast(DecimalType(38, 0))) / 2)
-          .cast(LongType).as("pair_bound"))
-    val ks = s.range(1).select(explode(array(ShingleKs.map(lit): _*)).as("k"))
-    perK.join(ks, Seq("k"), "right")
-      .select(col("k"), coalesce(col("n_types"), lit(0L)).as("n_types"),
-        col("n_doc_shingles"), col("pair_bound"))
-      .orderBy("k")
+    perK.reduce(_.unionAll(_)).orderBy("k")
   }
   private val d32Sql = {
     def block(k: Int) = {

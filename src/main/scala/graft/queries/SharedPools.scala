@@ -1,5 +1,7 @@
 package graft.queries
 
+import java.nio.file.{Files, Path, Paths}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One-materialization-per-run registry for intermediates shared by
@@ -35,11 +37,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * is invisible, and losing a cross-JVM rename race means adopting the
   * winner's identical deterministic bytes.
   *
-  * `-Dgraft.pool.rebuild=1` (set by Verify and Bench) opts a JVM out of
-  * durable REUSE into the round-10 per-JVM-temp behavior: Verify's
-  * two-JVM determinism gate must keep re-deriving pools from scratch
-  * (a cross-JVM flap hidden by a shared artifact is the r52 bug class),
-  * and Bench's floors must keep measuring builds, not cache reads. The
+  * `-Dgraft.pool.rebuild=1` (set by Verify, Bench and Explain) opts a
+  * JVM out of durable REUSE into a per-JVM temp root, deleted when the
+  * JVM exits: Verify's two-JVM determinism gate must keep re-deriving
+  * pools from scratch (a cross-JVM flap hidden by a shared artifact is
+  * the r52 bug class), and Bench's floors must keep measuring builds,
+  * not cache reads. The
   * tools that pay the build repeatedly — QTime sf10 sweeps, any
   * multi-JVM runner — take the durable path by default.
   *
@@ -47,8 +50,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * may ride through a pool — parquet round-trips them bitwise.
   */
 object SharedPools {
-  private lazy val jvmRoot =
-    java.nio.file.Files.createTempDirectory("graft_pools_").toString
+  /** Rebuild mode's JVM-private root, deleted when the JVM exits. */
+  private lazy val jvmRoot: Path = {
+    val root = Files.createTempDirectory("graft_pools_")
+    sys.addShutdownHook(try graft.Publish.deleteTree(root) catch { case _: Exception => () })
+    root
+  }
   private val built =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
   /** Builds actually executed by this JVM (spec hook: a durable cache
@@ -68,19 +75,19 @@ object SharedPools {
   private lazy val codeFingerprint: String = {
     import scala.jdk.CollectionConverters._
     val loc = getClass.getProtectionDomain.getCodeSource.getLocation.toURI
-    val root = java.nio.file.Paths.get(loc)
+    val root = Paths.get(loc)
     val md = java.security.MessageDigest.getInstance("MD5")
-    if (java.nio.file.Files.isDirectory(root)) {
-      val files = java.nio.file.Files.walk(root).iterator().asScala
-        .filter(p => java.nio.file.Files.isRegularFile(p) && p.toString.endsWith(".class"))
+    if (Files.isDirectory(root)) {
+      val files = Files.walk(root).iterator().asScala
+        .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".class"))
         .toSeq.sortBy(root.relativize(_).toString)
       files.foreach { p =>
         md.update(root.relativize(p).toString.getBytes("UTF-8"))
-        md.update(java.nio.file.Files.readAllBytes(p))
+        md.update(Files.readAllBytes(p))
       }
     } else {
       // launched from a jar: hash the jar bytes
-      md.update(java.nio.file.Files.readAllBytes(root))
+      md.update(Files.readAllBytes(root))
     }
     md5hex(md)
   }
@@ -94,17 +101,17 @@ object SharedPools {
   private def fixtureFingerprint(d: String): String =
     fixtureFps.computeIfAbsent(d, { dir =>
       import scala.jdk.CollectionConverters._
-      val root = java.nio.file.Paths.get(dir)
+      val root = Paths.get(dir)
       val md = java.security.MessageDigest.getInstance("MD5")
-      val files = java.nio.file.Files.walk(root).iterator().asScala
-        .filter(java.nio.file.Files.isRegularFile(_)).toSeq
+      val files = Files.walk(root).iterator().asScala
+        .filter(Files.isRegularFile(_)).toSeq
         .sortBy(root.relativize(_).toString)
       files.foreach { p =>
         // nanosecond mtime: millisecond precision collided in practice
         // (two same-size files written within one ms hashed identically)
-        val mt = java.nio.file.Files.getLastModifiedTime(p)
+        val mt = Files.getLastModifiedTime(p)
           .to(java.util.concurrent.TimeUnit.NANOSECONDS)
-        val line = s"${root.relativize(p)}|${java.nio.file.Files.size(p)}|$mt\n"
+        val line = s"${root.relativize(p)}|${Files.size(p)}|$mt\n"
         md.update(line.getBytes("UTF-8"))
       }
       md5hex(md)
@@ -121,17 +128,13 @@ object SharedPools {
   private lazy val durableRoot: String = {
     val base = sys.env.getOrElse("GRAFT_POOL_CACHE",
       s"${System.getProperty("java.io.tmpdir")}/graft_pool_cache")
-    val mine = java.nio.file.Paths.get(base, codeFingerprint)
-    java.nio.file.Files.createDirectories(mine)
+    val mine = Paths.get(base, codeFingerprint)
+    Files.createDirectories(mine)
     try {
       val cutoff = System.currentTimeMillis() - 48L * 3600 * 1000
       Option(new java.io.File(base).listFiles()).getOrElse(Array.empty)
         .filter(f => f.isDirectory && f.getName != codeFingerprint && f.lastModified < cutoff)
-        .foreach { f =>
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(f.toPath).sorted(java.util.Comparator.reverseOrder())
-            .iterator().asScala.foreach(p => java.nio.file.Files.deleteIfExists(p))
-        }
+        .foreach(f => graft.Publish.deleteTree(f.toPath))
     } catch { case _: Throwable => () } // GC is best-effort, reuse is not
     mine.toString
   }
@@ -140,13 +143,17 @@ object SharedPools {
 
   /** Spec hook: the durable on-disk location a (dir, key) pool commits
     * to — lets refusal tests corrupt exactly the right entry. */
-  private[graft] def durablePath(d: String, key: String): java.nio.file.Path =
-    java.nio.file.Paths.get(s"$durableRoot/${key}_${fixtureFingerprint(d)}")
+  private[graft] def durablePath(d: String, key: String): Path =
+    Paths.get(s"$durableRoot/${key}_${fixtureFingerprint(d)}")
 
   /** Build `df` at most once per (session, dir, key) in this JVM; reuse
     * a durable on-disk build from ANY prior JVM of this code build on
     * this fixture (unless `-Dgraft.pool.rebuild=1`). Every caller gets a
     * plain parquet scan of the materialized result.
+    *
+    * One build-and-commit path ([[graft.Publish.dir]], keeping an entry
+    * that already exists); rebuild mode only skips the on-disk reuse
+    * check and commits under the JVM-private root. Reads check the header.
     *
     * The build runs OUTSIDE the map's lock (check-then-putIfAbsent, not
     * computeIfAbsent): pool builds may consume OTHER pools — d08's
@@ -159,47 +166,27 @@ object SharedPools {
     val mapKey = (s, d, key)
     val existing = built.get(mapKey)
     if (existing != null) return existing
-    val df =
-      if (rebuildOnly) {
-        // round-10 per-JVM semantics: always pay the build, privately
-        val path = s"$jvmRoot/${key}_${Integer.toHexString(d.hashCode)}"
-        buildsRun.incrementAndGet()
-        build.write.mode("overwrite").parquet(path)
-        s.read.parquet(path)
-      } else {
-        val header = s"pool/$key:${fixtureFingerprint(d)}:$codeFingerprint"
-        val finalDir = java.nio.file.Paths.get(s"$durableRoot/${key}_${fixtureFingerprint(d)}")
-        if (java.nio.file.Files.exists(finalDir)) {
-          val hp = finalDir.resolve(PoolHeader)
-          require(java.nio.file.Files.exists(hp),
-            s"unheadered pool dir at $finalDir: data present but no $PoolHeader header " +
-              s"(expected '$header') — a foreign or torn write cannot prove its provenance; " +
-              "delete the dir to rebuild")
-          val found = java.nio.file.Files.readString(hp).trim
-          require(found == header,
-            s"pool format mismatch at $finalDir: header '$found', this build expects " +
-              s"'$header'; delete the dir to rebuild")
-          s.read.parquet(finalDir.resolve("data").toString)
-        } else {
-          val tmp = java.nio.file.Files.createTempDirectory(
-            java.nio.file.Paths.get(durableRoot), s".build_${key}_")
-          buildsRun.incrementAndGet()
-          build.write.mode("overwrite").parquet(tmp.resolve("data").toString)
-          java.nio.file.Files.writeString(tmp.resolve(PoolHeader), header)
-          try {
-            java.nio.file.Files.move(tmp, finalDir,
-              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-            s.read.parquet(finalDir.resolve("data").toString)
-          } catch {
-            case _: java.nio.file.FileAlreadyExistsException |
-                 _: java.nio.file.AccessDeniedException |
-                 _: java.nio.file.DirectoryNotEmptyException =>
-              // lost the cross-JVM race: the winner's bytes are
-              // deterministic-identical; keep ours private this JVM
-              s.read.parquet(tmp.resolve("data").toString)
-          }
-        }
+    val header = s"pool/$key:${fixtureFingerprint(d)}:$codeFingerprint"
+    val finalDir =
+      if (rebuildOnly) jvmRoot.resolve(s"${key}_${Integer.toHexString(d.hashCode)}")
+      else durablePath(d, key)
+    if (rebuildOnly || !Files.exists(finalDir)) {
+      buildsRun.incrementAndGet()
+      graft.Publish.dir(finalDir, replace = false) { tmp =>
+        build.write.mode("overwrite").parquet(tmp.resolve("data").toString)
+        Files.writeString(tmp.resolve(PoolHeader), header)
       }
+    }
+    val hp = finalDir.resolve(PoolHeader)
+    require(Files.exists(hp),
+      s"unheadered pool dir at $finalDir: data present but no $PoolHeader header " +
+        s"(expected '$header') — a foreign or torn write cannot prove its provenance; " +
+        "delete the dir to rebuild")
+    val found = Files.readString(hp).trim
+    require(found == header,
+      s"pool format mismatch at $finalDir: header '$found', this build expects " +
+        s"'$header'; delete the dir to rebuild")
+    val df = s.read.parquet(finalDir.resolve("data").toString)
     val prev = built.putIfAbsent(mapKey, df)
     if (prev != null) prev else df
   }

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.io.File
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 import java.util.UUID
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -140,27 +140,10 @@ private class CommitLogBatchWrite(path: String, schema: StructType, queryId: Str
       .map(_.takeWhile(_.isDigit))
       .collect { case ds if ds.nonEmpty => ds.toLong }
       .foldLeft(-1L)(math.max) + 1
-    val tmp = commitsDir.resolve(s".$txn.tmp")
-    // fsync the tmp content BEFORE the rename — without it, a power loss
-    // after the move can expose a named-but-torn manifest, voiding the
-    // "old-or-new, never torn" crash contract.
-    val ch = java.nio.channels.FileChannel.open(tmp,
-      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.WRITE,
-      java.nio.file.StandardOpenOption.TRUNCATE_EXISTING)
-    try {
-      ch.write(java.nio.ByteBuffer.wrap(files.mkString("\n").getBytes(StandardCharsets.UTF_8)))
-      ch.force(true)
-    } finally ch.close()
-    // the commit point: a single atomic rename makes the write visible
-    Files.move(tmp, commitsDir.resolve(f"$seq%06d-$txn.manifest"),
-      StandardCopyOption.ATOMIC_MOVE)
-    // fsync the directory so the rename itself survives power loss
-    // (POSIX: a rename is durable only once the parent dir is synced);
-    // Lucene-style best effort — some platforms can't open a directory
-    try {
-      val dch = java.nio.channels.FileChannel.open(commitsDir, java.nio.file.StandardOpenOption.READ)
-      try dch.force(true) finally dch.close()
-    } catch { case _: java.io.IOException => }
+    // the commit point: the manifest's one atomic publish (content and
+    // parent dir forced) is the only step that makes the write visible
+    graft.Publish.file(commitsDir.resolve(f"$seq%06d-$txn.manifest"),
+      files.mkString("\n").getBytes(StandardCharsets.UTF_8))
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {

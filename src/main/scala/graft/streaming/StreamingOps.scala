@@ -32,14 +32,6 @@ object StreamingOps {
       .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
       .select(col("window.start").as("w_start"), col("event_type"), col("n"), col("sum_value"))
 
-  /** Sliding windows (10 min length / 5 min slide). */
-  def slidingAgg(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "30 minutes")
-      .groupBy(org.apache.spark.sql.functions.window(col("ts"), "10 minutes", "5 minutes"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("w_start"), col("n"))
-
   /** Built-in session windows: events within `gap` of each other merge. */
   def sessionAgg(events: DataFrame, gap: String = "30 minutes"): DataFrame =
     events
@@ -257,13 +249,14 @@ object StreamingOps {
   /** Streaming MERGE (upsert) sink via `foreachBatch` — the production
     * idiom for maintaining a standing keyed table from a stream when
     * the sink format has no native MERGE: each micro-batch full-outer
-    * joins the current table version on the key (r42's merge shape,
-    * one keyed shuffle; co-located if the standing table is bucketed),
-    * writes the merged result to a NEW versioned directory named by the
-    * batch id, then atomically flips a pointer file. Idempotent under
-    * batch replay: a re-delivered batch id rewrites its own version
-    * directory and re-flips the pointer to the same content — the
-    * exactly-once contract foreachBatch requires of its body. */
+    * joins the newest table version on the key (r42's merge shape,
+    * one keyed shuffle; co-located if the standing table is bucketed)
+    * and publishes the merged result as the batch's own `v%012d`
+    * version ([[writeVersion]]); readers take the newest version.
+    * Idempotent under batch replay: like the [[StateKernel]]s, a
+    * re-delivered batch merges onto the newest version BEFORE its id and
+    * rewrites its own version with the same content — the exactly-once
+    * contract foreachBatch requires of its body. */
   def mergeSink(updates: DataFrame, tableDir: String, key: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     updates.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       mergeBatch(batch, tableDir, key, batchId)
@@ -271,44 +264,21 @@ object StreamingOps {
 
   /** One merge step (exposed for batch tests and replay idempotency). */
   def mergeBatch(batch: DataFrame, tableDir: String, key: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val ptr = new java.io.File(s"$tableDir/_current")
-    val base: Option[DataFrame] =
-      if (ptr.exists)
-        Some(spark.read.parquet(s"$tableDir/${java.nio.file.Files.readString(ptr.toPath).trim}"))
-      else None
-    val merged = base match {
+    val cols = batch.columns
+    val merged = newest(tableDir, Some(batchId)) match {
       case None => batch
-      case Some(b) =>
-        val cols = batch.columns
-        b.as("b").join(batch.as("u"), col(s"b.$key") === col(s"u.$key"), "full_outer")
+      case Some(v) =>
+        batch.sparkSession.read.schema(batch.schema).parquet(v).as("b")
+          .join(batch.as("u"), col(s"b.$key") === col(s"u.$key"), "full_outer")
           .select(cols.map(c => coalesce(col(s"u.$c"), col(s"b.$c")).as(c)).toIndexedSeq: _*)
     }
-    val version = s"v$batchId"
-    // Write to a temp dir first: on batch REPLAY the current version can
-    // BE this version, and overwrite-in-place would delete the lazy
-    // scan's own input files before the merge job reads them.
-    val tmpDir = s"$tableDir/.$version.tmp"
-    merged.write.mode("overwrite").parquet(tmpDir)
-    val dest = java.nio.file.Paths.get(s"$tableDir/$version")
-    if (java.nio.file.Files.exists(dest)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(dest).sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(java.nio.file.Files.delete)
-    }
-    java.nio.file.Files.move(java.nio.file.Paths.get(tmpDir), dest)
-    // atomic pointer flip: write-temp + rename
-    val tmp = java.nio.file.Files.createTempFile(ptr.getParentFile.toPath, "_ptr", "")
-    java.nio.file.Files.writeString(tmp, version)
-    java.nio.file.Files.move(tmp, ptr.toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    writeVersion(merged, tableDir, batchId)
   }
 
-  /** Read the current version of a mergeSink table. */
+  /** Read the newest version of a mergeSink table. */
   def readMerged(spark: org.apache.spark.sql.SparkSession, tableDir: String): DataFrame =
-    spark.read.parquet(
-      s"$tableDir/${java.nio.file.Files.readString(new java.io.File(s"$tableDir/_current").toPath).trim}")
+    spark.read.parquet(newest(tableDir, None)
+      .getOrElse(throw new java.io.FileNotFoundException(s"no merge-sink version under $tableDir")))
 
   // ---- versioned-state kernels (r64/r78/r81/r89/r95/r96/r105/st6 twins) ----
 
@@ -325,10 +295,9 @@ object StreamingOps {
     *
     * State lives in `<tableDir><leaf>` as versions named by batch id
     * (`v%012d`), behind a `_state_format` header carrying `format` (see
-    * [[checkStateFormat]]). Replay idempotency differs from
-    * [[mergeSink]]'s keyed overwrite: additive state double-counts a
-    * re-delivered batch unless the step rebuilds from the state BEFORE
-    * that batch, so each step reads the newest version with id < its own
+    * [[checkStateFormat]]). Additive state double-counts a re-delivered
+    * batch unless the step rebuilds from the state BEFORE that batch, so
+    * each step reads the newest version with id < its own
     * — a re-delivered batch id recomputes the same output version from the
     * same base. Readers follow max-version, so a replayed rewrite is
     * invisible (same content, same name). `empty` is the declared state
@@ -454,19 +423,11 @@ object StreamingOps {
   private def emptyOf(spark: SparkSession, schema: StructType): DataFrame =
     spark.createDataFrame(java.util.List.of[Row](), schema)
 
-  /** Atomic versioned-state write: parquet to a temp dir, then rename to
-    * the batch's version dir (replacing a replayed one). */
-  private def writeVersion(df: DataFrame, dir: String, batchId: Long): Unit = {
-    val tmpDir = s"$dir/_tmp_v$batchId"
-    df.coalesce(1).write.mode("overwrite").parquet(tmpDir)
-    val dest = java.nio.file.Paths.get(f"$dir/v$batchId%012d")
-    if (java.nio.file.Files.exists(dest)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(dest).sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(java.nio.file.Files.delete)
-    }
-    java.nio.file.Files.move(java.nio.file.Paths.get(tmpDir), dest)
-  }
+  /** Versioned write: the batch's `v%012d` dir, published whole
+    * (replacing a replayed one). */
+  private def writeVersion(df: DataFrame, dir: String, batchId: Long): Unit =
+    graft.Publish.dir(java.nio.file.Paths.get(f"$dir/v$batchId%012d"), replace = true)(
+      tmp => df.coalesce(1).write.mode("overwrite").parquet(tmp.toString))
 
   // ---- uniform versioned-state FORMAT contract (r9 verdict stretch 8) ----
 
@@ -499,8 +460,8 @@ object StreamingOps {
   }
 
   /** Header-checked versioned-state write: refuses alien/unversioned
-    * dirs, stamps the header (atomic tmp+move) BEFORE the first version
-    * rename, then does the atomic [[writeVersion]] rename. Header-first
+    * dirs, publishes the header BEFORE the first version, then publishes
+    * the version through [[writeVersion]]. Header-first
     * ordering matters for crash recovery: a crash between the two leaves
     * a header-only dir (reads as fresh — recoverable incremental state),
     * whereas version-first would leave versioned parquet with no header,
@@ -508,14 +469,8 @@ object StreamingOps {
   private def writeState(df: DataFrame, dir: String, batchId: Long, format: String): Unit = {
     checkStateFormat(dir, format)
     val p = java.nio.file.Paths.get(s"$dir/_state_format")
-    if (!java.nio.file.Files.exists(p)) {
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-      val tmp = java.nio.file.Files.createTempFile(
-        java.nio.file.Paths.get(dir), "._state_format", ".tmp")
-      java.nio.file.Files.writeString(tmp, format)
-      java.nio.file.Files.move(tmp, p,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    }
+    if (!java.nio.file.Files.exists(p))
+      graft.Publish.file(p, format.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     writeVersion(df, dir, batchId)
   }
 
@@ -524,6 +479,12 @@ object StreamingOps {
     * replay-safe base for that batch's step. */
   private def version(dir: String, format: String, beforeBatch: Option[Long]): Option[String] = {
     checkStateFormat(dir, format)
+    newest(dir, beforeBatch)
+  }
+
+  /** The newest `v%012d` version under `dir`, or the newest strictly
+    * before `beforeBatch`. */
+  private def newest(dir: String, beforeBatch: Option[Long]): Option[String] = {
     val versions = Option(new java.io.File(dir).list()).getOrElse(Array.empty[String])
       .filter(_.matches("v\\d{12}")).map(v => v.drop(1).toLong)
       .filter(v => beforeBatch.forall(v < _))

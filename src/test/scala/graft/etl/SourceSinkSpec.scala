@@ -56,6 +56,31 @@ class SourceSinkSpec extends AnyFunSuite {
     assert(header.endsWith(",start_year"))
   }
 
+  test("csv sink: a failed overwrite leaves the previous output byte-identical") {
+    import org.apache.spark.sql.functions.{col, lit, raise_error, when}
+    val dir = Files.createTempDirectory("csvsink_keep")
+    val src = Files.createTempDirectory("csvsink_src")
+    try {
+      // a file scan, so the planted failure fires in a task of the write
+      // job rather than while the optimizer folds a local relation
+      Flatten(StudiesSource.readStudies(spark, "/root/repo/fixtures/studies.json")).limit(3)
+        .write.mode("overwrite").parquet(src.toString)
+      val flat = spark.read.parquet(src.toString)
+      CsvSink.write(flat, dir.toString, aiColumn = None)
+      def parts = Files.list(dir).filter(_.toString.endsWith(".csv")).toArray.toSeq
+        .map(p => p.toString -> Files.readAllBytes(p.asInstanceOf[java.nio.file.Path]).toSeq)
+      val before = parts
+      assert(before.size == 1)
+      val failing = flat.withColumn("nct_id",
+        when(col("nct_id") === flat.select("nct_id").head().getString(0),
+          raise_error(lit("planted sink failure"))).otherwise(col("nct_id")))
+      intercept[Exception](CsvSink.write(failing, dir.toString, aiColumn = None))
+      assert(parts == before, "the old part file must survive a failed overwrite")
+      assert(Files.list(dir.getParent).noneMatch(_.getFileName.toString.startsWith(s"_tmp_${dir.getFileName}")),
+        "a failed write removes its tmp dir")
+    } finally Seq(dir, src).foreach(graft.Publish.deleteTree)
+  }
+
   test("writeExact is byte-identical to Python csv: CRLF, QUOTE_MINIMAL, restval") {
     import spark.implicits._
     val df = Seq(

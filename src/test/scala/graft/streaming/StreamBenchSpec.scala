@@ -36,17 +36,23 @@ class StreamBenchSpec extends AnyFunSuite {
 
   test("a drive lands versioned state on disk and a non-empty report (incl. the order-sensitive kernel)") {
     Seq("cusum", "watermark").foreach { k =>
-      val bytes = StreamBench.driveOne(spark, sf, k)
-      assert(bytes > 0, s"$k: state bytes")
+      val dir = java.nio.file.Files.createTempDirectory(s"stream_bench_$k")
+      try {
+        val bytes = StreamBench.drive(spark, sf, k, dir.toString)
+        assert(bytes > 0, s"$k: state bytes")
+      } finally graft.Publish.deleteTree(dir)
     }
   }
 
   test("a drive that fails after its wave-prep persist still releases the cache") {
-    val dir = java.nio.file.Files.createTempDirectory("stream_bench_empty").toString
-    graft.Tables.events(spark, sf).limit(0).write.parquet(s"$dir/events.parquet")
-    val before = spark.sparkContext.getPersistentRDDs.size
-    // no events, no arrival bounds: the watermark wave prep fails after the persist
-    intercept[Exception](StreamBench.driveOne(spark, dir, "watermark"))
-    assert(spark.sparkContext.getPersistentRDDs.size == before)
+    val dir = java.nio.file.Files.createTempDirectory("stream_bench_empty")
+    val state = java.nio.file.Files.createTempDirectory("stream_bench_watermark")
+    try {
+      graft.Tables.events(spark, sf).limit(0).write.parquet(s"$dir/events.parquet")
+      val before = spark.sparkContext.getPersistentRDDs.size
+      // no events, no arrival bounds: the watermark wave prep fails after the persist
+      intercept[Exception](StreamBench.drive(spark, dir.toString, "watermark", state.toString))
+      assert(spark.sparkContext.getPersistentRDDs.size == before)
+    } finally Seq(dir, state).foreach(graft.Publish.deleteTree)
   }
 }

@@ -87,12 +87,18 @@ echo "$main_out"
 cmp /tmp/gates_main/part-*.csv fixtures/expected/pipeline_out.csv
 
 # Every pool's raw build must plan (graft.Explain resolves pool:<key>
-# through PoolWarmup.rawBuilds and exits 1 on an unknown key).
+# through PoolWarmup.rawBuilds and exits 1 on an unknown key), and the
+# dump must leave no pool dir behind in its temp dir.
 echo "== graft.Explain over every pool:<key> (sf0.001)"
-SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 java -cp "$CP" "${JAVA_FLAGS[@]}" graft.Explain \
+explain_tmp=$(mktemp -d)
+SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 java -Djava.io.tmpdir="$explain_tmp" -cp "$CP" "${JAVA_FLAGS[@]}" graft.Explain \
   pool:jaccard_pairs pool:minhash_sigs pool:containment_ranked pool:dedup_clusters \
   pool:lsh_sweep pool:contamination_pairs pool:media_manifest pool:knn_graph pool:ivf_sweep \
   >/tmp/gates_explain.log 2>&1 || { tail -5 /tmp/gates_explain.log; echo "graft.Explain EXITED NONZERO"; exit 1; }
+echo "== graft.Explain leaves no pool dir behind"
+left=$(find "$explain_tmp" -maxdepth 1 -name 'graft_pool*')
+rm -rf "$explain_tmp"
+[ -z "$left" ] || { echo "graft.Explain left pool dirs: $left"; exit 1; }
 
 echo "== sf0.01 dump + both-mode compare + ordered"
 run_verify /root/testdata/sf0.01 /tmp/gates_sf001
