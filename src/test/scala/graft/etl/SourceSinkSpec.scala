@@ -63,7 +63,7 @@ class SourceSinkSpec extends AnyFunSuite {
     try {
       // a file scan, so the planted failure fires in a task of the write
       // job rather than while the optimizer folds a local relation
-      Flatten(StudiesSource.readStudies(spark, "/root/repo/fixtures/studies.json")).limit(3)
+      Flatten(StudiesSource.readStudies(spark, "fixtures/studies.json")).limit(3)
         .write.mode("overwrite").parquet(src.toString)
       val flat = spark.read.parquet(src.toString)
       CsvSink.write(flat, dir.toString, aiColumn = None)

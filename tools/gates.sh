@@ -91,7 +91,8 @@ cmp /tmp/gates_main/part-*.csv fixtures/expected/pipeline_out.csv
 # dump must leave no pool dir behind in its temp dir.
 echo "== graft.Explain over every pool:<key> (sf0.001)"
 explain_tmp=$(mktemp -d)
-SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 java -Djava.io.tmpdir="$explain_tmp" -cp "$CP" "${JAVA_FLAGS[@]}" graft.Explain \
+JDK_JAVA_OPTIONS="-Djava.io.tmpdir=$explain_tmp" \
+SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 java -cp "$CP" "${JAVA_FLAGS[@]}" graft.Explain \
   pool:jaccard_pairs pool:minhash_sigs pool:containment_ranked pool:dedup_clusters \
   pool:lsh_sweep pool:contamination_pairs pool:media_manifest pool:knn_graph pool:ivf_sweep \
   >/tmp/gates_explain.log 2>&1 || { tail -5 /tmp/gates_explain.log; echo "graft.Explain EXITED NONZERO"; exit 1; }
