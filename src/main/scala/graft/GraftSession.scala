@@ -40,6 +40,23 @@ object GraftSession {
     .config("spark.ui.enabled", "false")
     .withExtensions(new GraftExtensions)
 
+  /** The one session rule for a session graft code runs work on: it adds
+    * no artifacts, so it runs with artifact isolation off. An isolated
+    * session gets its own executor classloader, and Spark's codegen cache
+    * is keyed by (classloader, code), so every fresh session would compile
+    * its generated classes again; with isolation off they are the JVM's,
+    * compiled once. Spark reads the conf lazily from the session's own
+    * conf, so it takes effect only before the session's first query; on a
+    * session that has already run one, nothing changes. Applied where
+    * work is handed to a session, not in [[builder]]: a graft main runs
+    * one pipeline per JVM, and the sessions that pay the cost are built
+    * by other code (a caller's own session and its `newSession()`
+    * clones). Returns `s`. */
+  def sharedCode(s: SparkSession): SparkSession = {
+    s.conf.set("spark.sql.artifact.isolation.enabled", "false")
+    s
+  }
+
   /** The session for a CLI main: [[builder]] at [[cpus]]. */
   def start(logLevel: String = "WARN"): SparkSession = {
     val s = builder(cpus()).getOrCreate()

@@ -27,8 +27,16 @@ object Pipeline {
     * rows (at most 100 pages of them, `etl.py:155-158`), and the same
     * frame is returned, so the caller's actions read those rows instead
     * of parsing the pages again. The checkpoint's blocks are freed once
-    * the frame is unreachable. */
+    * the frame is unreachable.
+    *
+    * It first turns artifact isolation off on the session it is given
+    * ([[graft.GraftSession.sharedCode]]): a caller that runs each
+    * pipeline in a fresh `newSession()` would otherwise give every run
+    * its own executor classloader, and every run would compile the same
+    * generated classes again. On a session that has already run a query
+    * the conf has been read, and this changes nothing. */
   def run(spark: SparkSession, cfg: Config): DataFrame = {
+    graft.GraftSession.sharedCode(spark)
     val pages = StudiesSource.walk(cfg.pagesDir, cfg.firstPage, cfg.maxPages,
       spark.sessionState.newHadoopConf())
     // etl.py:493-495, checked on the walked count: no Spark job

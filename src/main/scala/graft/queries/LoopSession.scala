@@ -38,15 +38,11 @@ object LoopSession {
 
   /** A clone of `s` with private SQLConf, with `pairs` applied on top.
     * One clone per kernel INVOCATION: two loop queries running
-    * concurrently each tune their own clone.
-    *
-    * The clone adds no artifacts, so it runs with artifact isolation off
-    * (read lazily from the session's own conf, hence set before first
-    * use): an isolated session gets its own executor classloader, and
-    * every invocation would then compile its generated classes again. */
+    * concurrently each tune their own clone. The clone follows
+    * [[graft.GraftSession.sharedCode]], so a repeat invocation compiles
+    * no generated classes again. */
   def isolated(s: SparkSession, pairs: (String, String)*): SparkSession = {
-    val loop = s.newSession()
-    loop.conf.set("spark.sql.artifact.isolation.enabled", "false")
+    val loop = graft.GraftSession.sharedCode(s.newSession())
     pairs.foreach { case (k, v) => loop.conf.set(k, v) }
     loop
   }

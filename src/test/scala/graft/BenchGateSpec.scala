@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Path}
+import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The bench regression gate on synthetic history and allowlist files
@@ -8,11 +9,17 @@ import org.scalatest.funsuite.AnyFunSuite
   * malformed history and the per-family selftest. */
 class BenchGateSpec extends AnyFunSuite {
   import BenchGate._
+  import SparkTestSession.withTempDir
 
   private val Sf = "/data/sf0.1"
 
+  /** Each test's temp dirs live under one root, deleted after the test. */
+  private var root: Path = _
+  override def withFixture(test: NoArgTest): Outcome =
+    withTempDir("benchgate") { r => root = r; super.withFixture(test) }
+
   private def write(name: String, lines: String*): Path = {
-    val p = Files.createTempDirectory("benchgate").resolve(name)
+    val p = root.resolve(name)
     Files.writeString(p, lines.mkString("\n"))
     p
   }

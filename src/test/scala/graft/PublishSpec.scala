@@ -4,20 +4,17 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path}
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkTestSession.withTempDir
 
 /** The two publish rules: a file or a fully written tmp dir becomes
   * visible by one rename, a failed write leaves the destination and no
   * tmp behind, and an existing dir is kept or replaced as asked. */
 class PublishSpec extends AnyFunSuite {
-  private def withRoot[A](body: Path => A): A = {
-    val root = Files.createTempDirectory("publish_spec")
-    try body(root) finally Publish.deleteTree(root)
-  }
   private def names(root: Path): Set[String] =
     Files.list(root).toArray.map(_.asInstanceOf[Path].getFileName.toString).toSet
 
   test("a file publishes its content; a second publish replaces it") {
-    withRoot { root =>
+    withTempDir("publish_spec") { root =>
       val f = root.resolve("sub/_state_format")
       Publish.file(f, "a:v1".getBytes(UTF_8))
       Publish.file(f, "a:v2".getBytes(UTF_8))
@@ -27,7 +24,7 @@ class PublishSpec extends AnyFunSuite {
   }
 
   test("a dir is kept or replaced as asked; a failed write changes nothing") {
-    withRoot { root =>
+    withTempDir("publish_spec") { root =>
       val dest = root.resolve("v000000000001")
       def put(replace: Boolean, text: String): Boolean =
         Publish.dir(dest, replace)(tmp => Files.writeString(tmp.resolve("part"), text))

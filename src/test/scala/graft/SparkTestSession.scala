@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.{Files, Path}
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.ListenerBusDrain
@@ -8,15 +9,28 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites: the shipped
   * [[GraftSession.builder]] conf at 4 cores (never the environment's
-  * `SPARK_GRAFT_CPUS`), plus a private temp warehouse dir. */
+  * `SPARK_GRAFT_CPUS`), plus a private temp warehouse dir deleted when
+  * the JVM exits. Pools build in rebuild mode, as under Verify and Bench:
+  * into SharedPools' JVM-private root, which is deleted at exit too, so a
+  * suite run adds no durable cache namespace (SharedPoolsSpec switches
+  * the durable layer on for its own tests and deletes what it commits). */
 object SparkTestSession {
   lazy val spark: SparkSession = {
+    sys.props("graft.pool.rebuild") = "1"
+    val warehouse = Files.createTempDirectory("graft-warehouse")
+    sys.addShutdownHook(Publish.deleteTree(warehouse))
     val s = GraftSession.builder(4)
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+      .config("spark.sql.warehouse.dir", warehouse.toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
+  }
+
+  /** `body` run on a fresh dir under `java.io.tmpdir` named `prefix*`;
+    * the dir and everything in it are deleted afterwards, pass or fail. */
+  def withTempDir[T](prefix: String)(body: Path => T): T = {
+    val dir = Files.createTempDirectory(prefix)
+    try body(dir) finally Publish.deleteTree(dir)
   }
 
   /** `body`'s result and the Spark jobs it started on this thread (tagged

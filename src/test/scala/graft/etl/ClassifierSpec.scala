@@ -41,7 +41,7 @@ class ClassifierSpec extends AnyFunSuite {
 
   test("column impl agrees with scala impl on golden + fixture criteria") {
     import spark.implicits._
-    val fixture = Flatten(StudiesSource.readStudies(spark, "/root/repo/fixtures/studies.json"))
+    val fixture = Flatten(StudiesSource.readStudies(spark, "fixtures/studies.json"))
       .select("criteria").as[String].collect().toSeq
     val texts = golden.map(_._1) ++ fixture
     val viaCol = texts.toDF("criteria")

@@ -8,7 +8,7 @@ import graft.SparkTestSession
 class EnrichSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
-  private def flat = Flatten(StudiesSource.readStudies(spark, "/root/repo/fixtures/studies.json"))
+  private def flat = Flatten(StudiesSource.readStudies(spark, "fixtures/studies.json"))
 
   private val tuning = Seq("NCT00000001", "NCT00000003", "NCT00000006", "NCT00000007", "NCT00000011")
 

@@ -7,7 +7,7 @@ import graft.SparkTestSession
 class EssieSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
-  private def raw = StudiesSource.readStudies(spark, "/root/repo/fixtures/studies.json")
+  private def raw = StudiesSource.readStudies(spark, "fixtures/studies.json")
 
   private def ids(terms: String*): Set[String] = {
     import org.apache.spark.sql.functions.col

@@ -8,7 +8,7 @@ class FlattenSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
   private lazy val flat =
-    Flatten(StudiesSource.readStudies(spark, "/root/repo/fixtures/studies.json"))
+    Flatten(StudiesSource.readStudies(spark, "fixtures/studies.json"))
       .collect().map(r => r.getAs[String]("nct_id") -> r).toMap
 
   test("all 14 fixture studies flatten") {

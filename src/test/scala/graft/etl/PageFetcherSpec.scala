@@ -79,14 +79,14 @@ class PageFetcherSpec extends AnyFunSuite {
 
   test("file fetcher agrees with the distributed file walk on the fixtures") {
     val viaSeam = PageFetcher.readFetched(
-      spark, new FilePageFetcher("/root/repo/fixtures/pages")).get
-    val viaScan = StudiesSource.readPaged(spark, "/root/repo/fixtures/pages")
+      spark, new FilePageFetcher("fixtures/pages")).get
+    val viaScan = StudiesSource.readPaged(spark, "fixtures/pages")
     assert(viaSeam.count() == viaScan.count())
     assert(viaSeam.count() == 14)
   }
 
   test("file fetcher: missing first page aborts to None like a network error") {
     assert(PageFetcher.readFetched(
-      spark, new FilePageFetcher("/root/repo/fixtures/pages", "nope.json")).isEmpty)
+      spark, new FilePageFetcher("fixtures/pages", "nope.json")).isEmpty)
   }
 }

@@ -1,9 +1,10 @@
 package graft.etl
 
 import java.nio.file.{Files, Path}
+import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
-import graft.SparkTestSession.jobsOf
+import graft.SparkTestSession.{jobsOf, withTempDir}
 
 /** The driver-side page walk (etl.py:115-158): no Spark job for the token
   * chain or the declared-schema page scan, the reference's token rule and
@@ -13,9 +14,14 @@ class StudiesSourceSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val pages = "fixtures/pages" // relative to the project root, the tests' working dir
 
+  /** Each test's temp dirs live under one root, deleted after the test. */
+  private var root: Path = _
+  override def withFixture(test: NoArgTest): Outcome =
+    withTempDir("pagechain") { r => root = r; super.withFixture(test) }
+
   /** A temp page chain: file name -> body. */
   private def chain(files: (String, String)*): String = {
-    val dir = Files.createTempDirectory("pagechain")
+    val dir = Files.createTempDirectory(root, "chain")
     files.foreach { case (name, body) => Files.writeString(dir.resolve(name), body) }
     dir.toString
   }
@@ -160,14 +166,14 @@ class StudiesSourceSpec extends AnyFunSuite {
 
   /** The fixture chain copied to a temp dir, so a test can remove it. */
   private def fixtureCopy(): Path = {
-    val dir = Files.createTempDirectory("pagecopy")
+    val dir = Files.createTempDirectory(root, "pagecopy")
     Files.list(Path.of(pages)).forEach(p => Files.copy(p, dir.resolve(p.getFileName)))
     dir
   }
 
   test("with a sink, Pipeline.run's frame holds its rows: no page is read again") {
     val dir = fixtureCopy()
-    val out = Files.createTempDirectory("pipeline_once").resolve("csv").toString
+    val out = root.resolve("csv").toString
     val (df, obs) = Enrich.withMetrics(Pipeline.run(spark, Pipeline.Config(
       pagesDir = dir.toString, essieTerms = Essie.referenceConfigTerms,
       gate = Enrich.GateConfig(maxRows = Some(2L), tuningSet = None), outputPath = Some(out))))
@@ -179,7 +185,7 @@ class StudiesSourceSpec extends AnyFunSuite {
   }
 
   test("the frame Pipeline.run returns has the CSV's row order: processed first, then nct_id") {
-    val out = Files.createTempDirectory("pipeline_order").resolve("csv").toString
+    val out = root.resolve("csv").toString
     val df = Pipeline.run(spark, Pipeline.Config(pagesDir = pages,
       gate = Enrich.GateConfig(maxRows = Some(5L),
         tuningSet = Some(Seq("NCT00000003", "NCT00000004", "NCT00000009"))),

@@ -7,7 +7,7 @@ import graft.SparkTestSession
 /** Typed Dataset API agrees with the untyped (Column) plans. */
 class TypedStudiesSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
-  private val path = "/root/repo/fixtures/studies.json"
+  private val path = "fixtures/studies.json"
 
   private def ds = TypedStudies.dataset(spark, path)
 

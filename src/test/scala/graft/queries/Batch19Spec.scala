@@ -3,6 +3,7 @@ package graft.queries
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkTestSession
+import graft.SparkTestSession.withTempDir
 
 /** Oracle-independent invariants for round-8 batches 19–21: driver
   * replays (KM estimator, bounded Bellman–Ford, business-day closed
@@ -56,23 +57,25 @@ class Batch19Spec extends AnyFunSuite {
     // terminal grain row); type B only exists to push the global max
     // day out so A's users register as churned (gap >= 8 days).
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("km_edge_").toString
-    Seq(
-      (1L, "A", java.sql.Timestamp.valueOf("2024-01-01 00:00:00")),
-      (1L, "A", java.sql.Timestamp.valueOf("2024-01-03 00:00:00")),
-      (2L, "A", java.sql.Timestamp.valueOf("2024-01-01 00:00:00")),
-      (2L, "A", java.sql.Timestamp.valueOf("2024-01-03 00:00:00")),
-      (99L, "B", java.sql.Timestamp.valueOf("2024-01-01 00:00:00")),
-      (99L, "B", java.sql.Timestamp.valueOf("2024-01-31 00:00:00")))
-      .toDF("user_id", "event_type", "ts")
-      .write.mode("overwrite").parquet(s"$tmp/events.parquet")
-    // schema: event_type, t, n_risk, d_events, c_censored, cum_lnfp, survival
-    val full = graft.SparkEntry.queries("r114_kaplan_meier")(spark, tmp).collect()
-    val a2 = full.find(r => r.getString(0) == "A" && r.getLong(1) == 2L).get
-    assert(a2.getLong(2) == 2L && a2.getLong(3) == 2L, "A@2 must have n_risk=d_events=2")
-    assert(a2.getLong(5) <= -1000000000000000L, "sentinel ln term applied")
-    assert(a2.getDouble(6) == 0.0, s"survival must be exactly 0, got ${a2.getDouble(6)}")
-    assert(full.forall(r => !r.isNullAt(5)), "no NULL cum_lnfp anywhere")
+    withTempDir("km_edge_") { base =>
+      val tmp = base.toString
+      Seq(
+        (1L, "A", java.sql.Timestamp.valueOf("2024-01-01 00:00:00")),
+        (1L, "A", java.sql.Timestamp.valueOf("2024-01-03 00:00:00")),
+        (2L, "A", java.sql.Timestamp.valueOf("2024-01-01 00:00:00")),
+        (2L, "A", java.sql.Timestamp.valueOf("2024-01-03 00:00:00")),
+        (99L, "B", java.sql.Timestamp.valueOf("2024-01-01 00:00:00")),
+        (99L, "B", java.sql.Timestamp.valueOf("2024-01-31 00:00:00")))
+        .toDF("user_id", "event_type", "ts")
+        .write.mode("overwrite").parquet(s"$tmp/events.parquet")
+      // schema: event_type, t, n_risk, d_events, c_censored, cum_lnfp, survival
+      val full = graft.SparkEntry.queries("r114_kaplan_meier")(spark, tmp).collect()
+      val a2 = full.find(r => r.getString(0) == "A" && r.getLong(1) == 2L).get
+      assert(a2.getLong(2) == 2L && a2.getLong(3) == 2L, "A@2 must have n_risk=d_events=2")
+      assert(a2.getLong(5) <= -1000000000000000L, "sentinel ln term applied")
+      assert(a2.getDouble(6) == 0.0, s"survival must be exactly 0, got ${a2.getDouble(6)}")
+      assert(full.forall(r => !r.isNullAt(5)), "no NULL cum_lnfp anywhere")
+    }
   }
 
   test("r115: the full-knowledge tx arm equals the single-axis valid-time as-of") {

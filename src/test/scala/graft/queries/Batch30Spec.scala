@@ -3,6 +3,7 @@ package graft.queries
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkTestSession
+import graft.SparkTestSession.withTempDir
 
 /** Oracle-independent invariants for round-9 batch 33 (bootstrap
   * difference test, Cohen's kappa, l-diversity, shingle sweep,
@@ -131,15 +132,17 @@ class Batch30Spec extends AnyFunSuite {
   }
 
   test("d32: a corpus too short for the largest k still emits one row per k") {
-    val dir = java.nio.file.Files.createTempDirectory("d32_short").toString
-    import spark.implicits._
-    Seq((1L, "a b c d"), (2L, "a b c"), (3L, "a b"), (4L, "x"))
-      .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
-    val got = graft.SparkEntry.queries("d32_shingle_sweep")(spark, dir).collect()
-      .map(r => (0 to 3).map(i => if (r.isNullAt(i)) null else r.get(i)))
-    // the d32Sql oracle's rows on this corpus: k=2 "a b" x3, "b c" x2,
-    // "c d" x1; k=3 "a b c" x2, "b c d" x1; no doc has 5 tokens
-    assert(got.toSeq == Seq(Seq(2, 3L, 6L, 4L), Seq(3, 2L, 3L, 1L), Seq(5, 0L, null, null)))
+    withTempDir("d32_short") { tmp =>
+      val dir = tmp.toString
+      import spark.implicits._
+      Seq((1L, "a b c d"), (2L, "a b c"), (3L, "a b"), (4L, "x"))
+        .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+      val got = graft.SparkEntry.queries("d32_shingle_sweep")(spark, dir).collect()
+        .map(r => (0 to 3).map(i => if (r.isNullAt(i)) null else r.get(i)))
+      // the d32Sql oracle's rows on this corpus: k=2 "a b" x3, "b c" x2,
+      // "c d" x1; k=3 "a b c" x2, "b c d" x1; no doc has 5 tokens
+      assert(got.toSeq == Seq(Seq(2, 3L, 6L, 4L), Seq(3, 2L, 3L, 1L), Seq(5, 0L, null, null)))
+    }
   }
 
   test("p38: weights replay via sqrt chains; dominance rises and diversity falls with tau") {

@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkTestSession
 import graft.functions.VectorOps
+import graft.SparkTestSession.withTempDir
 
 /** Correctness evidence for the approximate operators (no SQL oracle):
   * MinHash-LSH and SimHash against exact n-gram Jaccard; LSH/IVF ANN
@@ -161,15 +162,17 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // all 32 bands (and all 4 simhash chunks). Uncapped, that is
     // C(300,2)=44850 candidate pairs from one bucket; the cap keeps the
     // 64 lowest doc_ids, so exactly C(64,2) pairs survive.
-    val dir = java.nio.file.Files.createTempDirectory("capcorpus").toString
-    (1L to 300L).map(i =>
-        (i, "alpha beta gamma delta epsilon zeta eta theta iota kappa", "en", "synthetic", 56L))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val cap = DedupQueries.MaxBucket.toLong
-    val bound = cap * (cap - 1) / 2
-    assert(graft.SparkEntry.queries("d04_minhash_lsh")(spark, dir).count() == bound)
-    assert(graft.SparkEntry.queries("d05_simhash")(spark, dir).count() == bound)
+    withTempDir("capcorpus") { tmp =>
+      val dir = tmp.toString
+      (1L to 300L).map(i =>
+          (i, "alpha beta gamma delta epsilon zeta eta theta iota kappa", "en", "synthetic", 56L))
+        .toDF("doc_id", "text", "lang", "source", "n_chars")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val cap = DedupQueries.MaxBucket.toLong
+      val bound = cap * (cap - 1) / 2
+      assert(graft.SparkEntry.queries("d04_minhash_lsh")(spark, dir).count() == bound)
+      assert(graft.SparkEntry.queries("d05_simhash")(spark, dir).count() == bound)
+    }
   }
 
   test("simhash pairs are symmetric-free and within the hamming budget") {

@@ -1,8 +1,9 @@
 package graft.queries
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{DirectoryNotEmptyException, Files, Path, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.{Publish, SparkTestSession}
 
 /** The durable cross-JVM pool layer (r10 verdict item 1): the sf10
   * proof measured the s10 kNN pool build at 2534.6 s, re-paid by every
@@ -18,23 +19,46 @@ import org.scalatest.funsuite.AnyFunSuite
   * exercised by the QTime sf10 sweep protocol (BENCH_sf10.json).
   */
 class SharedPoolsSpec extends AnyFunSuite {
-  private lazy val spark = graft.SparkTestSession.spark
+  private lazy val spark = SparkTestSession.spark
 
-  private def freshFixture(tag: String): String = {
-    val dir = Files.createTempDirectory(s"pool_fx_$tag")
-    Files.writeString(dir.resolve("data.txt"), s"fixture $tag")
-    dir.toString
+  /** `body` with `graft.pool.rebuild` on or off, the previous value
+    * restored afterwards. The test session starts first: it puts the
+    * suite in rebuild mode, which must not happen inside `body`. */
+  private def withRebuild[A](on: Boolean)(body: => A): A = {
+    spark
+    val prev = sys.props.get("graft.pool.rebuild")
+    if (on) sys.props("graft.pool.rebuild") = "1" else sys.props -= "graft.pool.rebuild"
+    try body finally {
+      sys.props -= "graft.pool.rebuild"
+      prev.foreach(v => sys.props("graft.pool.rebuild") = v)
+    }
   }
 
-  private def withDurableMode[A](body: => A): A = {
-    val prev = sys.props.get("graft.pool.rebuild")
-    sys.props -= "graft.pool.rebuild"
-    try body finally prev.foreach(v => sys.props("graft.pool.rebuild") = v)
+  /** `body` in durable mode over `n` fresh fixture dirs of equal content,
+    * pooled under `key`. The fixtures and their durable entries are
+    * deleted afterwards, and so are the code namespace and the cache base
+    * once they are empty: a suite run adds no namespace. */
+  private def withDurableFixtures[A](key: String, n: Int = 1)(body: Seq[String] => A): A =
+    withRebuild(on = false) {
+      SparkTestSession.withTempDir(s"pool_fx_$key") { root =>
+        val dirs = (1 to n).map { i =>
+          val dir = Files.createDirectory(root.resolve(s"fx$i"))
+          Files.writeString(dir.resolve("data.txt"), s"fixture $key")
+          dir.toString
+        }
+        try body(dirs) finally dirs.foreach(d => deleteDurable(SharedPools.durablePath(d, key)))
+      }
+    }
+
+  private def deleteDurable(entry: Path): Unit = {
+    Publish.deleteTree(entry)
+    Seq(entry.getParent, entry.getParent.getParent).foreach { d =>
+      try Files.deleteIfExists(d) catch { case _: DirectoryNotEmptyException => () }
+    }
   }
 
   test("a cold re-entry reuses the durable build without rebuilding, identical rows") {
-    withDurableMode {
-      val dir = freshFixture("reuse")
+    withDurableFixtures("spec_reuse") { case Seq(dir) =>
       val before = SharedPools.buildsRun.get()
       val df1 = SharedPools.materialized(spark, dir, "spec_reuse") {
         spark.range(200).selectExpr("id", "id * id AS sq")
@@ -56,32 +80,27 @@ class SharedPoolsSpec extends AnyFunSuite {
   }
 
   test("-Dgraft.pool.rebuild=1 opts out of durable reuse (Verify/Bench semantics)") {
-    val dir = freshFixture("rebuild")
-    val prev = sys.props.get("graft.pool.rebuild")
-    sys.props("graft.pool.rebuild") = "1"
-    try {
-      val before = SharedPools.buildsRun.get()
-      SharedPools.materialized(spark, dir, "spec_rb") {
-        spark.range(10).selectExpr("id")
-      }.collect()
-      SharedPools.evict("spec_rb")
-      SharedPools.materialized(spark.newSession(), dir, "spec_rb") {
-        spark.range(10).selectExpr("id")
-      }.collect()
-      assert(SharedPools.buildsRun.get() == before + 2,
-        "rebuild mode must pay the build on every cold entry — bench floors measure builds")
-    } finally {
-      sys.props -= "graft.pool.rebuild"
-      prev.foreach(v => sys.props("graft.pool.rebuild") = v)
+    SparkTestSession.withTempDir("pool_fx_spec_rb") { fx =>
+      val dir = fx.toString
+      withRebuild(on = true) {
+        val before = SharedPools.buildsRun.get()
+        SharedPools.materialized(spark, dir, "spec_rb") {
+          spark.range(10).selectExpr("id")
+        }.collect()
+        SharedPools.evict("spec_rb")
+        SharedPools.materialized(spark.newSession(), dir, "spec_rb") {
+          spark.range(10).selectExpr("id")
+        }.collect()
+        assert(SharedPools.buildsRun.get() == before + 2,
+          "rebuild mode must pay the build on every cold entry — bench floors measure builds")
+      }
     }
   }
 
   test("distinct fixture dirs never share a durable entry under one key") {
-    withDurableMode {
+    withDurableFixtures("spec_fp", n = 2) { case Seq(dirA, dirB) =>
       // same file name, same SIZE — only the mtime separates them (the
       // hardest legitimate case: a regenerated fixture of equal bytes)
-      val dirA = freshFixture("fpX")
-      val dirB = freshFixture("fpX")
       Files.setLastModifiedTime(Paths.get(dirB, "data.txt"),
         java.nio.file.attribute.FileTime.fromMillis(
           Files.getLastModifiedTime(Paths.get(dirA, "data.txt")).toMillis + 1234))
@@ -99,8 +118,7 @@ class SharedPoolsSpec extends AnyFunSuite {
   }
 
   test("an unheadered or alien-header durable dir is refused loudly") {
-    withDurableMode {
-      val dir = freshFixture("refuse")
+    withDurableFixtures("spec_refuse") { case Seq(dir) =>
       SharedPools.materialized(spark, dir, "spec_refuse") {
         spark.range(7).selectExpr("id")
       }.collect()

@@ -1,11 +1,13 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.SparkTestSession
+import graft.SparkTestSession.withTempDir
 
 /** The atomic-commit contract of the DSv2 write path: visibility flips
   * only at the manifest rename, so readers see old-or-new, never torn. */
@@ -13,7 +15,11 @@ class CommitLogSinkSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val fmt = "graft.sources.CommitLogSink"
 
-  private def freshDir() = Files.createTempDirectory("commitlog").toString
+  /** Each test's temp dirs live under one root, deleted after the test. */
+  private var root: Path = _
+  override def withFixture(test: NoArgTest): Outcome =
+    withTempDir("commitlog") { r => root = r; super.withFixture(test) }
+  private def freshDir() = Files.createTempDirectory(root, "table").toString
 
   private val schema = StructType(Seq(
     StructField("id", LongType), StructField("name", StringType),

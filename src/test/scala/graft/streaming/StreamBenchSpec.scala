@@ -1,8 +1,11 @@
 package graft.streaming
 
+import java.nio.file.Files
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
+import graft.SparkTestSession.withTempDir
 
 /** The streaming bench harness (r10 verdict item 6): every versioned-
   * state kernel gets a `stream:<kernel>` line in graft.Bench, driven by
@@ -36,23 +39,21 @@ class StreamBenchSpec extends AnyFunSuite {
 
   test("a drive lands versioned state on disk and a non-empty report (incl. the order-sensitive kernel)") {
     Seq("cusum", "watermark").foreach { k =>
-      val dir = java.nio.file.Files.createTempDirectory(s"stream_bench_$k")
-      try {
+      withTempDir(s"stream_bench_$k") { dir =>
         val bytes = StreamBench.drive(spark, sf, k, dir.toString)
         assert(bytes > 0, s"$k: state bytes")
-      } finally graft.Publish.deleteTree(dir)
+      }
     }
   }
 
   test("a drive that fails after its wave-prep persist still releases the cache") {
-    val dir = java.nio.file.Files.createTempDirectory("stream_bench_empty")
-    val state = java.nio.file.Files.createTempDirectory("stream_bench_watermark")
-    try {
+    withTempDir("stream_bench_empty") { dir =>
+      val state = Files.createDirectory(dir.resolve("state"))
       graft.Tables.events(spark, sf).limit(0).write.parquet(s"$dir/events.parquet")
       val before = spark.sparkContext.getPersistentRDDs.size
       // no events, no arrival bounds: the watermark wave prep fails after the persist
       intercept[Exception](StreamBench.drive(spark, dir.toString, "watermark", state.toString))
       assert(spark.sparkContext.getPersistentRDDs.size == before)
-    } finally Seq(dir, state).foreach(graft.Publish.deleteTree)
+    }
   }
 }

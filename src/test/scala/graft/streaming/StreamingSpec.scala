@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.SparkTestSession
+import graft.SparkTestSession.withTempDir
 
 /** Drives the streaming operators through MemoryStream and asserts the
   * unified-API property: streaming result == batch result on the same
@@ -274,28 +275,30 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming ingest survives a restart from checkpoint without duplicates") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("ingest_restart").toString
-    val docs = (1L to 30L).map(i => Doc(i, "srcA", s"word$i alpha beta gamma plus tail $i"))
-    // file source (restartable, unlike MemoryStream): each incarnation
-    // reads newly arrived json files from the same input dir
-    val schema = org.apache.spark.sql.Encoders.product[Doc].schema
-    def startQuery() =
-      StreamingOps.ingestDocs(spark.readStream.schema(schema).json(s"$dir/in")).writeStream
-        .format("parquet").option("path", s"$dir/data")
-        .option("checkpointLocation", s"$dir/ckpt")
-        .partitionBy("split").outputMode("append").start()
-    // first incarnation sees half, then stops (simulated crash+restart)
-    docs.take(15).toDF().coalesce(1).write.mode("append").json(s"$dir/in")
-    val q1 = startQuery()
-    q1.processAllAvailable(); q1.stop()
-    // a new file re-delivers the first 15 docs (replay) plus 15 new ones;
-    // the checkpoint-recovered dedup state must suppress the replays
-    docs.toDF().coalesce(1).write.mode("append").json(s"$dir/in")
-    val q2 = startQuery()
-    q2.processAllAvailable(); q2.stop()
-    val back = spark.read.parquet(s"$dir/data")
-    assert(back.count() == 30)
-    assert(back.select("doc_id").distinct().count() == 30)
+    withTempDir("ingest_restart") { tmp =>
+      val dir = tmp.toString
+      val docs = (1L to 30L).map(i => Doc(i, "srcA", s"word$i alpha beta gamma plus tail $i"))
+      // file source (restartable, unlike MemoryStream): each incarnation
+      // reads newly arrived json files from the same input dir
+      val schema = org.apache.spark.sql.Encoders.product[Doc].schema
+      def startQuery() =
+        StreamingOps.ingestDocs(spark.readStream.schema(schema).json(s"$dir/in")).writeStream
+          .format("parquet").option("path", s"$dir/data")
+          .option("checkpointLocation", s"$dir/ckpt")
+          .partitionBy("split").outputMode("append").start()
+      // first incarnation sees half, then stops (simulated crash+restart)
+      docs.take(15).toDF().coalesce(1).write.mode("append").json(s"$dir/in")
+      val q1 = startQuery()
+      q1.processAllAvailable(); q1.stop()
+      // a new file re-delivers the first 15 docs (replay) plus 15 new ones;
+      // the checkpoint-recovered dedup state must suppress the replays
+      docs.toDF().coalesce(1).write.mode("append").json(s"$dir/in")
+      val q2 = startQuery()
+      q2.processAllAvailable(); q2.stop()
+      val back = spark.read.parquet(s"$dir/data")
+      assert(back.count() == 30)
+      assert(back.select("doc_id").distinct().count() == 30)
+    }
   }
 
   test("ingest front-end: hard mid-batch crash, restart is exactly-once and equals the batch twin") {
@@ -308,43 +311,45 @@ class StreamingSpec extends AnyFunSuite {
     // batch twin (st4 semantics) on the full input, proving the crash
     // left no dupes AND no holes.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("ingest_kill").toString
-    val docs = (1L to 40L).map(i => Doc(i, "srcA", s"word$i alpha beta gamma plus tail $i"))
-    val schema = org.apache.spark.sql.Encoders.product[Doc].schema
-    def startQuery(poisoned: Boolean) = {
-      val src = spark.readStream.schema(schema).json(s"$dir/in").as[Doc]
-        .map { d =>
-          if (poisoned && CrashFlag.armed && d.doc_id == 13L)
-            throw new RuntimeException("injected mid-batch crash")
-          d
-        }.toDF()
-      StreamingOps.ingestDocs(src).writeStream
-        .format("parquet").option("path", s"$dir/data")
-        .option("checkpointLocation", s"$dir/ckpt")
-        .partitionBy("split").outputMode("append").start()
+    withTempDir("ingest_kill") { tmp =>
+      val dir = tmp.toString
+      val docs = (1L to 40L).map(i => Doc(i, "srcA", s"word$i alpha beta gamma plus tail $i"))
+      val schema = org.apache.spark.sql.Encoders.product[Doc].schema
+      def startQuery(poisoned: Boolean) = {
+        val src = spark.readStream.schema(schema).json(s"$dir/in").as[Doc]
+          .map { d =>
+            if (poisoned && CrashFlag.armed && d.doc_id == 13L)
+              throw new RuntimeException("injected mid-batch crash")
+            d
+          }.toDF()
+        StreamingOps.ingestDocs(src).writeStream
+          .format("parquet").option("path", s"$dir/data")
+          .option("checkpointLocation", s"$dir/ckpt")
+          .partitionBy("split").outputMode("append").start()
+      }
+      docs.take(20).toDF().coalesce(1).write.mode("append").json(s"$dir/in")
+      CrashFlag.armed = true
+      val q1 = startQuery(poisoned = true)
+      val died = intercept[Exception] { q1.processAllAvailable() }
+      assert(died.getMessage != null)
+      assert(!q1.isActive, "incarnation 1 must be dead, not gracefully stopped")
+      // restart from the same checkpoint, crash disarmed; deliver the rest
+      CrashFlag.armed = false
+      val q2 = startQuery(poisoned = false)
+      q2.processAllAvailable()
+      docs.drop(20).toDF().coalesce(1).write.mode("append").json(s"$dir/in")
+      q2.processAllAvailable(); q2.stop()
+      // read through the sink's commit log (_spark_metadata): uncommitted
+      // leftovers from the crashed batch are invisible by contract
+      val got = spark.read.parquet(s"$dir/data")
+        .select("doc_id", "content_fp", "split", "shard").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getInt(3))).toSet
+      val want = StreamingOps.ingestDocs(docs.toDF())
+        .select("doc_id", "content_fp", "split", "shard").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getInt(3))).toSet
+      assert(got == want, s"restart output diverged from the batch twin: ${got.size} vs ${want.size}")
+      assert(got.size == 40)
     }
-    docs.take(20).toDF().coalesce(1).write.mode("append").json(s"$dir/in")
-    CrashFlag.armed = true
-    val q1 = startQuery(poisoned = true)
-    val died = intercept[Exception] { q1.processAllAvailable() }
-    assert(died.getMessage != null)
-    assert(!q1.isActive, "incarnation 1 must be dead, not gracefully stopped")
-    // restart from the same checkpoint, crash disarmed; deliver the rest
-    CrashFlag.armed = false
-    val q2 = startQuery(poisoned = false)
-    q2.processAllAvailable()
-    docs.drop(20).toDF().coalesce(1).write.mode("append").json(s"$dir/in")
-    q2.processAllAvailable(); q2.stop()
-    // read through the sink's commit log (_spark_metadata): uncommitted
-    // leftovers from the crashed batch are invisible by contract
-    val got = spark.read.parquet(s"$dir/data")
-      .select("doc_id", "content_fp", "split", "shard").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getInt(3))).toSet
-    val want = StreamingOps.ingestDocs(docs.toDF())
-      .select("doc_id", "content_fp", "split", "shard").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getInt(3))).toSet
-    assert(got == want, s"restart output diverged from the batch twin: ${got.size} vs ${want.size}")
-    assert(got.size == 40)
   }
 
   test("streaming near-dup ingest gate equals d12's oracled batch form") {
@@ -386,292 +391,312 @@ class StreamingSpec extends AnyFunSuite {
     val b1 = (1 to 5).flatMap(d => wave(d, 50 + d % 3))
     val b2 = (11 to 14).flatMap(d => wave(d, 50 + d % 3)) ++ wave(15, 500)
     val b3 = wave(21, 50) ++ wave(22, 500)
-    val dir = java.nio.file.Files.createTempDirectory("anomalymon").toString
-    val stream = MemoryStream[java.sql.Timestamp]
-    val q = StreamingOps.anomalyMonitor(stream.toDF().toDF("ts"), s"$dir/out")
-      .option("checkpointLocation", s"$dir/ckpt").start()
-    try {
-      stream.addData(b1); q.processAllAvailable()
-      stream.addData(b2); q.processAllAvailable()
-      stream.addData(b3); q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.read.parquet(s"$dir/out")
-    assert(got.select("batch_id").distinct().count() == 3, "one report per micro-batch")
-    for ((slice, id) <- Seq((b1, 0L), (b2, 1L))) {
-      val want = E2.volumeAnomaliesOf(slice.toDF("ts")).collect().map(_.toSeq).toSet
-      val gotB = got.filter(col("batch_id") === id).drop("batch_id")
+    withTempDir("anomalymon") { tmp =>
+      val dir = tmp.toString
+      val stream = MemoryStream[java.sql.Timestamp]
+      val q = StreamingOps.anomalyMonitor(stream.toDF().toDF("ts"), s"$dir/out")
+        .option("checkpointLocation", s"$dir/ckpt").start()
+      try {
+        stream.addData(b1); q.processAllAvailable()
+        stream.addData(b2); q.processAllAvailable()
+        stream.addData(b3); q.processAllAvailable()
+      } finally q.stop()
+      val got = spark.read.parquet(s"$dir/out")
+      assert(got.select("batch_id").distinct().count() == 3, "one report per micro-batch")
+      for ((slice, id) <- Seq((b1, 0L), (b2, 1L))) {
+        val want = E2.volumeAnomaliesOf(slice.toDF("ts")).collect().map(_.toSeq).toSet
+        val gotB = got.filter(col("batch_id") === id).drop("batch_id")
+          .collect().map(_.toSeq).toSet
+        assert(gotB == want, s"batch $id report diverged from the batch twin")
+      }
+      // the flood day trips in its own wave; the uniform wave stays quiet
+      assert(got.filter(col("batch_id") === 1L && col("is_anomaly")).count() == 1)
+      assert(got.filter(col("batch_id") === 0L && col("is_anomaly")).count() == 0)
+      // the thin wave ships volumes but withholds the verdict: is_anomaly is
+      // null on every row (a 2-day median/MAD would flag anything or nothing),
+      // and the non-flag columns still match the batch twin
+      val thin = got.filter(col("batch_id") === 2L)
+      assert(thin.count() == 2 && thin.filter(col("is_anomaly").isNotNull).count() == 0,
+        "sub-AnomalyMinDays batch must null the verdict")
+      val thinWant = E2.volumeAnomaliesOf(b3.toDF("ts")).drop("is_anomaly")
         .collect().map(_.toSeq).toSet
-      assert(gotB == want, s"batch $id report diverged from the batch twin")
+      assert(thin.drop("batch_id", "is_anomaly").collect().map(_.toSeq).toSet == thinWant,
+        "thin batch must still report day volumes and baseline columns")
     }
-    // the flood day trips in its own wave; the uniform wave stays quiet
-    assert(got.filter(col("batch_id") === 1L && col("is_anomaly")).count() == 1)
-    assert(got.filter(col("batch_id") === 0L && col("is_anomaly")).count() == 0)
-    // the thin wave ships volumes but withholds the verdict: is_anomaly is
-    // null on every row (a 2-day median/MAD would flag anything or nothing),
-    // and the non-flag columns still match the batch twin
-    val thin = got.filter(col("batch_id") === 2L)
-    assert(thin.count() == 2 && thin.filter(col("is_anomaly").isNotNull).count() == 0,
-      "sub-AnomalyMinDays batch must null the verdict")
-    val thinWant = E2.volumeAnomaliesOf(b3.toDF("ts")).drop("is_anomaly")
-      .collect().map(_.toSeq).toSet
-    assert(thin.drop("batch_id", "is_anomaly").collect().map(_.toSeq).toSet == thinWant,
-      "thin batch must still report day volumes and baseline columns")
   }
 
   test("incremental decayed aggregate: state after N batches equals batch r64 exactly, replay-safe") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("decayed").toString
-    val rows = eventsBatch
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[E].collect()
-    // three uneven waves: the fixed-anchor weights make the standing
-    // state additive, so batch boundaries must not perturb the result
-    val (b1, rest) = rows.splitAt(rows.length / 5)
-    val (b2, b3) = rest.splitAt(rest.length / 2)
-    val stream = MemoryStream[E]
-    val q = StreamingOps.stream(stream.toDF(), dir, StreamingOps.Decayed.step)
-      .option("checkpointLocation", s"$dir/_ckpt").start()
-    try {
-      stream.addData(b1.toSeq); q.processAllAvailable()
-      stream.addData(b2.toSeq); q.processAllAvailable()
-      stream.addData(b3.toSeq); q.processAllAvailable()
-    } finally q.stop()
-    val want = graft.SparkEntry.queries("r64_decayed_agg")(spark, sf)
-      .collect().map(_.toSeq).toSet
-    val got = StreamingOps.Decayed.report(spark, dir).collect().map(_.toSeq).toSet
-    assert(got == want, "incremental state diverged from the oracled batch r64")
-    // replay idempotency: re-running the LAST step (same batch id, same
-    // rows) must rebuild from the pre-batch base and leave state unchanged
-    StreamingOps.Decayed.step(spark.createDataFrame(b3.toIndexedSeq), dir, 2L)
-    val replayed = StreamingOps.Decayed.report(spark, dir).collect().map(_.toSeq).toSet
-    assert(replayed == want, "replayed batch double-counted into additive state")
+    withTempDir("decayed") { tmp =>
+      val dir = tmp.toString
+      val rows = eventsBatch
+        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
+        .as[E].collect()
+      // three uneven waves: the fixed-anchor weights make the standing
+      // state additive, so batch boundaries must not perturb the result
+      val (b1, rest) = rows.splitAt(rows.length / 5)
+      val (b2, b3) = rest.splitAt(rest.length / 2)
+      val stream = MemoryStream[E]
+      val q = StreamingOps.stream(stream.toDF(), dir, StreamingOps.Decayed.step)
+        .option("checkpointLocation", s"$dir/_ckpt").start()
+      try {
+        stream.addData(b1.toSeq); q.processAllAvailable()
+        stream.addData(b2.toSeq); q.processAllAvailable()
+        stream.addData(b3.toSeq); q.processAllAvailable()
+      } finally q.stop()
+      val want = graft.SparkEntry.queries("r64_decayed_agg")(spark, sf)
+        .collect().map(_.toSeq).toSet
+      val got = StreamingOps.Decayed.report(spark, dir).collect().map(_.toSeq).toSet
+      assert(got == want, "incremental state diverged from the oracled batch r64")
+      // replay idempotency: re-running the LAST step (same batch id, same
+      // rows) must rebuild from the pre-batch base and leave state unchanged
+      StreamingOps.Decayed.step(spark.createDataFrame(b3.toIndexedSeq), dir, 2L)
+      val replayed = StreamingOps.Decayed.report(spark, dir).collect().map(_.toSeq).toSet
+      assert(replayed == want, "replayed batch double-counted into additive state")
+    }
   }
 
   test("incremental growth accounting: state after N batches equals batch r95 exactly, replay-safe") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("growth").toString
-    val rows = eventsBatch
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[E].collect()
-    // waves deliberately NOT in time order: a user's FIRST day can arrive
-    // in the LAST wave — re-deriving flows from the merged grain must
-    // still reclassify that user's later days from new to retained
-    val (b1, rest) = rows.reverse.splitAt(rows.length / 3)
-    val (b2, b3) = rest.splitAt(rest.length / 2)
-    val stream = MemoryStream[E]
-    val q = StreamingOps.stream(stream.toDF(), dir, StreamingOps.Growth.step)
-      .option("checkpointLocation", s"$dir/_ckpt").start()
-    try {
-      stream.addData(b1.toSeq); q.processAllAvailable()
-      stream.addData(b2.toSeq); q.processAllAvailable()
-      stream.addData(b3.toSeq); q.processAllAvailable()
-    } finally q.stop()
-    val want = graft.SparkEntry.queries("r95_growth_accounting")(spark, sf)
-      .collect().map(_.toSeq).toSet
-    val got = StreamingOps.Growth.report(spark, dir).collect().map(_.toSeq).toSet
-    assert(got == want, "incremental growth state diverged from the oracled batch r95")
-    // replay idempotency: re-running the LAST step must not perturb state
-    StreamingOps.Growth.step(spark.createDataFrame(b3.toIndexedSeq), dir, 2L)
-    val replayed = StreamingOps.Growth.report(spark, dir).collect().map(_.toSeq).toSet
-    assert(replayed == want, "replayed batch perturbed the activity-set state")
+    withTempDir("growth") { tmp =>
+      val dir = tmp.toString
+      val rows = eventsBatch
+        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
+        .as[E].collect()
+      // waves deliberately NOT in time order: a user's FIRST day can arrive
+      // in the LAST wave — re-deriving flows from the merged grain must
+      // still reclassify that user's later days from new to retained
+      val (b1, rest) = rows.reverse.splitAt(rows.length / 3)
+      val (b2, b3) = rest.splitAt(rest.length / 2)
+      val stream = MemoryStream[E]
+      val q = StreamingOps.stream(stream.toDF(), dir, StreamingOps.Growth.step)
+        .option("checkpointLocation", s"$dir/_ckpt").start()
+      try {
+        stream.addData(b1.toSeq); q.processAllAvailable()
+        stream.addData(b2.toSeq); q.processAllAvailable()
+        stream.addData(b3.toSeq); q.processAllAvailable()
+      } finally q.stop()
+      val want = graft.SparkEntry.queries("r95_growth_accounting")(spark, sf)
+        .collect().map(_.toSeq).toSet
+      val got = StreamingOps.Growth.report(spark, dir).collect().map(_.toSeq).toSet
+      assert(got == want, "incremental growth state diverged from the oracled batch r95")
+      // replay idempotency: re-running the LAST step must not perturb state
+      StreamingOps.Growth.step(spark.createDataFrame(b3.toIndexedSeq), dir, 2L)
+      val replayed = StreamingOps.Growth.report(spark, dir).collect().map(_.toSeq).toSet
+      assert(replayed == want, "replayed batch perturbed the activity-set state")
+    }
   }
 
   test("incremental adoption curve: state after N batches equals batch r78 exactly, replay-safe") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("adoption").toString
-    val rows = eventsBatch
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[E].collect()
-    // waves deliberately NOT in time order: a user's earliest day can
-    // arrive in the LAST wave — min-merge must still converge to r78
-    val (b1, rest) = rows.reverse.splitAt(rows.length / 3)
-    val (b2, b3) = rest.splitAt(rest.length / 2)
-    val stream = MemoryStream[E]
-    val q = StreamingOps.stream(stream.toDF(), dir, StreamingOps.Adoption.step)
-      .option("checkpointLocation", s"$dir/_ckpt").start()
-    try {
-      stream.addData(b1.toSeq); q.processAllAvailable()
-      stream.addData(b2.toSeq); q.processAllAvailable()
-      stream.addData(b3.toSeq); q.processAllAvailable()
-    } finally q.stop()
-    val want = graft.SparkEntry.queries("r78_cumulative_users")(spark, sf)
-      .collect().map(_.toSeq).toSet
-    val got = StreamingOps.Adoption.report(spark, dir).collect().map(_.toSeq).toSet
-    assert(got == want, "incremental adoption state diverged from the oracled batch r78")
-    // replay idempotency: re-running the LAST step must not perturb state
-    // (min is idempotent, but the versioned rebuild is what guarantees it
-    // even for a re-delivered batch id)
-    StreamingOps.Adoption.step(spark.createDataFrame(b3.toIndexedSeq), dir, 2L)
-    val replayed = StreamingOps.Adoption.report(spark, dir).collect().map(_.toSeq).toSet
-    assert(replayed == want, "replayed batch perturbed the adoption state")
+    withTempDir("adoption") { tmp =>
+      val dir = tmp.toString
+      val rows = eventsBatch
+        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
+        .as[E].collect()
+      // waves deliberately NOT in time order: a user's earliest day can
+      // arrive in the LAST wave — min-merge must still converge to r78
+      val (b1, rest) = rows.reverse.splitAt(rows.length / 3)
+      val (b2, b3) = rest.splitAt(rest.length / 2)
+      val stream = MemoryStream[E]
+      val q = StreamingOps.stream(stream.toDF(), dir, StreamingOps.Adoption.step)
+        .option("checkpointLocation", s"$dir/_ckpt").start()
+      try {
+        stream.addData(b1.toSeq); q.processAllAvailable()
+        stream.addData(b2.toSeq); q.processAllAvailable()
+        stream.addData(b3.toSeq); q.processAllAvailable()
+      } finally q.stop()
+      val want = graft.SparkEntry.queries("r78_cumulative_users")(spark, sf)
+        .collect().map(_.toSeq).toSet
+      val got = StreamingOps.Adoption.report(spark, dir).collect().map(_.toSeq).toSet
+      assert(got == want, "incremental adoption state diverged from the oracled batch r78")
+      // replay idempotency: re-running the LAST step must not perturb state
+      // (min is idempotent, but the versioned rebuild is what guarantees it
+      // even for a re-delivered batch id)
+      StreamingOps.Adoption.step(spark.createDataFrame(b3.toIndexedSeq), dir, 2L)
+      val replayed = StreamingOps.Adoption.report(spark, dir).collect().map(_.toSeq).toSet
+      assert(replayed == want, "replayed batch perturbed the adoption state")
+    }
   }
 
   test("incremental CUSUM monitor: state after N batches equals batch r81 exactly, replay-safe") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("cusum").toString
-    val rows = eventsBatch
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[E].collect()
-    // waves deliberately NOT in time order: daily counts are additive so
-    // the merged state must converge to the batch series regardless
-    val (b1, rest) = rows.reverse.splitAt(rows.length / 3)
-    val (b2, b3) = rest.splitAt(rest.length / 2)
-    val stream = MemoryStream[E]
-    val q = StreamingOps.stream(stream.toDF(), dir, StreamingOps.Cusum.step)
-      .option("checkpointLocation", s"$dir/_ckpt").start()
-    try {
-      stream.addData(b1.toSeq); q.processAllAvailable()
-      stream.addData(b2.toSeq); q.processAllAvailable()
-      stream.addData(b3.toSeq); q.processAllAvailable()
-    } finally q.stop()
-    val want = graft.SparkEntry.queries("r81_cusum_changepoint")(spark, sf)
-      .collect().map(_.toSeq).toSet
-    val got = StreamingOps.Cusum.report(spark, dir).collect().map(_.toSeq).toSet
-    assert(got == want, "incremental CUSUM state diverged from the oracled batch r81")
-    // replay idempotency: re-running the LAST step (same batch id, same
-    // rows) must rebuild from the pre-batch base and leave state unchanged
-    StreamingOps.Cusum.step(spark.createDataFrame(b3.toIndexedSeq), dir, 2L)
-    val replayed = StreamingOps.Cusum.report(spark, dir).collect().map(_.toSeq).toSet
-    assert(replayed == want, "replayed batch double-counted into additive daily state")
+    withTempDir("cusum") { tmp =>
+      val dir = tmp.toString
+      val rows = eventsBatch
+        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
+        .as[E].collect()
+      // waves deliberately NOT in time order: daily counts are additive so
+      // the merged state must converge to the batch series regardless
+      val (b1, rest) = rows.reverse.splitAt(rows.length / 3)
+      val (b2, b3) = rest.splitAt(rest.length / 2)
+      val stream = MemoryStream[E]
+      val q = StreamingOps.stream(stream.toDF(), dir, StreamingOps.Cusum.step)
+        .option("checkpointLocation", s"$dir/_ckpt").start()
+      try {
+        stream.addData(b1.toSeq); q.processAllAvailable()
+        stream.addData(b2.toSeq); q.processAllAvailable()
+        stream.addData(b3.toSeq); q.processAllAvailable()
+      } finally q.stop()
+      val want = graft.SparkEntry.queries("r81_cusum_changepoint")(spark, sf)
+        .collect().map(_.toSeq).toSet
+      val got = StreamingOps.Cusum.report(spark, dir).collect().map(_.toSeq).toSet
+      assert(got == want, "incremental CUSUM state diverged from the oracled batch r81")
+      // replay idempotency: re-running the LAST step (same batch id, same
+      // rows) must rebuild from the pre-batch base and leave state unchanged
+      StreamingOps.Cusum.step(spark.createDataFrame(b3.toIndexedSeq), dir, 2L)
+      val replayed = StreamingOps.Cusum.report(spark, dir).collect().map(_.toSeq).toSet
+      assert(replayed == want, "replayed batch double-counted into additive daily state")
+    }
   }
 
   test("incremental ACF monitor: state after N batches equals batch r96 exactly, replay-safe") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("acf").toString
-    val rows = graft.Tables.orders(spark, sf).as[O].collect()
-    // waves deliberately NOT in time order: daily cent sums are additive
-    // so the merged state must converge to the batch series
-    val (b1, rest) = rows.reverse.splitAt(rows.length / 3)
-    val (b2, b3) = rest.splitAt(rest.length / 2)
-    val stream = MemoryStream[O]
-    val q = StreamingOps.stream(stream.toDF(), dir, StreamingOps.Acf.step)
-      .option("checkpointLocation", s"$dir/_ckpt").start()
-    try {
-      stream.addData(b1.toSeq); q.processAllAvailable()
-      stream.addData(b2.toSeq); q.processAllAvailable()
-      stream.addData(b3.toSeq); q.processAllAvailable()
-    } finally q.stop()
-    val want = graft.SparkEntry.queries("r96_autocorrelation")(spark, sf)
-      .collect().map(_.toSeq).toSet
-    val got = StreamingOps.Acf.report(spark, dir).collect().map(_.toSeq).toSet
-    assert(got == want, "incremental ACF state diverged from the oracled batch r96")
-    // replay idempotency: re-running the LAST step must not double-count
-    StreamingOps.Acf.step(spark.createDataFrame(b3.toIndexedSeq), dir, 2L)
-    val replayed = StreamingOps.Acf.report(spark, dir).collect().map(_.toSeq).toSet
-    assert(replayed == want, "replayed batch double-counted into additive state")
+    withTempDir("acf") { tmp =>
+      val dir = tmp.toString
+      val rows = graft.Tables.orders(spark, sf).as[O].collect()
+      // waves deliberately NOT in time order: daily cent sums are additive
+      // so the merged state must converge to the batch series
+      val (b1, rest) = rows.reverse.splitAt(rows.length / 3)
+      val (b2, b3) = rest.splitAt(rest.length / 2)
+      val stream = MemoryStream[O]
+      val q = StreamingOps.stream(stream.toDF(), dir, StreamingOps.Acf.step)
+        .option("checkpointLocation", s"$dir/_ckpt").start()
+      try {
+        stream.addData(b1.toSeq); q.processAllAvailable()
+        stream.addData(b2.toSeq); q.processAllAvailable()
+        stream.addData(b3.toSeq); q.processAllAvailable()
+      } finally q.stop()
+      val want = graft.SparkEntry.queries("r96_autocorrelation")(spark, sf)
+        .collect().map(_.toSeq).toSet
+      val got = StreamingOps.Acf.report(spark, dir).collect().map(_.toSeq).toSet
+      assert(got == want, "incremental ACF state diverged from the oracled batch r96")
+      // replay idempotency: re-running the LAST step must not double-count
+      StreamingOps.Acf.step(spark.createDataFrame(b3.toIndexedSeq), dir, 2L)
+      val replayed = StreamingOps.Acf.report(spark, dir).collect().map(_.toSeq).toSet
+      assert(replayed == want, "replayed batch double-counted into additive state")
+    }
   }
 
   test("incremental runs monitor: state after N batches equals batch r89 exactly, replay-safe") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("runs").toString
-    val rows = graft.Tables.orders(spark, sf).as[O].collect()
-    // waves deliberately NOT in time order: daily revenue sums are
-    // additive so the merged state must converge to the batch series
-    val (b1, rest) = rows.reverse.splitAt(rows.length / 3)
-    val (b2, b3) = rest.splitAt(rest.length / 2)
-    val stream = MemoryStream[O]
-    val q = StreamingOps.stream(stream.toDF(), dir, StreamingOps.Runs.step)
-      .option("checkpointLocation", s"$dir/_ckpt").start()
-    try {
-      stream.addData(b1.toSeq); q.processAllAvailable()
-      stream.addData(b2.toSeq); q.processAllAvailable()
-      stream.addData(b3.toSeq); q.processAllAvailable()
-    } finally q.stop()
-    val want = graft.SparkEntry.queries("r89_runs_test")(spark, sf)
-      .collect().map(_.toSeq).toSet
-    val got = StreamingOps.Runs.report(spark, dir).collect().map(_.toSeq).toSet
-    assert(got == want, "incremental runs state diverged from the oracled batch r89")
-    // replay idempotency: re-running the LAST step (same batch id, same
-    // rows) must rebuild from the pre-batch base and leave state unchanged
-    StreamingOps.Runs.step(spark.createDataFrame(b3.toIndexedSeq), dir, 2L)
-    val replayed = StreamingOps.Runs.report(spark, dir).collect().map(_.toSeq).toSet
-    assert(replayed == want, "replayed batch double-counted into additive daily state")
+    withTempDir("runs") { tmp =>
+      val dir = tmp.toString
+      val rows = graft.Tables.orders(spark, sf).as[O].collect()
+      // waves deliberately NOT in time order: daily revenue sums are
+      // additive so the merged state must converge to the batch series
+      val (b1, rest) = rows.reverse.splitAt(rows.length / 3)
+      val (b2, b3) = rest.splitAt(rest.length / 2)
+      val stream = MemoryStream[O]
+      val q = StreamingOps.stream(stream.toDF(), dir, StreamingOps.Runs.step)
+        .option("checkpointLocation", s"$dir/_ckpt").start()
+      try {
+        stream.addData(b1.toSeq); q.processAllAvailable()
+        stream.addData(b2.toSeq); q.processAllAvailable()
+        stream.addData(b3.toSeq); q.processAllAvailable()
+      } finally q.stop()
+      val want = graft.SparkEntry.queries("r89_runs_test")(spark, sf)
+        .collect().map(_.toSeq).toSet
+      val got = StreamingOps.Runs.report(spark, dir).collect().map(_.toSeq).toSet
+      assert(got == want, "incremental runs state diverged from the oracled batch r89")
+      // replay idempotency: re-running the LAST step (same batch id, same
+      // rows) must rebuild from the pre-batch base and leave state unchanged
+      StreamingOps.Runs.step(spark.createDataFrame(b3.toIndexedSeq), dir, 2L)
+      val replayed = StreamingOps.Runs.report(spark, dir).collect().map(_.toSeq).toSet
+      assert(replayed == want, "replayed batch double-counted into additive daily state")
+    }
   }
 
   test("incremental WAU monitor: state after N waves equals batch r105 exactly, replay-safe") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("wau").toString
-    val rows = eventsBatch
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[E].collect()
-    // waves deliberately NOT in time order: the (user, day) activity
-    // set merges by union+distinct, so any wave order converges
-    val (b1, rest) = rows.reverse.splitAt(rows.length / 3)
-    val (b2, b3) = rest.splitAt(rest.length / 2)
-    val stream = MemoryStream[E]
-    val q = StreamingOps.stream(stream.toDF(), dir, StreamingOps.Wau.step)
-      .option("checkpointLocation", s"$dir/_ckpt").start()
-    try {
-      stream.addData(b1.toSeq); q.processAllAvailable()
-      stream.addData(b2.toSeq); q.processAllAvailable()
-      stream.addData(b3.toSeq); q.processAllAvailable()
-    } finally q.stop()
-    val want = graft.SparkEntry.queries("r105_rolling_distinct")(spark, sf)
-      .collect().map(_.toSeq).toSet
-    val got = StreamingOps.Wau.report(spark, dir).collect().map(_.toSeq).toSet
-    assert(got == want, "incremental WAU state diverged from the oracled batch r105")
-    StreamingOps.Wau.step(spark.createDataFrame(b3.toIndexedSeq), dir, 2L)
-    val replayed = StreamingOps.Wau.report(spark, dir).collect().map(_.toSeq).toSet
-    assert(replayed == want, "replayed batch corrupted the distinct-activity state")
+    withTempDir("wau") { tmp =>
+      val dir = tmp.toString
+      val rows = eventsBatch
+        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
+        .as[E].collect()
+      // waves deliberately NOT in time order: the (user, day) activity
+      // set merges by union+distinct, so any wave order converges
+      val (b1, rest) = rows.reverse.splitAt(rows.length / 3)
+      val (b2, b3) = rest.splitAt(rest.length / 2)
+      val stream = MemoryStream[E]
+      val q = StreamingOps.stream(stream.toDF(), dir, StreamingOps.Wau.step)
+        .option("checkpointLocation", s"$dir/_ckpt").start()
+      try {
+        stream.addData(b1.toSeq); q.processAllAvailable()
+        stream.addData(b2.toSeq); q.processAllAvailable()
+        stream.addData(b3.toSeq); q.processAllAvailable()
+      } finally q.stop()
+      val want = graft.SparkEntry.queries("r105_rolling_distinct")(spark, sf)
+        .collect().map(_.toSeq).toSet
+      val got = StreamingOps.Wau.report(spark, dir).collect().map(_.toSeq).toSet
+      assert(got == want, "incremental WAU state diverged from the oracled batch r105")
+      StreamingOps.Wau.step(spark.createDataFrame(b3.toIndexedSeq), dir, 2L)
+      val replayed = StreamingOps.Wau.report(spark, dir).collect().map(_.toSeq).toSet
+      assert(replayed == want, "replayed batch corrupted the distinct-activity state")
+    }
   }
 
   test("incremental watermark monitor: state after N arrival-ordered waves equals batch st6, replay-safe") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("wm").toString
-    // the watermark kernel is order-sensitive by definition, so waves
-    // must PARTITION the arrival order (the log-offset-source contract
-    // documented on watermarkStep) — split on the jittered sequence
-    val ordered = graft.queries.ExtraQueries10.wmArrivals(eventsBatch)
-      .orderBy("arrival_seq", "event_id").select("event_id").collect().map(_.getLong(0))
-    val rows = eventsBatch
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[E].collect().map(e => e.event_id -> e).toMap
-    val waves = ordered.map(rows).grouped(math.max(1, ordered.length / 3 + 1)).toSeq
-    val stream = MemoryStream[E]
-    val q = StreamingOps.stream(stream.toDF(), dir, StreamingOps.watermarkStep)
-      .option("checkpointLocation", s"$dir/_ckpt").start()
-    try {
-      waves.foreach { wv => stream.addData(wv.toSeq); q.processAllAvailable() }
-    } finally q.stop()
-    val want = graft.SparkEntry.queries("st6_watermark_audit")(spark, sf)
-      .collect().map(_.toSeq).toSet
-    val got = StreamingOps.watermarkReport(spark, dir).collect().map(_.toSeq).toSet
-    assert(got == want, "incremental watermark state diverged from the oracled batch st6")
-    // replay idempotency: re-running the LAST step (same batch id, same
-    // rows) must rebuild from the pre-batch base and leave state unchanged
-    StreamingOps.watermarkStep(spark.createDataFrame(waves.last.toIndexedSeq),
-      dir, (waves.length - 1).toLong)
-    val replayed = StreamingOps.watermarkReport(spark, dir).collect().map(_.toSeq).toSet
-    assert(replayed == want, "replayed batch double-counted into watermark state")
+    withTempDir("wm") { tmp =>
+      val dir = tmp.toString
+      // the watermark kernel is order-sensitive by definition, so waves
+      // must PARTITION the arrival order (the log-offset-source contract
+      // documented on watermarkStep) — split on the jittered sequence
+      val ordered = graft.queries.ExtraQueries10.wmArrivals(eventsBatch)
+        .orderBy("arrival_seq", "event_id").select("event_id").collect().map(_.getLong(0))
+      val rows = eventsBatch
+        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
+        .as[E].collect().map(e => e.event_id -> e).toMap
+      val waves = ordered.map(rows).grouped(math.max(1, ordered.length / 3 + 1)).toSeq
+      val stream = MemoryStream[E]
+      val q = StreamingOps.stream(stream.toDF(), dir, StreamingOps.watermarkStep)
+        .option("checkpointLocation", s"$dir/_ckpt").start()
+      try {
+        waves.foreach { wv => stream.addData(wv.toSeq); q.processAllAvailable() }
+      } finally q.stop()
+      val want = graft.SparkEntry.queries("st6_watermark_audit")(spark, sf)
+        .collect().map(_.toSeq).toSet
+      val got = StreamingOps.watermarkReport(spark, dir).collect().map(_.toSeq).toSet
+      assert(got == want, "incremental watermark state diverged from the oracled batch st6")
+      // replay idempotency: re-running the LAST step (same batch id, same
+      // rows) must rebuild from the pre-batch base and leave state unchanged
+      StreamingOps.watermarkStep(spark.createDataFrame(waves.last.toIndexedSeq),
+        dir, (waves.length - 1).toLong)
+      val replayed = StreamingOps.watermarkReport(spark, dir).collect().map(_.toSeq).toSet
+      assert(replayed == want, "replayed batch double-counted into watermark state")
+    }
   }
 
   test("incremental watermark monitor: arrival-order contract violations fail loudly") {
     implicit val sq = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("wmv").toString
-    // Natural event_id order is the obvious-but-WRONG way to stream the
-    // fixture: the ≤WmJitter jitter makes event_id waves overlap in
-    // arrival_seq, so the split would silently diverge from batch st6.
-    // The step must reject it instead of skewing the accounting.
-    import scala.jdk.CollectionConverters._
-    val slim = eventsBatch
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-    val byId = slim.orderBy("event_id").collect()
-    val half = byId.length / 2
-    StreamingOps.watermarkStep(
-      spark.createDataFrame(byId.take(half).toList.asJava, slim.schema), dir, 0L)
-    val ex = intercept[IllegalArgumentException] {
+    withTempDir("wmv") { tmp =>
+      val dir = tmp.toString
+      // Natural event_id order is the obvious-but-WRONG way to stream the
+      // fixture: the ≤WmJitter jitter makes event_id waves overlap in
+      // arrival_seq, so the split would silently diverge from batch st6.
+      // The step must reject it instead of skewing the accounting.
+      import scala.jdk.CollectionConverters._
+      val slim = eventsBatch
+        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
+      val byId = slim.orderBy("event_id").collect()
+      val half = byId.length / 2
       StreamingOps.watermarkStep(
-        spark.createDataFrame(byId.drop(half).toList.asJava, slim.schema), dir, 1L)
+        spark.createDataFrame(byId.take(half).toList.asJava, slim.schema), dir, 0L)
+      val ex = intercept[IllegalArgumentException] {
+        StreamingOps.watermarkStep(
+          spark.createDataFrame(byId.drop(half).toList.asJava, slim.schema), dir, 1L)
+      }
+      assert(ex.getMessage.contains("arrival-order contract"))
     }
-    assert(ex.getMessage.contains("arrival-order contract"))
   }
 
   test("streaming drift monitor: per-batch PSI reports equal the batch computation") {
@@ -685,27 +710,29 @@ class StreamingSpec extends AnyFunSuite {
     val arrivals = all.filter(col("b") >= 50).orderBy("doc_id")
       .select(col("doc_id"), col("n_chars")).as[(Long, Long)].collect()
     val (b1, b2) = arrivals.splitAt(arrivals.length / 2)
-    val dir = java.nio.file.Files.createTempDirectory("driftmon").toString
-    val stream = MemoryStream[(Long, Long)]
-    val q = StreamingOps.driftMonitor(
-      stream.toDF().toDF("doc_id", "n_chars"), refShares, s"$dir/out")
-      .option("checkpointLocation", s"$dir/ckpt").start()
-    try {
-      stream.addData(b1.toSeq); q.processAllAvailable()
-      stream.addData(b2.toSeq); q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.read.parquet(s"$dir/out")
-    assert(got.select("batch_id").distinct().count() == 2, "one report per micro-batch")
-    for ((slice, id) <- Seq((b1, 0L), (b2, 1L))) {
-      val want = E2.psiReport(refShares,
-          E2.driftShares(slice.toSeq.toDF("doc_id", "n_chars"), col("n_chars")))
-        .collect().map(_.toSeq).toSet
-      val gotB = got.filter(col("batch_id") === id).drop("batch_id")
-        .collect().map(_.toSeq).toSet
-      assert(gotB == want, s"batch $id report diverged from the batch twin")
+    withTempDir("driftmon") { tmp =>
+      val dir = tmp.toString
+      val stream = MemoryStream[(Long, Long)]
+      val q = StreamingOps.driftMonitor(
+        stream.toDF().toDF("doc_id", "n_chars"), refShares, s"$dir/out")
+        .option("checkpointLocation", s"$dir/ckpt").start()
+      try {
+        stream.addData(b1.toSeq); q.processAllAvailable()
+        stream.addData(b2.toSeq); q.processAllAvailable()
+      } finally q.stop()
+      val got = spark.read.parquet(s"$dir/out")
+      assert(got.select("batch_id").distinct().count() == 2, "one report per micro-batch")
+      for ((slice, id) <- Seq((b1, 0L), (b2, 1L))) {
+        val want = E2.psiReport(refShares,
+            E2.driftShares(slice.toSeq.toDF("doc_id", "n_chars"), col("n_chars")))
+          .collect().map(_.toSeq).toSet
+        val gotB = got.filter(col("batch_id") === id).drop("batch_id")
+          .collect().map(_.toSeq).toSet
+        assert(gotB == want, s"batch $id report diverged from the batch twin")
+      }
+      // non-vacuity: the total rows carry a real PSI value
+      assert(got.filter(col("bin") === -1 && col("psi") =!= 0.0).count() == 2)
     }
-    // non-vacuity: the total rows carry a real PSI value
-    assert(got.filter(col("bin") === -1 && col("psi") =!= 0.0).count() == 2)
   }
 
   test("stream-static incremental dedup matches p07's 'new' disposition set") {
@@ -740,23 +767,25 @@ class StreamingSpec extends AnyFunSuite {
   test("foreachBatch merge sink: upserts accumulate; batch replay is idempotent") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("merge_sink").toString
-    case class Upd(k: Long, v: String)
-    val stream = MemoryStream[(Long, String)]
-    val q = StreamingOps.mergeSink(
-        stream.toDF().toDF("k", "v"), dir, "k")
-      .option("checkpointLocation", s"$dir/ckpt").start()
-    try {
-      stream.addData(Seq(1L -> "a", 2L -> "b")); q.processAllAvailable()
-      stream.addData(Seq(2L -> "B2", 3L -> "c")); q.processAllAvailable()
-    } finally q.stop()
-    def state = StreamingOps.readMerged(spark, dir)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(state == Map(1L -> "a", 2L -> "B2", 3L -> "c"))
-    // replay the LAST batch (the failure-recovery path): same content
-    val replay = Seq(2L -> "B2", 3L -> "c").toDF("k", "v")
-    StreamingOps.mergeBatch(replay, dir, "k", batchId = 1L)
-    assert(state == Map(1L -> "a", 2L -> "B2", 3L -> "c"))
+    withTempDir("merge_sink") { tmp =>
+      val dir = tmp.toString
+      case class Upd(k: Long, v: String)
+      val stream = MemoryStream[(Long, String)]
+      val q = StreamingOps.mergeSink(
+          stream.toDF().toDF("k", "v"), dir, "k")
+        .option("checkpointLocation", s"$dir/ckpt").start()
+      try {
+        stream.addData(Seq(1L -> "a", 2L -> "b")); q.processAllAvailable()
+        stream.addData(Seq(2L -> "B2", 3L -> "c")); q.processAllAvailable()
+      } finally q.stop()
+      def state = StreamingOps.readMerged(spark, dir)
+        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      assert(state == Map(1L -> "a", 2L -> "B2", 3L -> "c"))
+      // replay the LAST batch (the failure-recovery path): same content
+      val replay = Seq(2L -> "B2", 3L -> "c").toDF("k", "v")
+      StreamingOps.mergeBatch(replay, dir, "k", batchId = 1L)
+      assert(state == Map(1L -> "a", 2L -> "B2", 3L -> "c"))
+    }
   }
 
   test("misra-gries sketches merge across micro-batches with bounds intact") {
@@ -799,23 +828,25 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming ingest e2e: partitioned exactly-once file sink round-trips") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("ingest_sink").toString
-    val stream = MemoryStream[Doc]
-    val q = StreamingOps.ingestDocs(stream.toDF()).writeStream
-      .format("parquet").option("path", s"$dir/data")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .partitionBy("split").outputMode("append").start()
-    val docs = (1L to 40L).map(i => Doc(i, "srcA", s"word$i alpha beta gamma plus tail $i"))
-    stream.addData(docs.take(20)); q.processAllAvailable()
-    stream.addData(docs.drop(20)); q.processAllAvailable()
-    q.stop()
-    val back = spark.read.parquet(s"$dir/data")
-    assert(back.count() == 40)
-    // partition column survives and matches the deterministic assignment
-    val got = back.select("doc_id", "split").collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    val want = StreamingOps.ingestDocs(docs.toDF()).select("doc_id", "split")
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(got == want)
+    withTempDir("ingest_sink") { tmp =>
+      val dir = tmp.toString
+      val stream = MemoryStream[Doc]
+      val q = StreamingOps.ingestDocs(stream.toDF()).writeStream
+        .format("parquet").option("path", s"$dir/data")
+        .option("checkpointLocation", s"$dir/ckpt")
+        .partitionBy("split").outputMode("append").start()
+      val docs = (1L to 40L).map(i => Doc(i, "srcA", s"word$i alpha beta gamma plus tail $i"))
+      stream.addData(docs.take(20)); q.processAllAvailable()
+      stream.addData(docs.drop(20)); q.processAllAvailable()
+      q.stop()
+      val back = spark.read.parquet(s"$dir/data")
+      assert(back.count() == 40)
+      // partition column survives and matches the deterministic assignment
+      val got = back.select("doc_id", "split").collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      val want = StreamingOps.ingestDocs(docs.toDF()).select("doc_id", "split")
+        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      assert(got == want)
+    }
   }
 
   test("streaming batch packer: open batches carry across micro-batches; equals p18") {

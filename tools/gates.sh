@@ -117,8 +117,18 @@ fi
 echo "== COVERAGE.md counts (generated from the live registry, r6 item 6)"
 python3 tools/sync_coverage.py /tmp/gates_sf001
 
+# The forked test JVM gets a fresh java.io.tmpdir, and the suite must
+# leave nothing there: every spec deletes its scratch dirs, the test
+# session its warehouse, and pools build in the JVM-private root that is
+# deleted at exit.
 echo "== sbt test"
-sbt -batch test 2>&1 | grep -E 'Tests:|\*\*\* FAILED'
+test_tmp=$(mktemp -d)
+sbt -batch "set Test / javaOptions += \"-Djava.io.tmpdir=$test_tmp\"" test 2>&1 \
+  | grep -E 'Tests:|\*\*\* FAILED'
+echo "== sbt test leaves no scratch dir behind"
+left=$(find "$test_tmp" -mindepth 1 -maxdepth 1)
+rm -rf "$test_tmp"
+[ -z "$left" ] || { echo "sbt test left scratch dirs: $left"; exit 1; }
 
 echo "== benchmark checker tests (no Spark)"
 python3 -m unittest discover -s perfbench -p 'test_*.py' 2>&1 | tail -1
