@@ -13,15 +13,23 @@ import graft.etl.{ConfigLoader, Enrich, Pipeline}
   *
   * Fail-fast guards mirror the reference: exit 1 on missing/invalid
   * config (a non-positive or non-integer `SPARK_GRAFT_CPUS` included)
-  * or empty extract.
+  * or empty extract. An unknown flag or a flag without a value prints
+  * the usage line and exits 1 too.
   */
 object Main {
+  private val Flags = Set("--config", "--pages", "--out")
+
+  private def usage(): Nothing = {
+    System.err.println("usage: graft.Main --config <file> [--pages <dir>] [--out <dir>]")
+    sys.exit(1)
+  }
+
   def main(args: Array[String]): Unit = {
-    val opts = args.sliding(2, 2).collect { case Array(k, v) => k -> v }.toMap
-    val configPath = opts.getOrElse("--config", {
-      System.err.println("usage: graft.Main --config <file> [--pages <dir>] [--out <dir>]")
-      sys.exit(1)
-    })
+    val opts = args.grouped(2).map {
+      case Array(k, v) if Flags(k) => k -> v
+      case _ => usage()
+    }.toMap
+    val configPath = opts.getOrElse("--config", usage())
     val cfg =
       try ConfigLoader.load(configPath)
       catch {

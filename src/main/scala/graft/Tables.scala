@@ -21,7 +21,7 @@ object Tables {
     * queries that fixed planning cost dominates small-SF benchmarks.
     * CONTRACT: a dir is treated as immutable once loaded — the memo
     * returns the original file listing even if the path is rewritten
-    * (call [[invalidate]] after rewriting a cached path). Entries for
+    * within the session. Entries for
     * stopped sessions are dropped lazily on the next load. */
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
@@ -32,13 +32,6 @@ object Tables {
     cache.keySet.removeIf(k => k._1.sparkContext.isStopped)
     cache.computeIfAbsent((spark, dir, name),
       _ => spark.read.parquet(s"$dir/$name.parquet"))
-  }
-
-  /** Forget memoized relations (all, or one dir's) — required after
-    * rewriting parquet under a previously-loaded path. */
-  def invalidate(dir: Option[String] = None): Unit = dir match {
-    case None => cache.clear()
-    case Some(d) => cache.keySet.removeIf(_._2 == d)
   }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")

@@ -149,20 +149,3 @@ class SlowRowClassifier(busyWorkIters: Int = 50000) extends RowClassifier {
     else Some(RuleClassifier.classify(criteria))
   }
 }
-
-/** Second seam implementation: a response cache (keyed by criteria hash)
-  * shipped to executors as a broadcast variable — the standard pattern
-  * for re-running an LLM-enriched pipeline without re-paying inference:
-  * cache hits resolve locally, misses fall through to the backing
-  * classifier (a remote impl in production; [[RuleRowClassifier]] here).
-  * At 100 TB the cache would be a broadcast of the hot keys or a
-  * map-side join against a cache table; the seam is identical. */
-class CachedClassifier(
-    cache: org.apache.spark.broadcast.Broadcast[Map[String, String]],
-    fallback: RowClassifier) extends RowClassifier {
-  def classify(criteria: String): Option[String] =
-    cache.value.get(criteria) match {
-      case hit @ Some(_) => hit
-      case None => fallback.classify(criteria)
-    }
-}

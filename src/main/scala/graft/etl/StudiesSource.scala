@@ -5,6 +5,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import com.fasterxml.jackson.core.{JsonFactory, JsonParser, JsonToken}
 
 /** Sources for raw ClinicalTrials.gov-shaped study documents.
   *
@@ -26,11 +27,61 @@ import org.apache.spark.sql.types.StructType
   * chain of one page.
   *
   * Offline stand-in: a page document is a file (any Hadoop path) and
-  * `nextPageToken` holds the *name of the next page file*. A real HTTP
-  * implementation fetches through [[PageFetcher]] instead; both walks
-  * read tokens with the same rule, [[PageFetcher.readPage]].
+  * `nextPageToken` holds the *name of the next page file*. [[walk]] is
+  * the one page-chain walk and [[readPage]] its one token rule; the
+  * REST fetch itself is not ported, since the port runs offline.
   */
 object StudiesSource {
+
+  // Jackson ships on the Spark classpath; driver-side, one page at a time
+  // — not a per-row hot path.
+  private val json = new JsonFactory()
+
+  /** What a page-chain walk needs from one page: the token of the next
+    * page and how many study objects the page holds. */
+  private final case class PageInfo(token: Option[String], studies: Long)
+
+  /** The token rule of the page-chain walk, read with a streaming
+    * parser so no page is built as a tree: each study is counted and
+    * skipped with `skipChildren()`. `nextPageToken` continues the chain
+    * only when it is a non-empty string; absent, empty (`""`), null or
+    * non-string ends it, like the reference's `if not next_page_token`
+    * break (`etl.py:147-150`). Field order does not matter; a repeated
+    * field keeps its last value. None = the document is not a JSON
+    * object; malformed JSON throws the parser's IOException, and so does
+    * a `studies` element that is not an object (naming its index): the
+    * declared-schema scan would drop such a page without an error.
+    * Closes `in`. */
+  private def readPage(in: JsonParser): Option[PageInfo] =
+    try {
+      if (in.nextToken() != JsonToken.START_OBJECT) None
+      else {
+        var token: Option[String] = None
+        var studies = 0L
+        while (in.nextToken() == JsonToken.FIELD_NAME) {
+          val field = in.currentName()
+          val value = in.nextToken()
+          field match {
+            case "nextPageToken" =>
+              token = if (value == JsonToken.VALUE_STRING) Some(in.getText).filter(_.nonEmpty) else None
+              in.skipChildren()
+            case "studies" =>
+              studies = 0L
+              if (value == JsonToken.START_ARRAY)
+                while (in.nextToken() != JsonToken.END_ARRAY) {
+                  if (in.currentToken() != JsonToken.START_OBJECT)
+                    throw new java.io.IOException(
+                      s"studies[$studies] is not a JSON object (${in.currentToken()})")
+                  studies += 1
+                  in.skipChildren()
+                }
+              else in.skipChildren()
+            case _ => in.skipChildren()
+          }
+        }
+        Some(PageInfo(token, studies))
+      }
+    } finally in.close()
 
   /** Explode a page-document frame read against [[ReadSchema]] into one
     * row per raw study. */
@@ -56,7 +107,7 @@ object StudiesSource {
         try {
           val p = new Path(path)
           val in: java.io.InputStream = p.getFileSystem(conf).open(p)
-          PageFetcher.readPage(PageFetcher.json.createParser(in))
+          readPage(json.createParser(in))
         } catch {
           case e: java.io.IOException =>
             throw new java.io.IOException(s"extract aborted: cannot read page $path: ${e.getMessage}", e)
@@ -70,17 +121,17 @@ object StudiesSource {
     Walk(files.toSeq, studies)
   }
 
-  /** The page document as every study read declares it ([[scan]] and
-    * [[PageFetcher.readFetched]]; no study read infers a schema): exactly
-    * the study leaves [[Flatten]] and [[Essie.compile]] use, all strings
-    * but `phases` and `locations`. Declaring it skips schema inference (an
-    * eager full parse of every page), lets the parser decode only these
-    * leaves, and makes every filter resolve whichever optional leaves a
-    * chain happens to hold, an empty one included. A string leaf holding
+  /** The page document as [[scan]], the one study read, declares it (no
+    * study read infers a schema): exactly the study leaves [[Flatten]] and
+    * [[Essie.compile]] use, all strings but `phases` and `locations`.
+    * Declaring it skips schema inference (an eager full parse of every
+    * page), lets the parser decode only these leaves, and makes every
+    * filter resolve whichever optional leaves a chain happens to hold, an
+    * empty one included. A string leaf holding
     * another JSON value reads as that value's source text; a struct or
     * array holding a value of another type reads as null (`'N/A'`), and
     * its row is kept. A non-object study is rejected by the walk
-    * ([[PageFetcher.readPage]]). */
+    * ([[readPage]]). */
   val ReadSchema: StructType = StructType.fromDDL(
     """studies ARRAY<STRUCT<protocolSection: STRUCT<
       |  identificationModule: STRUCT<nctId: STRING, briefTitle: STRING, officialTitle: STRING>,

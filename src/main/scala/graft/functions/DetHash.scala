@@ -13,9 +13,13 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
   * reproduced or audited independently at any parallelism. */
 object DetHash {
 
+  /** The salted coin: leading 6 hex digits of md5(salt || key) as a
+    * BIGINT in [0, 2^24). */
+  def coin(key: Column, salt: String): Column =
+    conv(substring(md5(concat(lit(salt), key.cast(StringType))), 1, 6), 16, 10).cast(LongType)
+
   def mdBucket(key: Column, salt: String, mod: Int): Column =
-    (conv(substring(md5(concat(lit(salt), key.cast(StringType))), 1, 6), 16, 10)
-      .cast(LongType) % mod).cast(IntegerType)
+    (coin(key, salt) % mod).cast(IntegerType)
 
   def mdBucketSql(key: String, salt: String, mod: Int): String =
     s"CAST(CAST(concat('0x', substring(md5(concat('$salt', CAST($key AS VARCHAR))), 1, 6)) AS BIGINT) % $mod AS INTEGER)"

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 import graft.expressions.CosineSimilarity
@@ -33,9 +33,4 @@ object VectorOps {
     import org.apache.spark.sql.GraftSqlBridge
     GraftSqlBridge.column(CosineSimilarity(GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
   }
-
-  /** Register `cosine_similarity` for SQL use. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_similarity", exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
 }

@@ -3,9 +3,9 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BinaryType, DoubleType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{BinaryType, DoubleType, IntegerType, LongType}
 import graft.Tables
-import graft.functions.VectorOps
+import graft.functions.{DetHash, VectorOps}
 import graft.queries.Relational.{Fn, Q}
 
 /** Round-9 batch 25: index/state maintenance + curation algebra —
@@ -97,8 +97,7 @@ object ExtraQueries23 {
         coalesce(col("n_docs"), lit(1L)).cast(LongType).as("n_docs"))
       .withColumn("kept",
         col("doc_id") === col("cluster") ||
-          (conv(substring(md5(concat(lit("soft:"), col("doc_id").cast(StringType))), 1, 6), 16, 10)
-            .cast(LongType) % col("n_docs")) === 0L)
+          (DetHash.coin(col("doc_id"), "soft:") % col("n_docs")) === 0L)
       .orderBy("doc_id")
   }
   private def p31Sql =

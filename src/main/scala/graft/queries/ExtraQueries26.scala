@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType, LongType, StringType}
 import graft.Tables
-import graft.functions.VectorOps
+import graft.functions.{DetHash, VectorOps}
 import graft.queries.Relational.{Fn, Q}
 
 /** Round-9 batch 28: estimator machinery at scale — the Poisson
@@ -394,9 +394,7 @@ object ExtraQueries26 {
     val assets = graft.multimodal.Multimodal.attachPayload(docs(s, d))
       .select(col("doc_id"), col("meta.mime").as("mime"),
         col("meta.n_bytes").cast(LongType).as("n_bytes"), col("payload"))
-      .withColumn("coin",
-        conv(substring(md5(concat(lit("tray:"), col("doc_id").cast(StringType))), 1, 6), 16, 10)
-          .cast(LongType))
+      .withColumn("coin", DetHash.coin(col("doc_id"), "tray:"))
     assets
       .withColumn("rk", row_number().over(
         Window.partitionBy("mime").orderBy(col("coin"), col("doc_id"))).cast(LongType))

@@ -3,9 +3,9 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 import graft.Tables
-import graft.functions.VectorOps
+import graft.functions.{DetHash, VectorOps}
 import graft.queries.Relational.{Fn, Q}
 
 /** Round-9 batch 29: tuning sweeps + estimator audits — the d26 horizon
@@ -17,10 +17,6 @@ import graft.queries.Relational.{Fn, Q}
 object ExtraQueries27 {
 
   private def docs(s: SparkSession, d: String): DataFrame = Tables.documents(s, d)
-
-  private def md6(salt: String, key: org.apache.spark.sql.Column) =
-    conv(substring(md5(concat(lit(salt), key.cast(StringType))), 1, 6), 16, 10)
-      .cast(LongType)
 
   // --------------------- d29 dedup-horizon sweep
 
@@ -159,8 +155,8 @@ object ExtraQueries27 {
     * conditional-aggregation pass at the language grain — the samples
     * are flags, never materialized. */
   private val r124: Fn = (s, d) => {
-    val s1 = (pmod(md6("cap1:", col("doc_id")), lit(1000)) < CapRate).cast(LongType)
-    val s2 = (pmod(md6("cap2:", col("doc_id")), lit(1000)) < CapRate).cast(LongType)
+    val s1 = (pmod(DetHash.coin(col("doc_id"), "cap1:"), lit(1000)) < CapRate).cast(LongType)
+    val s2 = (pmod(DetHash.coin(col("doc_id"), "cap2:"), lit(1000)) < CapRate).cast(LongType)
     docs(s, d).select(col("lang"), s1.as("s1"), s2.as("s2"))
       .groupBy("lang")
       .agg(count(lit(1)).as("true_n"),
@@ -208,8 +204,8 @@ object ExtraQueries27 {
     * ONE double division (denominator floored at 1). Scale shape: one
     * conditional-aggregation pass at the language grain. */
   private val u30: Fn = (s, d) => {
-    val s1 = (pmod(md6("cap1:", col("doc_id")), lit(1000)) < CapRate).cast(LongType)
-    val s2 = (pmod(md6("cap2:", col("doc_id")), lit(1000)) < CapRate).cast(LongType)
+    val s1 = (pmod(DetHash.coin(col("doc_id"), "cap1:"), lit(1000)) < CapRate).cast(LongType)
+    val s2 = (pmod(DetHash.coin(col("doc_id"), "cap2:"), lit(1000)) < CapRate).cast(LongType)
     docs(s, d).select(col("lang"), s1.as("s1"), s2.as("s2"))
       .groupBy("lang")
       .agg(
@@ -280,7 +276,7 @@ object ExtraQueries27 {
       .select("source", "quota")
     docs(s, d)
       .select(col("doc_id"), col("source"),
-        md6("eval:", col("doc_id")).as("coin"))
+        DetHash.coin(col("doc_id"), "eval:").as("coin"))
       .join(broadcast(withQuota), Seq("source"))
       .withColumn("rk", row_number().over(
         Window.partitionBy("source").orderBy(col("coin"), col("doc_id"))).cast(LongType))

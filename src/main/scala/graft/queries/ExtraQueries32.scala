@@ -2,9 +2,9 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType, LongType}
 import graft.Tables
-import graft.functions.VectorOps
+import graft.functions.{DetHash, VectorOps}
 import graft.queries.Relational.{Fn, Q}
 
 /** Round-9 batch 34: effect sizes, drift, and data contracts — the
@@ -256,8 +256,7 @@ object ExtraQueries32 {
       .groupBy(md5(substring(col("text"), 1, 100)).as("h"))
       .agg(count(lit(1)).as("fam_size"))
       .withColumn("coin",
-        pmod(conv(substring(md5(concat(lit("fam:"), col("h"))), 1, 6), 16, 10)
-          .cast(LongType), lit(1000)))
+        pmod(DetHash.coin(col("h"), "fam:"), lit(1000)))
       .withColumn("sampled", col("coin") < FamRate)
     fams.agg(
       count(lit(1)).cast(LongType).as("n_families"),

@@ -37,18 +37,6 @@ class EnrichSpec extends AnyFunSuite {
     assert(out.forall(_.getAs[String]("ai_determined_value") != null))
   }
 
-  test("cached classifier: hits override, misses fall through") {
-    val someCriteria = flat.select("criteria").collect().head.getString(0)
-    val cache = spark.sparkContext.broadcast(Map(someCriteria -> "CACHED_LABEL"))
-    val cached = new CachedClassifier(cache, RuleRowClassifier)
-    val out = Enrich.mapPartitionsEnrich(flat, cached, perPartitionQps = 1e9)
-      .select("criteria", "ai_determined_value").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(out(someCriteria) == "CACHED_LABEL")
-    val miss = out.keys.find(_ != someCriteria).get
-    assert(out(miss) == RuleClassifier.classify(miss)) // fallback path
-  }
-
   test("mapPartitions seam agrees with vectorized classifier") {
     val viaMp = Enrich.mapPartitionsEnrich(flat, RuleRowClassifier, perPartitionQps = 1e9)
       .select("nct_id", "ai_determined_value").collect()

@@ -105,6 +105,22 @@ class StudiesSourceSpec extends AnyFunSuite {
     }
   }
 
+  test("a chain longer than the page cap stops at 100 pages, or at maxPages") {
+    val n = 120
+    val dir = chain((1 to n).map { i =>
+      val next = if (i < n) s""", "nextPageToken": "page_${i + 1}.json"""" else ""
+      s"page_$i.json" -> s"""{"studies": [${study(s"S$i")}]$next}"""
+    }: _*)
+    for ((maxPages, want) <- Seq((None, 100), (Some(5), 5))) {
+      val w = maxPages.fold(StudiesSource.walk(dir))(m => StudiesSource.walk(dir, maxPages = m))
+      assert(w.files.map(Path.of(_).getFileName.toString) == (1 to want).map(i => s"page_$i.json"))
+      assert(w.studies == want)
+      val scanned = maxPages.fold(StudiesSource.readPaged(spark, dir))(
+        m => StudiesSource.readPaged(spark, dir, maxPages = m)).count()
+      assert(scanned == w.studies, maxPages)
+    }
+  }
+
   test("a missing page aborts the extract, naming the page") {
     val dir = chain("page_1.json" -> s"""{"studies": [${study("A")}], "nextPageToken": "gone.json"}""")
     val e = intercept[java.io.IOException](StudiesSource.walk(dir))
@@ -136,7 +152,6 @@ class StudiesSourceSpec extends AnyFunSuite {
       val dir = chain("page_1.json" -> s"""{"studies": [${study("A")}, $bad]}""")
       val e = intercept[java.io.IOException](StudiesSource.readPaged(spark, dir))
       assert(e.getMessage.contains("page_1.json") && e.getMessage.contains("studies[1]"), bad)
-      assert(PageFetcher.fetchPages(new FilePageFetcher(dir)).isEmpty, bad)
     }
     val dir = chain("page_1.json" -> s"""{"studies": [${study("A")}, {"protocolSection": {
       "identificationModule": {"nctId": "B"}, "statusModule": {"startDateStruct": "2020-01-01"},

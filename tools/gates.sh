@@ -85,6 +85,11 @@ main_out=$(java -cp "$CP" "${JAVA_FLAGS[@]}" graft.Main --config fixtures/config
 echo "$main_out"
 [ "$main_out" = "rows=8 processed=2 bypassed=6" ] || { echo "graft.Main counts differ"; exit 1; }
 cmp /tmp/gates_main/part-*.csv fixtures/expected/pipeline_out.csv
+echo "== graft.Main rejects a mistyped flag with exit 1"
+bad_rc=0
+java -cp "$CP" "${JAVA_FLAGS[@]}" graft.Main --config fixtures/config.yaml \
+  --outt /tmp/gates_bad >/dev/null 2>/tmp/gates_bad.log || bad_rc=$?
+[ "$bad_rc" = 1 ] || { tail -5 /tmp/gates_bad.log; echo "graft.Main --outt exited $bad_rc, want 1"; exit 1; }
 
 # Every pool's raw build must plan (graft.Explain resolves pool:<key>
 # through PoolWarmup.rawBuilds and exits 1 on an unknown key), and the
