@@ -4,27 +4,23 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-/** Engine-portable hash primitives for the signature-based dedup
-  * operators (d04 MinHash-LSH, d05 SimHash).
+/** The engine-portable hash, spelled once per engine, and the
+  * signature-dedup constants built on it (d04 MinHash-LSH, d05 SimHash).
   *
-  * Round 3 shipped these on Spark's `xxhash64`, which DuckDB cannot
-  * compute — they were the only two achievable-but-unoracled queries in
-  * the registry. This module replaces the hash family with one both
-  * engines evaluate bit-identically, the same md5-prefix trick proven by
-  * [[DetHash]] and the p01-p16 oracles:
-  *
-  *   - base hash: the leading hex digits of `md5(value)` parsed as an
-  *     integer — `conv(substring(md5(x),1,N),16,10)` in Spark,
-  *     `CAST(concat('0x', substring(md5(x),1,N)) AS BIGINT)` in DuckDB.
-  *     7 hex digits (28 bits) for MinHash shingle bases, 15 (60 bits)
-  *     for SimHash bit sources.
+  *   - the hash: the leading `hexChars` (1-15) hex digits of `md5(x)`
+  *     read as a non-negative BIGINT. [[md5Prefix]] is the only Spark
+  *     spelling, [[md5PrefixSql]] the only DuckDB one and
+  *     [[md5PrefixLong]] the JVM mirror; all three agree bit for bit
+  *     (PortableHashSpec), so Spark and the oracle split, shard, sample
+  *     and sign identically. [[DetHash]] salts it into coins and buckets.
+  *     Engine-native hashes (`xxhash64`, `hash`) differ across engines.
   *   - MinHash permutations: the classic universal affine family
   *     h_j(x) = (a_j·x + b_j) mod P over prime P = 1e9+7 > 2^28
   *     (Broder, "On the resemblance and containment of documents",
-  *     1997; Carter-Wegman universal hashing). All arithmetic stays
-  *     below 2^59 (a_j < 2^30, x < 2^28), so 64-bit signed evaluation
-  *     is exact in BOTH engines — no wrap in Spark, no overflow error
-  *     in DuckDB.
+  *     1997; Carter-Wegman universal hashing) over a 7-digit (28-bit)
+  *     base. All arithmetic stays below 2^59 (a_j < 2^30, x < 2^28), so
+  *     64-bit signed evaluation is exact in BOTH engines — no wrap in
+  *     Spark, no overflow error in DuckDB.
   *   - the a_j/b_j constants are themselves md5-derived (seeded by the
   *     permutation index), generated once here and interpolated into
   *     the oracle SQL as a 64-row VALUES table — the same
@@ -42,32 +38,16 @@ object PortableHash {
 
   val MinhashPerms = 64
 
-  /** JVM-side mirror of the base hash (used by constant generation and
-    * the fused kernels): leading `hexChars` hex digits of the md5 of the
-    * UTF-8 bytes, as a non-negative Long. Identical to Spark's
-    * `conv(substring(md5(x),1,hexChars),16,10)` and DuckDB's
-    * `CAST(concat('0x', substring(md5(x),1,hexChars)) AS BIGINT)`. */
-  def md5PrefixLong(bytes: Array[Byte], hexChars: Int): Long = {
-    val d = digest.get()
-    d.reset()
-    val h = d.digest(bytes)
-    var v = 0L
-    var i = 0
-    while (i < hexChars) {
-      val b = h(i >> 1) & 0xff
-      v = (v << 4) | (if ((i & 1) == 0) b >>> 4 else b & 0xf)
-      i += 1
-    }
-    v
-  }
+  /** The JVM mirror of [[md5Prefix]] over UTF-8 bytes (constant
+    * generation and the fused kernels). */
+  def md5PrefixLong(bytes: Array[Byte], hexChars: Int): Long =
+    md5PrefixLongRange(bytes, 0, bytes.length, hexChars)
 
   def md5PrefixLong(s: String, hexChars: Int): Long =
     md5PrefixLong(s.getBytes(java.nio.charset.StandardCharsets.UTF_8), hexChars)
 
-  /** Range variant for kernels hashing many slices of one byte array
-    * (d21's per-gram hashing): md5 over bytes[off, off+len) without
-    * allocating a copy per gram. Bit-identical to
-    * `md5PrefixLong(bytes.slice(off, off+len), hexChars)`. */
+  /** md5 over bytes[off, off+len) without copying the slice (d21 hashes
+    * many grams of one array). */
   def md5PrefixLongRange(bytes: Array[Byte], off: Int, len: Int, hexChars: Int): Long = {
     val d = digest.get()
     d.reset()
@@ -95,16 +75,12 @@ object PortableHash {
   val MinhashB: Array[Long] =
     Array.tabulate(MinhashPerms)(j => md5PrefixLong(s"minhash-b:$j", 15) % P)
 
-  /** Spark column: 28-bit md5-prefix base hash. */
-  def hex7(c: Column): Column =
-    conv(substring(md5(c), 1, 7), 16, 10).cast(LongType)
+  /** The Spark spelling: leading `hexChars` hex digits of `md5(c)`. */
+  def md5Prefix(c: Column, hexChars: Int): Column =
+    conv(substring(md5(c), 1, hexChars), 16, 10).cast(LongType)
 
-  /** Spark column: 60-bit md5-prefix base hash. */
-  def hex15(c: Column): Column =
-    conv(substring(md5(c), 1, 15), 16, 10).cast(LongType)
-
-  /** DuckDB spelling of [[hex7]] / [[hex15]]. */
-  def hexSql(expr: String, hexChars: Int): String =
+  /** The DuckDB spelling of [[md5Prefix]] over the SQL expression `expr`. */
+  def md5PrefixSql(expr: String, hexChars: Int): String =
     s"CAST(concat('0x', substring(md5($expr), 1, $hexChars)) AS BIGINT)"
 
   /** The 64 (j, a_j, b_j) rows as a DuckDB VALUES list for a

@@ -12,8 +12,10 @@ import graft.expressions.CosineSimilarity
   *    custom code, proof the semantics need no extension;
   *  - [[cosine]]: the fused codegen'd [[CosineSimilarity]] expression —
   *    the hot path for ANN/dedup (no intermediate array allocation).
-  * VectorOpsSpec asserts they agree to 1e-12 and the queries use the fast
-  * one.
+  * DedupSimilaritySpec asserts they agree to 1e-12. The queries use the
+  * fast one on float embeddings; s37 uses [[cosineBuiltin]] on its
+  * DOUBLE centroids, whose sequential fold matches the oracle's
+  * `list_dot_product`.
   */
 object VectorOps {
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables
+import graft.functions.PortableHash.{md5Prefix, md5PrefixSql}
 import graft.queries.Relational.{Fn, Q}
 
 /** Deduplication operators over `documents` — exact, order-insensitive
@@ -244,7 +245,7 @@ object DedupQueries {
   def minhashSignaturesBuiltin(s: SparkSession, d: String): DataFrame = {
     val PH = graft.functions.PortableHash
     shingled(s, d)
-      .select(col("doc_id"), transform(col("shingles"), x => PH.hex7(x)).as("hs"))
+      .select(col("doc_id"), transform(col("shingles"), x => md5Prefix(x, 7)).as("hs"))
       .select(col("doc_id"),
         array((0 until MinhashPerms).map(j =>
           array_min(transform(col("hs"),
@@ -296,7 +297,7 @@ object DedupQueries {
       |                i -> array_to_string(w[i:i+4], ' ')))) AS s
       |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)
       |  WHERE len(w) >= 5),
-      |hs AS (SELECT doc_id, ${PH.hexSql("s", 7)} AS h FROM sh),
+      |hs AS (SELECT doc_id, ${md5PrefixSql("s", 7)} AS h FROM sh),
       |perms(j, a, b) AS (VALUES ${PH.permsValuesSql}),
       |sig AS (
       |  SELECT doc_id, j, min((h * a + b) % ${PH.P}) AS sv
@@ -388,7 +389,7 @@ object DedupQueries {
   def simhashSignaturesBuiltin(s: SparkSession, d: String): DataFrame = {
     val tok = docs(s, d).select(col("doc_id"), explode(toks).as("t"))
       .groupBy("doc_id", "t").agg(count(lit(1)).as("w"))
-      .withColumn("h", graft.functions.PortableHash.hex15(col("t")))
+      .withColumn("h", md5Prefix(col("t"), 15))
     val bitSums = (0 until SimhashBits).map { b =>
       sum(when(shiftright(col("h"), b).bitwiseAND(1) === 1, col("w")).otherwise(-col("w"))).as(s"b$b")
     }
@@ -443,13 +444,12 @@ object DedupQueries {
     * md5-prefix bit sources, exact integer bit-vote sums) — the `sig`
     * CTE both d05's band-bucket oracle and d15's sorted-neighborhood
     * oracle build on. */
-  private val simhashSigSql = {
-    val PH = graft.functions.PortableHash
+  private val simhashSigSql =
     s"""tok AS (
       |  SELECT doc_id, t, count(*) AS w
       |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents)
       |  GROUP BY doc_id, t),
-      |h AS (SELECT doc_id, w, ${PH.hexSql("t", 15)} AS h FROM tok),
+      |h AS (SELECT doc_id, w, ${md5PrefixSql("t", 15)} AS h FROM tok),
       |votes AS (
       |  SELECT doc_id, b, sum(CASE WHEN (h >> b) & 1 = 1 THEN w ELSE -w END) AS v
       |  FROM h CROSS JOIN (SELECT unnest(range(0, $SimhashBits)) AS b) bits
@@ -458,7 +458,6 @@ object DedupQueries {
       |  SELECT doc_id,
       |         CAST(sum(CASE WHEN v > 0 THEN CAST(1 AS BIGINT) << b ELSE 0 END) AS BIGINT) AS simhash
       |  FROM votes GROUP BY doc_id)""".stripMargin
-  }
 
   /** d05 oracle: SQL replay of the SimHash pipeline — signature CTEs,
     * chunk buckets, cap, and the popcount(xor) ≤ 8 verification. */
@@ -1573,7 +1572,7 @@ object DedupQueries {
        |  SELECT doc_id, text, np, unnest(range(1, np + 1)) AS p FROM base),
        |g AS (
        |  SELECT doc_id, np, CAST(p AS BIGINT) AS p,
-       |         CAST(concat('0x', substring(md5(substring(text, CAST(p AS INTEGER), $WinnowK)), 1, 7)) AS BIGINT) AS h
+       |         ${md5PrefixSql(s"substring(text, CAST(p AS INTEGER), $WinnowK)", 7)} AS h
        |  FROM pos),
        |wins AS (
        |  SELECT doc_id, np, p, h, p - j.j AS win
@@ -1622,8 +1621,7 @@ object DedupQueries {
     * (source × probe)-keyed count against it. */
   private val d22: Fn = (s, d) => {
     def bitsOf(df: DataFrame): DataFrame = (1 to BloomHashes).map(i =>
-      df.withColumn("bit", expr(
-        s"CAST(conv(substring(md5(concat('$i:', text)), 1, 8), 16, 10) AS BIGINT) % $BloomBits")))
+      df.withColumn("bit", md5Prefix(concat(lit(s"$i:"), col("text")), 8) % BloomBits))
       .reduce(_ unionByName _)
     val corpus = docs(s, d).select(col("doc_id"), col("source"), col("text"))
     val filters = bitsOf(corpus).select(col("source"), col("bit")).distinct()
@@ -1662,7 +1660,7 @@ object DedupQueries {
        |hs AS (SELECT unnest(range(1, ${BloomHashes + 1})) AS i),
        |filters AS (
        |  SELECT DISTINCT source,
-       |         CAST(concat('0x', substring(md5(concat(i, ':', text)), 1, 8)) AS BIGINT) % $BloomBits AS bit
+       |         ${md5PrefixSql("concat(i, ':', text)", 8)} % $BloomBits AS bit
        |  FROM corpus CROSS JOIN hs),
        |members AS (SELECT doc_id AS probe_id, text FROM corpus WHERE doc_id < $BloomProbes),
        |probes AS (
@@ -1672,7 +1670,7 @@ object DedupQueries {
        |sources AS (SELECT DISTINCT source FROM corpus),
        |probe_bits AS (
        |  SELECT probe_id,
-       |         CAST(concat('0x', substring(md5(concat(i, ':', text)), 1, 8)) AS BIGINT) % $BloomBits AS bit
+       |         ${md5PrefixSql("concat(i, ':', text)", 8)} % $BloomBits AS bit
        |  FROM probes CROSS JOIN hs),
        |decisions AS (
        |  SELECT pb.probe_id, s.source, count(f.bit) = $BloomHashes AS flagged

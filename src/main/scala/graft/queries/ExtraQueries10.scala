@@ -1,10 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
+import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, StringType}
 import graft.Tables
+import graft.functions.PortableHash.{md5Prefix, md5PrefixSql}
 import graft.queries.Relational.{Fn, Q, money}
 
 /** Round-7 batch 10: Monte-Carlo permutation testing, predictive
@@ -64,8 +65,7 @@ object ExtraQueries10 {
     val perm = rows
       .select(col("o_orderkey"), col("cents"),
         explode(sequence(lit(1), lit(PermB))).as("b"))
-      .withColumn("flip", expr(
-        "CAST(conv(substring(md5(concat(b, ':', o_orderkey)), 1, 8), 16, 10) AS BIGINT) % 2"))
+      .withColumn("flip", md5Prefix(concat(col("b"), lit(":"), col("o_orderkey")), 8) % 2)
       .groupBy("b")
       .agg(sum(when(col("flip") === 0, col("cents")).otherwise(0L)).as("psa"),
         sum(when(col("flip") === 0, 1L).otherwise(0L)).as("pna"),
@@ -108,7 +108,7 @@ object ExtraQueries10 {
        |         CAST(sum(CASE WHEN flip = 1 THEN 1 ELSE 0 END) AS BIGINT) AS pnb
        |  FROM (
        |    SELECT r.o_orderkey, r.cents, g.b,
-       |           CAST(concat('0x', substring(md5(concat(g.b, ':', r.o_orderkey)), 1, 8)) AS BIGINT) % 2 AS flip
+       |           ${md5PrefixSql("concat(g.b, ':', r.o_orderkey)", 8)} % 2 AS flip
        |    FROM rows_ r CROSS JOIN (SELECT unnest(range(1, ${PermB + 1})) AS b) g) t
        |  GROUP BY b),
        |exceed AS (
@@ -361,6 +361,11 @@ object ExtraQueries10 {
   val WmJitter = 64
   val WmDelayUs: Long = 30L * 60 * 1000000
 
+  /** The jittered arrival position of an event: its id plus a portable
+    * hash offset below [[WmJitter]] (st6, r115, u27). */
+  private[queries] val arrivalSeq: Column =
+    col("event_id") + md5Prefix(col("event_id").cast(StringType), 8) % WmJitter
+
   /** st6: watermark/late-data accounting — replay the event stream in a
     * simulated out-of-order arrival order (the fixture's event_id is
     * perfectly time-ordered, so arrival is jittered by a portable-hash
@@ -390,8 +395,7 @@ object ExtraQueries10 {
   private[graft] def wmArrivals(ev: DataFrame): DataFrame =
     ev.select(col("event_id"), col("event_type"), col("ts"),
         unix_micros(col("ts")).as("mts"))
-      .withColumn("arrival_seq", col("event_id") + expr(
-        s"CAST(conv(substring(md5(CAST(event_id AS STRING)), 1, 8), 16, 10) AS BIGINT) % $WmJitter"))
+      .withColumn("arrival_seq", arrivalSeq)
 
   /** Chunk width of the two-level prefix scan below. */
   val WmChunk = 4096L
@@ -462,7 +466,7 @@ object ExtraQueries10 {
   private val st6Sql =
     s"""WITH arr AS (
        |  SELECT event_id, event_type, ts, epoch_us(ts) AS mts,
-       |         event_id + CAST(concat('0x', substring(md5(CAST(event_id AS VARCHAR)), 1, 8)) AS BIGINT) % $WmJitter AS arrival_seq
+       |         event_id + ${md5PrefixSql("CAST(event_id AS VARCHAR)", 8)} % $WmJitter AS arrival_seq
        |  FROM events),
        |wm AS (
        |  SELECT event_type, ts, mts,

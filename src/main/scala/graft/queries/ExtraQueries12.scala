@@ -3,8 +3,9 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
+import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType, LongType}
 import graft.Tables
+import graft.functions.PortableHash.{md5Prefix, md5PrefixSql}
 import graft.queries.Relational.{Fn, Q, money}
 
 /** Round-7 batch 12: content-defined chunk dedup (the storage-dedup
@@ -50,8 +51,8 @@ object ExtraQueries12 {
     val toks = split(col("text"), " ")
     val tok = docs(s, d)
       .select(col("doc_id"), col("source"), posexplode(toks).as(Seq("pos", "token")))
-      .withColumn("is_break", expr(
-        s"CAST(CAST(conv(substring(md5(concat('cdc:', token)), 1, 8), 16, 10) AS BIGINT) % $CdcMod = 0 AS INT)"))
+      .withColumn("is_break",
+        (md5Prefix(concat(lit("cdc:"), col("token")), 8) % CdcMod === 0).cast(IntegerType))
     val w = Window.partitionBy("doc_id").orderBy("pos")
       .rowsBetween(Window.unboundedPreceding, -1)
     val chunks = tok
@@ -85,7 +86,7 @@ object ExtraQueries12 {
        |  FROM documents),
        |marked AS (
        |  SELECT doc_id, source, pos, token,
-       |         CASE WHEN CAST(concat('0x', substring(md5(concat('cdc:', token)), 1, 8)) AS BIGINT)
+       |         CASE WHEN ${md5PrefixSql("concat('cdc:', token)", 8)}
        |                   % $CdcMod = 0 THEN 1 ELSE 0 END AS is_break
        |  FROM tok),
        |cids AS (

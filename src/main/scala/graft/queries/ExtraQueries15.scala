@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 import graft.Tables
+import graft.functions.PortableHash.{md5Prefix, md5PrefixSql}
 import graft.queries.Relational.{Fn, Q, money}
 
 /** Round-7 batch 16: the Wilcoxon signed-rank test (completing the
@@ -243,8 +244,7 @@ object ExtraQueries15 {
     val assigned = events(s, d)
       .select(col("user_id"), col("event_type"))
       .distinct()
-      .withColumn("grp", expr(
-        "CAST(conv(substring(md5(concat('ab:', user_id)), 1, 8), 16, 10) AS BIGINT) % 2"))
+      .withColumn("grp", md5Prefix(concat(lit("ab:"), col("user_id")), 8) % 2)
     val bySeg = assigned.groupBy(col("event_type").as("segment"))
       .agg(sum(when(col("grp") === 0, 1L).otherwise(0L)).cast(LongType).as("na"),
         sum(when(col("grp") === 1, 1L).otherwise(0L)).cast(LongType).as("nb"))
@@ -262,9 +262,9 @@ object ExtraQueries15 {
   }
 
   private val r111Sql =
-    """WITH assigned AS (
+    s"""WITH assigned AS (
       |  SELECT DISTINCT user_id, event_type,
-      |         CAST(concat('0x', substring(md5(concat('ab:', user_id)), 1, 8)) AS BIGINT) % 2 AS grp
+      |         ${md5PrefixSql("concat('ab:', user_id)", 8)} % 2 AS grp
       |  FROM events),
       |byseg AS (
       |  SELECT event_type AS segment,

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 import graft.Tables
+import graft.functions.PortableHash.md5PrefixSql
 import graft.queries.Relational.{Fn, Q, money}
 
 /** Round-8 batch 19: survival analysis, bitemporal reads, long-form
@@ -154,13 +155,11 @@ object ExtraQueries17 {
     * sort; everything after is a bounded census aggregate. */
   private val r115: Fn = (s, d) => {
     import s.implicits._
-    // st6's jittered arrival sequence (same formula as wmArrivals,
-    // which projects user_id away — the tx axis must ride with it here)
+    // st6's jittered arrival sequence (wmArrivals projects user_id
+    // away — the tx axis must ride with it here)
     val arr = events(s, d)
       .select(col("event_id"), col("event_type"), col("ts"), col("user_id"))
-      .withColumn("arrival_seq", col("event_id") + expr(
-        s"CAST(conv(substring(md5(CAST(event_id AS STRING)), 1, 8), 16, 10) AS BIGINT)" +
-          s" % ${ExtraQueries10.WmJitter}"))
+      .withColumn("arrival_seq", ExtraQueries10.arrivalSeq)
     val bounds = arr.agg(max(to_date(col("ts"))).as("max_day"),
       max(col("arrival_seq")).as("max_seq"))
     val combos = BtValidDaysBack.flatMap { vb =>
@@ -186,7 +185,7 @@ object ExtraQueries17 {
     }.mkString(", ")
     s"""WITH arr AS (
        |  SELECT event_id, event_type, ts, user_id,
-       |         event_id + CAST(concat('0x', substring(md5(CAST(event_id AS VARCHAR)), 1, 8)) AS BIGINT)
+       |         event_id + ${md5PrefixSql("CAST(event_id AS VARCHAR)", 8)}
        |           % ${ExtraQueries10.WmJitter} AS arrival_seq
        |  FROM events),
        |bounds AS (

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 import graft.Tables
+import graft.functions.PortableHash.md5PrefixSql
 import graft.queries.Relational.{Fn, Q}
 
 /** Round-8 batch 23: robust trend estimation and the late-data impact
@@ -173,9 +174,7 @@ object ExtraQueries21 {
       .select(col("event_id"), col("event_type"), col("ts"),
         (col("value").cast(DecimalType(18, 2)) * 100).cast(LongType).as("cents"))
       .withColumn("mts", unix_micros(col("ts")))
-      .withColumn("arrival_seq", col("event_id") + expr(
-        s"CAST(conv(substring(md5(CAST(event_id AS STRING)), 1, 8), 16, 10) AS BIGINT)" +
-          s" % ${ExtraQueries10.WmJitter}"))
+      .withColumn("arrival_seq", ExtraQueries10.arrivalSeq)
     val cls = ExtraQueries10.wmClassify(arr, None)
     cls.groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("n_events"),
@@ -277,7 +276,7 @@ object ExtraQueries21 {
     s"""WITH arr AS (
        |  SELECT event_id, event_type, ts, epoch_us(ts) AS mts,
        |         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
-       |         event_id + CAST(concat('0x', substring(md5(CAST(event_id AS VARCHAR)), 1, 8)) AS BIGINT)
+       |         event_id + ${md5PrefixSql("CAST(event_id AS VARCHAR)", 8)}
        |           % ${ExtraQueries10.WmJitter} AS arrival_seq
        |  FROM events),
        |wm AS (

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, DoubleType, IntegerType, LongType}
 import graft.Tables
+import graft.functions.PortableHash.md5PrefixSql
 import graft.functions.{DetHash, VectorOps}
 import graft.queries.Relational.{Fn, Q}
 
@@ -108,7 +109,7 @@ object ExtraQueries23 {
        |       COALESCE(c.cluster, d.doc_id) AS cluster,
        |       COALESCE(f.n_docs, 1) AS n_docs,
        |       (d.doc_id = COALESCE(c.cluster, d.doc_id)
-       |        OR CAST(CAST(concat('0x', substring(md5(concat('soft:', CAST(d.doc_id AS VARCHAR))), 1, 6)) AS BIGINT)
+       |        OR CAST(${md5PrefixSql("concat('soft:', CAST(d.doc_id AS VARCHAR))", 6)}
        |           % COALESCE(f.n_docs, 1) AS BIGINT) = 0) AS kept
        |FROM documents d
        |LEFT JOIN comp c ON d.doc_id = c.id

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType, LongType, StringType}
 import graft.Tables
+import graft.functions.PortableHash.md5PrefixSql
 import graft.functions.{DetHash, VectorOps}
 import graft.queries.Relational.{Fn, Q}
 
@@ -411,7 +412,7 @@ object ExtraQueries26 {
        |              ELSE 'video/mp4' END AS mime,
        |         CAST(strlen(text) AS BIGINT) AS n_bytes,
        |         md5(text) AS payload_md5,
-       |         CAST(CAST(concat('0x', substring(md5(concat('tray:', CAST(doc_id AS VARCHAR))), 1, 6)) AS BIGINT) AS BIGINT) AS coin
+       |         CAST(${md5PrefixSql("concat('tray:', CAST(doc_id AS VARCHAR))", 6)} AS BIGINT) AS coin
        |  FROM documents)
        |SELECT mime, CAST(rk AS BIGINT) AS rk, doc_id, n_bytes, payload_md5
        |FROM (SELECT *, row_number() OVER (PARTITION BY mime ORDER BY coin, doc_id) AS rk

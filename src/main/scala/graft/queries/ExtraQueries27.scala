@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 import graft.Tables
+import graft.functions.PortableHash.md5PrefixSql
 import graft.functions.{DetHash, VectorOps}
 import graft.queries.Relational.{Fn, Q}
 
@@ -173,7 +174,7 @@ object ExtraQueries27 {
   }
   private val r124Sql = {
     def coin(salt: String) =
-      s"CAST(CAST(concat('0x', substring(md5(concat('$salt', CAST(doc_id AS VARCHAR))), 1, 6)) AS BIGINT) % 1000 < $CapRate AS INT)"
+      s"CAST(${md5PrefixSql(s"concat('$salt', CAST(doc_id AS VARCHAR))", 6)} % 1000 < $CapRate AS INT)"
     s"""WITH caps AS (
        |  SELECT lang, CAST(count(*) AS BIGINT) AS true_n,
        |         CAST(sum(${coin("cap1:")}) AS BIGINT) AS n1,
@@ -224,7 +225,7 @@ object ExtraQueries27 {
   }
   private val u30Sql = {
     def coin(salt: String) =
-      s"CAST(CAST(concat('0x', substring(md5(concat('$salt', CAST(doc_id AS VARCHAR))), 1, 6)) AS BIGINT) % 1000 < $CapRate AS BIGINT)"
+      s"CAST(${md5PrefixSql(s"concat('$salt', CAST(doc_id AS VARCHAR))", 6)} % 1000 < $CapRate AS BIGINT)"
     s"""WITH cells AS (
        |  SELECT lang,
        |         CAST(sum(${coin("cap1:")} * ${coin("cap2:")}) AS BIGINT) AS n11,
@@ -285,7 +286,7 @@ object ExtraQueries27 {
       .orderBy("source", "rk")
   }
   private val p35Sql = {
-    val coin = "CAST(CAST(concat('0x', substring(md5(concat('eval:', CAST(doc_id AS VARCHAR))), 1, 6)) AS BIGINT) AS BIGINT)"
+    val coin = s"CAST(${md5PrefixSql("concat('eval:', CAST(doc_id AS VARCHAR))", 6)} AS BIGINT)"
     s"""WITH per AS (SELECT source, CAST(count(*) AS BIGINT) AS cn FROM documents GROUP BY 1),
        |tot AS (SELECT CAST(sum(cn) AS BIGINT) AS nn FROM per),
        |q0 AS (

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType, LongType}
 import graft.Tables
+import graft.functions.PortableHash.md5PrefixSql
 import graft.queries.Relational.{Fn, Q}
 
 /** Round-9 batch 32: forecasting + capacity planning — exponential
@@ -301,8 +302,7 @@ object ExtraQueries30 {
     * left join against the full bucket domain, 1-row close. */
   private val u33: Fn = (s, d) => {
     val buckets = docs(s, d)
-      .select(conv(substring(graft.functions.DetHash.shuffleKey(col("doc_id")), 1, 2), 16, 10)
-        .cast(LongType).as("b"))
+      .select(graft.functions.DetHash.coin(col("doc_id"), "shuffle:", 2).as("b"))
       .groupBy("b").agg(count(lit(1)).as("o"))
     val dom = s.range(0, NBuckets.toLong).select(col("id").as("bucket"))
     val full = dom.join(buckets, col("bucket") === col("b"), "left")
@@ -325,7 +325,7 @@ object ExtraQueries30 {
   }
   private val u33Sql =
     s"""WITH k AS (
-       |  SELECT CAST(concat('0x', substring(md5(concat('shuffle:', CAST(doc_id AS VARCHAR))), 1, 2)) AS BIGINT) AS b
+       |  SELECT ${md5PrefixSql("concat('shuffle:', CAST(doc_id AS VARCHAR))", 2)} AS b
        |  FROM documents),
        |cnt AS (
        |  SELECT r.range AS bucket, CAST(count(k.b) AS BIGINT) AS o

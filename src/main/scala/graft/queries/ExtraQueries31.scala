@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType, LongType, StringType}
 import graft.Tables
+import graft.functions.PortableHash.{md5Prefix, md5PrefixSql}
 import graft.queries.Relational.{Fn, Q}
 
 /** Round-9 batch 33: agreement, privacy, and mixture closers — the
@@ -261,11 +262,11 @@ object ExtraQueries31 {
   // Kept per k: one fused (k, sk) exchange measured slower at sf0.1.
   private val d32: Fn = (s, d) => {
     val perK = ShingleKs.map { k =>
-      val sk = expr(
-        s"CASE WHEN size(sp) >= $k THEN " +
-          s"array_distinct(transform(sequence(1, size(sp) - $k + 1), " +
-          s"i -> cast(conv(substring(md5(concat_ws(' ', slice(sp, i, $k))), 1, 15), 16, 10) as bigint))) " +
-          "ELSE array() END")
+      val sp = col("sp")
+      val sk = when(size(sp) >= k,
+        array_distinct(transform(sequence(lit(1), size(sp) - k + 1),
+          i => md5Prefix(concat_ws(" ", slice(sp, i, lit(k))), 15))))
+        .otherwise(array())
       docs(s, d).select(split(col("text"), " ").as("sp"))
         .select(explode(sk).as("sk"))
         .groupBy("sk").agg(count(lit(1)).as("dn"))
@@ -287,7 +288,7 @@ object ExtraQueries31 {
          |  SELECT sk, count(*) AS dn FROM (
          |    SELECT doc_id, unnest(list_distinct(list_transform(
          |             range(1, len(sp) - $k + 2),
-         |             i -> CAST(concat('0x', substring(md5($parts), 1, 15)) AS BIGINT)))) AS sk
+         |             i -> ${md5PrefixSql(parts, 15)}))) AS sk
          |    FROM (SELECT doc_id, string_split(text, ' ') AS sp FROM documents) t0) t1
          |  GROUP BY 1) t2""".stripMargin
     }

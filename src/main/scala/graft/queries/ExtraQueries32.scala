@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType, LongType}
 import graft.Tables
+import graft.functions.PortableHash.md5PrefixSql
 import graft.functions.{DetHash, VectorOps}
 import graft.queries.Relational.{Fn, Q}
 
@@ -277,7 +278,7 @@ object ExtraQueries32 {
        |  FROM documents GROUP BY 1),
        |flagged AS (
        |  SELECT fam_size,
-       |         CAST(CAST(concat('0x', substring(md5(concat('fam:', h)), 1, 6)) AS BIGINT) % 1000 AS BIGINT)
+       |         CAST(${md5PrefixSql("concat('fam:', h)", 6)} % 1000 AS BIGINT)
        |           < $FamRate AS sampled
        |  FROM fams),
        |agg AS (

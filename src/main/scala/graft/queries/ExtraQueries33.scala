@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType, LongType, StringType}
 import graft.Tables
+import graft.functions.PortableHash.{md5Prefix, md5PrefixSql}
 import graft.queries.Relational.{Fn, Q}
 
 /** Round-9 batch 35: experimentation + integrity closers — CUPED
@@ -334,15 +335,14 @@ object ExtraQueries33 {
   private val u36: Fn = (s, d) =>
     docs(s, d)
       .select(col("source"),
-        conv(substring(md5(concat(col("doc_id").cast(StringType), lit(":"), col("text"))),
-          1, 15), 16, 10).cast(LongType).as("h"))
+        md5Prefix(concat(col("doc_id").cast(StringType), lit(":"), col("text")), 15).as("h"))
       .groupBy("source")
       .agg(count(lit(1)).cast(LongType).as("n_rows"),
         expr("bit_xor(h)").cast(LongType).as("xor_checksum"))
       .orderBy("source")
   private val u36Sql =
-    """SELECT source, CAST(count(*) AS BIGINT) AS n_rows,
-      |       CAST(bit_xor(CAST(concat('0x', substring(md5(concat(CAST(doc_id AS VARCHAR), ':', text)), 1, 15)) AS BIGINT)) AS BIGINT) AS xor_checksum
+    s"""SELECT source, CAST(count(*) AS BIGINT) AS n_rows,
+      |       CAST(bit_xor(${md5PrefixSql("concat(CAST(doc_id AS VARCHAR), ':', text)", 15)}) AS BIGINT) AS xor_checksum
       |FROM documents
       |GROUP BY source
       |ORDER BY source""".stripMargin

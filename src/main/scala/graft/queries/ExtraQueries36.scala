@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType, LongType}
 import graft.Tables
+import graft.functions.PortableHash.{md5Prefix, md5PrefixSql}
 import graft.queries.Relational.{Fn, Q}
 
 /** Round-11 batch 38: drift, packing economics, and two estimator
@@ -30,12 +31,11 @@ object ExtraQueries36 {
     * pin down the birthday-collision case the oracle already folds). */
   private def shingleHashes(s: SparkSession, d: String) =
     DedupQueries.shingledOf(Tables.documents(s, d))
-      .select(col("doc_id"), explode(expr(
-        "array_distinct(transform(shingles, sg -> CAST(conv(substring(md5(sg), 1, 15), 16, 10) AS BIGINT)))"))
-        .as("sk"))
+      .select(col("doc_id"),
+        explode(array_distinct(transform(col("shingles"), md5Prefix(_, 15)))).as("sk"))
 
   private val ShingleSqlHash =
-    "CAST(concat('0x', substring(md5(sp[i] || ' ' || sp[i+1] || ' ' || sp[i+2] || ' ' || sp[i+3] || ' ' || sp[i+4]), 1, 15)) AS BIGINT)"
+    md5PrefixSql("sp[i] || ' ' || sp[i+1] || ' ' || sp[i+2] || ' ' || sp[i+3] || ' ' || sp[i+4]", 15)
   private val ShingleSqlRel =
     s"""SELECT doc_id, source, unnest(list_distinct(list_transform(
        |         range(1, len(sp) - 5 + 2), i -> $ShingleSqlHash))) AS sk
@@ -339,9 +339,8 @@ object ExtraQueries36 {
     // a doc-keyed row_number window over the full shingle mass just to
     // select 8 rows per doc. Identical sketch: same keys, same order.
     val bk = DedupQueries.shingledOf(Tables.documents(s, d))
-      .select(col("doc_id"), explode(expr(
-        "slice(array_sort(array_distinct(transform(shingles, " +
-          "sg -> CAST(conv(substring(md5(sg), 1, 15), 16, 10) AS BIGINT)))), 1, 8)"))
+      .select(col("doc_id"), explode(
+        slice(array_sort(array_distinct(transform(col("shingles"), md5Prefix(_, 15)))), 1, 8))
         .as("sk"))
     val cand = bk.select(col("doc_id").as("da"), col("sk"))
       .join(bk.select(col("doc_id").as("db"), col("sk")), Seq("sk"))

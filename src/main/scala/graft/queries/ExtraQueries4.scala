@@ -3,8 +3,9 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType, LongType}
 import graft.Tables
+import graft.functions.PortableHash.md5PrefixSql
 import graft.functions.DetHash
 import graft.queries.Relational.{Fn, Q}
 
@@ -782,8 +783,7 @@ object ExtraQueries4 {
     * integer difference, cast to double once. */
   private val p20: Fn = (s, d) => {
     def key(e: Int) =
-      conv(substring(md5(concat(lit(s"epoch$e:"), col("doc_id").cast(StringType))), 1, 12), 16, 10)
-        .cast(LongType).cast(DecimalType(38, 0))
+      DetHash.coin(col("doc_id"), s"epoch$e:", 12).cast(DecimalType(38, 0))
     val keys = Tables.documents(s, d).select(
       key(1).as("k1"), key(2).as("k2"), key(3).as("k3"))
     val pairs = Seq((1, 2), (1, 3), (2, 3))
@@ -808,7 +808,7 @@ object ExtraQueries4 {
   }
   private val p20Sql = {
     def key(e: Int) =
-      s"CAST(CAST(concat('0x', substring(md5(concat('epoch$e:', CAST(doc_id AS VARCHAR))), 1, 12)) AS BIGINT) AS HUGEINT)"
+      s"CAST(${md5PrefixSql(s"concat('epoch$e:', CAST(doc_id AS VARCHAR))", 12)} AS HUGEINT)"
     val sel = (1 to 3).map(e => s"${key(e)} AS k$e").mkString(", ")
     val pairs = Seq((1, 2), (1, 3), (2, 3)).map { case (a, b) =>
       s"""SELECT 'epoch$a~epoch$b' AS pair, CAST(n AS BIGINT) AS n,

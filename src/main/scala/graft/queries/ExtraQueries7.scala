@@ -3,8 +3,9 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
+import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, StringType}
 import graft.Tables
+import graft.functions.PortableHash.{md5Prefix, md5PrefixSql}
 import graft.queries.Relational.{Fn, Q}
 
 /** Round-7 batch 7: time-series diagnostics, text readability, and a
@@ -471,8 +472,8 @@ object ExtraQueries7 {
     def assign(nShards: Int, out: String): DataFrame = {
       val hw = documents(s, d).select(col("doc_id"))
         .withColumn("shard", explode(array((0 until nShards).map(lit): _*)))
-        .withColumn("h", expr(
-          "CAST(conv(substring(md5(concat(CAST(doc_id AS STRING), ':', CAST(shard AS STRING))), 1, 15), 16, 10) AS BIGINT)"))
+        .withColumn("h", md5Prefix(
+          concat(col("doc_id").cast(StringType), lit(":"), col("shard").cast(StringType)), 15))
       val w = Window.partitionBy("doc_id").orderBy(desc("h"), col("shard"))
       hw.withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
         .select(col("doc_id"), col("shard").as(out))
@@ -488,7 +489,7 @@ object ExtraQueries7 {
       s"""SELECT doc_id, shard AS $out FROM (
          |  SELECT d.doc_id, s.shard,
          |         row_number() OVER (PARTITION BY d.doc_id ORDER BY
-         |           CAST(concat('0x', substring(md5(concat(CAST(d.doc_id AS VARCHAR), ':', CAST(s.shard AS VARCHAR))), 1, 15)) AS BIGINT) DESC,
+         |           ${md5PrefixSql("concat(CAST(d.doc_id AS VARCHAR), ':', CAST(s.shard AS VARCHAR))", 15)} DESC,
          |           s.shard) AS rk
          |  FROM documents d CROSS JOIN (SELECT unnest(range(0, $n)) AS shard) s) t
          |WHERE rk = 1""".stripMargin

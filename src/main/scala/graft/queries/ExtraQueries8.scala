@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 import graft.Tables
+import graft.functions.PortableHash.{md5Prefix, md5PrefixSql}
 import graft.queries.Relational.{Fn, Q}
 
 /** Round-7 batch 8: sequence-pattern analytics and a graded counting
@@ -146,8 +147,8 @@ object ExtraQueries8 {
       .groupBy("token").agg(count(lit(1)).cast(LongType).as("exact_cnt"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     def cells(df: DataFrame): DataFrame = (1 to CmDepth).map(r =>
-      df.withColumn("r", lit(r)).withColumn("c", expr(
-        s"CAST(conv(substring(md5(concat('$r:', token)), 1, 8), 16, 10) AS BIGINT) % $CmWidth")))
+      df.withColumn("r", lit(r))
+        .withColumn("c", md5Prefix(concat(lit(s"$r:"), col("token")), 8) % CmWidth))
       .reduce(_ unionByName _)
     val sketch = cells(exact)
       .groupBy("r", "c").agg(sum(col("exact_cnt")).as("counter"))
@@ -166,7 +167,7 @@ object ExtraQueries8 {
     def cellsSql(src: String, cols: String) =
       (1 to CmDepth).map(r =>
         s"""SELECT $cols, $r AS r,
-           |  CAST(concat('0x', substring(md5(concat('$r:', token)), 1, 8)) AS BIGINT) % $CmWidth AS c
+           |  ${md5PrefixSql(s"concat('$r:', token)", 8)} % $CmWidth AS c
            |FROM $src""".stripMargin).mkString("\nUNION ALL\n")
     s"""WITH toks AS (SELECT unnest(string_split(text, ' ')) AS token FROM documents),
        |exact AS (SELECT token, CAST(count(*) AS BIGINT) AS exact_cnt FROM toks GROUP BY 1),

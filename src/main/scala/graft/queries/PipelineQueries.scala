@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables
+import graft.functions.PortableHash.md5PrefixSql
 import graft.queries.Relational.{Fn, Q}
 
 /** Training-data pipeline operators beyond cleaning/dedup: quality
@@ -307,10 +308,10 @@ object PipelineQueries {
       .orderBy("shard", "pos")
   }
   private val p05Sql =
-    """WITH k AS (
+    s"""WITH k AS (
       |  SELECT doc_id,
       |         md5(concat('shuffle:', CAST(doc_id AS VARCHAR))) AS skey,
-      |         CAST(CAST(concat('0x', substring(md5(concat('shuffle:', CAST(doc_id AS VARCHAR))), 1, 6)) AS BIGINT) % 8 AS INTEGER) AS shard
+      |         ${mdBucketSql("doc_id", "shuffle:", 8)} AS shard
       |  FROM documents)
       |SELECT shard, CAST(row_number() OVER (PARTITION BY shard ORDER BY skey) AS BIGINT) AS pos,
       |       skey, doc_id
@@ -376,7 +377,7 @@ object PipelineQueries {
   private val p06Sql = {
     val split = mdBucketSql("doc_id", "split:", 100)
     val mix = mdBucketSql("doc_id", "mix:", 10000)
-    val shard = "CAST(CAST(concat('0x', substring(md5(concat('shuffle:', CAST(doc_id AS VARCHAR))), 1, 6)) AS BIGINT) % 8 AS INTEGER)"
+    val shard = mdBucketSql("doc_id", "shuffle:", 8)
     s"""WITH deduped AS (
        |  SELECT doc_id, source,
        |         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
@@ -680,7 +681,7 @@ object PipelineQueries {
     val shard = mdBucketSql("doc_id", "shuffle:", 8)
     s"""SELECT shard, count(*) AS n_rows, bit_xor(fp) AS fp FROM (
        |  SELECT $shard AS shard,
-       |         CAST(concat('0x', substring(md5(concat('manifest:', CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) AS fp
+       |         ${md5PrefixSql("concat_ws('|', 'manifest:', CAST(doc_id AS VARCHAR), text, lang, source, CAST(n_chars AS VARCHAR))", 15)} AS fp
        |  FROM documents) t
        |GROUP BY shard ORDER BY shard""".stripMargin
   }

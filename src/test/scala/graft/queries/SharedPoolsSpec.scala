@@ -79,6 +79,48 @@ class SharedPoolsSpec extends AnyFunSuite {
     }
   }
 
+  test("two threads racing a cold build of one key commit one entry and agree") {
+    withDurableFixtures("spec_race") { case Seq(dir) =>
+      import java.util.concurrent.{Callable, CountDownLatch, CyclicBarrier, Executors, TimeUnit}
+      val before = SharedPools.buildsRun.get()
+      val start = new CountDownLatch(1)
+      // each build waits for the other, so both have found no entry on
+      // disk before either commits: one rename wins, the other loses
+      val bothBuilding = new CyclicBarrier(2)
+      val threads = Executors.newFixedThreadPool(2)
+      val rows = try {
+        val runs = Seq(spark, spark.newSession()).map { s =>
+          threads.submit(new Callable[List[List[Any]]] {
+            def call(): List[List[Any]] = {
+              start.await()
+              SharedPools.materialized(s, dir, "spec_race") {
+                bothBuilding.await(60, TimeUnit.SECONDS)
+                s.range(300).selectExpr("id", "id % 7 AS m")
+              }.orderBy("id").collect().map(_.toSeq.toList).toList
+            }
+          })
+        }
+        start.countDown()
+        runs.map(_.get(120, TimeUnit.SECONDS))
+      } finally threads.shutdownNow()
+      assert(rows.distinct.size == 1 && rows.head.size == 300, "both threads read the same rows")
+      assert(SharedPools.buildsRun.get() == before + 2, "both threads must have built")
+
+      val entry = SharedPools.durablePath(dir, "spec_race")
+      val names = {
+        val ls = Files.list(entry.getParent)
+        try ls.map(_.getFileName.toString).toArray(n => new Array[String](n)).toSeq
+        finally ls.close()
+      }
+      assert(names.filter(_.startsWith("spec_race_")) == Seq(entry.getFileName.toString),
+        s"exactly one committed entry: $names")
+      assert(!names.exists(_.startsWith("_tmp_spec_race_")), s"the loser's tmp dir is gone: $names")
+      val fixtureFp = entry.getFileName.toString.stripPrefix("spec_race_")
+      assert(Files.readString(entry.resolve("_pool_format")).trim ==
+        s"pool/spec_race:$fixtureFp:${entry.getParent.getFileName}")
+    }
+  }
+
   test("-Dgraft.pool.rebuild=1 opts out of durable reuse (Verify/Bench semantics)") {
     SparkTestSession.withTempDir("pool_fx_spec_rb") { fx =>
       val dir = fx.toString
